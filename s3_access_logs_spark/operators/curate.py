@@ -85,108 +85,6 @@ def _assert_owns_partition(spark, store: str, batch_id: int) -> None:
         )
 
 
-class _DeferredReport:
-    """Handle returned by ``curate_corpus(..., _observe_report=True)``:
-    the waterfall is collected as CollectMetrics (``DataFrame.observe``)
-    riding the CALLER'S first action over the survivors frame, instead
-    of an eager report pass of its own — the batch export paths
-    (``export_training_set`` / ``write_token_store``) execute the gate
-    stack exactly once this way (guide §2.4: remove whole passes; the
-    r13 flags-cache handoff attempt bought the same single execution by
-    persisting corpus text + flags and lost 4-25 s to memory pressure —
-    an observation ships twelve counters instead). ``resolve()`` blocks
-    until that first action has run, then builds the exact report frame
-    the eager path builds (stages with >= 1 drop, same schema).
-
-    One measured corner: when the caller persists a result that comes
-    out EMPTY (zero survivors), AQE's empty-relation propagation can
-    eliminate the CollectMetrics node from the outer cached-read query,
-    which then completes the observation with a schemaless empty row —
-    ``Observation.get`` raises (KeyError on the stage names) instead of
-    returning counts. A non-empty trunk cannot hit this (the node sits
-    on the main lineage, so empty propagation implies zero output
-    rows). ``resolve`` falls back to the eager aggregate over the
-    retained flags lineage in exactly that corner — one extra gate pass
-    on the rare all-dropped export, zero cost everywhere else.
-
-    ORDERING (ADVICE r13): the observation only completes when the
-    caller's first action over the survivors frame runs. ``resolve``
-    therefore waits a BOUNDED 2 s for the metrics row instead of
-    blocking forever — a caller that resolves before acting (nothing in
-    this repo does, but ``export.resolve_report`` is public) gets a
-    RuntimeWarning and the eager recompute, never a deadlock. Any
-    failure mode other than the two known ones (empty-cache corner,
-    no-action-yet) also warns before recomputing, so unexpected
-    observation breakage is visible instead of a quiet 2x-cost pass."""
-
-    def __init__(self, observation, spark, flags: DataFrame) -> None:
-        self._obs = observation
-        self._spark = spark
-        self._flags = flags  # lineage handle only (never persisted here)
-
-    def _eager_rows(self):
-        return (
-            self._flags.groupBy(F.col("_verdict").alias("stage"))
-            .agg(F.count("*").alias("dropped"))
-            .filter(F.col("stage") != "kept")
-            .collect()
-        )
-
-    def resolve(self) -> DataFrame:
-        import threading
-        import warnings
-
-        # bounded wait in a daemon thread (no JVM-private API): in the
-        # contract flow the caller's action already ran, so .get returns
-        # in milliseconds; a mis-ordered caller hits the timeout instead
-        # of deadlocking (the thread completes harmlessly later, or dies
-        # with the process)
-        box: dict = {}
-
-        def _fetch() -> None:
-            try:
-                box["got"] = self._obs.get
-            except Exception as e:  # noqa: BLE001 — classified below
-                box["err"] = e
-
-        t = threading.Thread(
-            target=_fetch, daemon=True, name="curate-report-observation"
-        )
-        t.start()
-        t.join(2.0)
-        if t.is_alive():
-            warnings.warn(
-                "curate report observation not completed after 2 s — "
-                "resolve_report was called before the caller's first "
-                "action over the survivors frame; recomputing the "
-                "report eagerly (one extra gate pass). Run the export/"
-                "store action first to avoid the recompute.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            rows = self._eager_rows()
-        else:
-            try:
-                if "err" in box:
-                    raise box["err"]
-                got = box["got"]
-                rows = [(s, int(got[s])) for s in STAGES if got[s]]
-            except KeyError:  # the empty-cached-result corner (see above)
-                rows = self._eager_rows()
-            except Exception as e:  # noqa: BLE001 — unexpected: warn loud
-                warnings.warn(
-                    f"curate report observation failed unexpectedly "
-                    f"({type(e).__name__}: {e}); recomputing the report "
-                    "eagerly — investigate, this costs a full gate pass",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                rows = self._eager_rows()
-        return self._spark.createDataFrame(
-            rows or [], "stage string, dropped bigint"
-        )
-
-
 def _claimed_append(df, batch_id: int, store: str) -> None:
     """Claim-first store append: stamp the root ownership marker, then
     write. The marker survives the partition overwrite and any crash,
@@ -282,12 +180,13 @@ def curate_corpus(
     dedup always runs — a curation pass that can emit byte-duplicates
     is not curation.
 
-    ``_observe_report`` (INTERNAL — the batch export paths): return a
-    ``_DeferredReport`` handle in place of the report frame, its counts
-    collected as CollectMetrics during the caller's first action over
-    the survivors, so the gate stack executes once per export. Ignored
-    (eager path) when ``dst``/``store_batch_id`` is set — those already
-    materialize survivors under the scoped cache.
+    ``_observe_report`` (INTERNAL — the batch export paths): return, in
+    place of the report frame, the getter of a
+    :func:`operators.observed.observe` observation — a dict of per-stage
+    drop counts (every stage, zeros included) collected during the
+    caller's first action over the survivors, so the gate stack executes
+    once per export. Ignored (eager path) when ``dst``/``store_batch_id``
+    is set — those already materialize survivors under the scoped cache.
 
     ``verify_unique_ids`` (default True) enforces the ``id_col``
     uniqueness contract at entry with one column-pruned aggregation —
@@ -343,14 +242,13 @@ def curate_corpus(
     no session-lifetime cache leak; consuming ``survivors`` afterwards
     re-derives the cheap column flags while the expensive sub-results
     (connected components) are lineage-truncated internally."""
-    # ``_observe_report`` (internal, the batch export paths): collect
-    # the waterfall via CollectMetrics on the survivors lineage and
-    # return a ``_DeferredReport`` instead of an eager report frame —
-    # the caller's own first action over the survivors both computes
-    # its artifact AND yields the counts, so the gate stack (quality/
-    # lang regexes + the exact-dup digest window shuffle) executes ONCE
-    # per export instead of once for the report and again for the
-    # write. Falls back to the eager path when this call itself
+    # ``_observe_report`` (internal, the batch export paths): observe
+    # the waterfall on the survivors lineage instead of building an
+    # eager report frame — the caller's own first action over the
+    # survivors both computes its artifact AND yields the counts, so
+    # the gate stack (quality/lang regexes + the exact-dup digest window
+    # shuffle) executes ONCE per export instead of once for the report
+    # and again for the write. Falls back to the eager path when this call itself
     # materializes survivors (``dst``/``store_batch_id``): those paths
     # already reuse the scoped flags cache, and deferring would ADD an
     # execution rather than remove one.
@@ -820,24 +718,18 @@ def curate_corpus(
                 verdict
             )
         flags = flags.withColumn("_verdict", verdict)
-        _obs = None
+        stage_counts = None
         if _observe_report:
-            # per-stage counts as CollectMetrics below the survivor
-            # filter: the node sees every row (kept + dropped) during
-            # the CALLER'S first action, and the survivor filter needs
-            # the same flag columns anyway — zero extra passes, zero
-            # extra state (see _DeferredReport)
-            from pyspark.sql import Observation
+            # per-stage counts observed below the survivor filter: the
+            # node sees every row (kept + dropped) during the CALLER'S
+            # first action, and the survivor filter needs the same flag
+            # columns anyway — zero extra passes, zero extra state
+            from s3_access_logs_spark.operators.observed import observe
 
-            _obs = Observation()
-            flags = flags.observe(
-                _obs,
+            flags, stage_counts = observe(
+                flags,
                 *[
-                    F.sum(
-                        F.when(
-                            F.col("_verdict") == s, F.lit(1)
-                        ).otherwise(F.lit(0))
-                    ).cast("long").alias(s)
+                    F.count(F.when(F.col("_verdict") == s, 1)).alias(s)
                     for s in STAGES
                 ],
             )
@@ -905,8 +797,8 @@ def curate_corpus(
         flags.unpersist()  # no-op in the _observe_report path
         for df_ in _scoped:
             df_.unpersist()
-    if _obs is not None:
-        return survivors, _DeferredReport(_obs, docs.sparkSession, flags)
+    if stage_counts is not None:
+        return survivors, stage_counts
     report = docs.sparkSession.createDataFrame(
         rows or [], "stage string, dropped bigint"
     )

@@ -962,20 +962,16 @@ def connected_components(
         )
 
     def ckpt_counted(df: DataFrame) -> tuple[DataFrame, int]:
-        """Eager checkpoint + changed-count in ONE job (optimization
-        r13): the checkpoint's materialization action completes a
-        CollectMetrics observation (verified for localCheckpoint AND
-        reliable checkpoint, including runtime- and statically-empty
-        frames, where the metric is NULL exactly like the old collect),
-        so per-round convergence detection no longer schedules a job of
-        its own — one job per round instead of two, at any scale."""
-        from pyspark.sql import Observation
+        """Eager checkpoint + changed-count in ONE job: the
+        checkpoint's materialization action completes the observation,
+        so per-round convergence detection schedules no job of its own
+        — one job per round instead of two, at any scale."""
+        from s3_access_logs_spark.operators.observed import observe
 
-        obs = Observation()
-        out = ckpt(
-            df.observe(obs, F.sum("chg").cast("long").alias("changed"))
+        observed, changed = observe(
+            df, F.count(F.when(F.col("chg") == 1, 1)).alias("changed")
         )
-        return out, (obs.get["changed"] or 0)
+        return ckpt(observed), changed()["changed"]
 
     if algorithm not in ("min_label", "star"):
         raise ValueError("algorithm must be 'min_label' or 'star'")

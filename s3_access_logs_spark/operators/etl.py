@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_access_logs_spark.operators.observed import observe
 from s3_access_logs_spark.operators.parse import parse_logs
 from s3_access_logs_spark.schema import PARTITION_COLS, ROW_GROUP_COLS
 from s3_access_logs_spark.sources.logs import read_logs
@@ -35,8 +36,6 @@ def write_logs(
     df: DataFrame,
     dst: str,
     mode: str = "overwrite",
-    compression: str = "snappy",
-    repartition: bool = True,
     files_per_partition: int = 1,
     max_records_per_file: int = 5_000_000,
     reference_filenames: bool = False,
@@ -74,7 +73,7 @@ def write_logs(
     ]
     sort_cols = [c for c in ROW_GROUP_COLS if c in df.columns]
     out = df
-    if repartition and part_cols:
+    if part_cols:
         keys = [F.col(c) for c in part_cols]
         if files_per_partition > 1:
             salt_src = sort_cols if sort_cols else df.columns[:1]
@@ -89,7 +88,7 @@ def write_logs(
         out = out.sortWithinPartitions(*sort_cols)
     writer = (
         out.write.mode(mode)
-        .option("compression", compression)
+        .option("compression", "snappy")
         .option("maxRecordsPerFile", max_records_per_file)
     )
     if part_cols:
@@ -241,21 +240,19 @@ def export_hour(
     src: str,
     dst: str,
     hour: str | None = None,
-    compat_is_user: bool = True,
     reference_filenames: bool = False,
 ) -> int:
     """The reference's whole job (cmd/export.py main, :204-397) as one
-    Spark plan: scan -> parse -> partitioned write. Returns rows written."""
-    raw = read_logs(spark, src, hour=hour)
-    parsed = parse_logs(raw, compat_is_user=compat_is_user)
-    parsed.persist()
-    try:
-        n = parsed.count()
-        if n:
-            write_logs(parsed, dst, reference_filenames=reference_filenames)
-    finally:
-        parsed.unpersist()
-    return n
+    Spark plan: scan -> parse -> partitioned write. Returns rows written,
+    counted by the write itself. An hour with no input writes no
+    partition directory (dynamic overwrite replaces only partitions that
+    receive rows)."""
+    parsed, written = observe(
+        parse_logs(read_logs(spark, src, hour=hour)),
+        F.count(F.lit(1)).alias("n"),
+    )
+    write_logs(parsed, dst, reference_filenames=reference_filenames)
+    return written()["n"]
 
 
 # ---------------------------------------------------------------------------

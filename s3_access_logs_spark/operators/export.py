@@ -34,8 +34,12 @@ data; the report rows are the only driver-side values.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from s3_access_logs_spark.operators.observed import observe
 
 
 def _write_windows(windows: DataFrame, dst: str, n_shards: int) -> None:
@@ -153,27 +157,26 @@ def _curated_id_streams(
     source_col: str,
     pretokenizer: str = "default",
     keep_source: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, Callable[[], dict], DataFrame | None]:
     """The shared front half of the batch export paths: curate ``docs``,
     optionally re-balance sources, and encode survivors to
     ``(id, ids)`` EOS-terminated token-id streams. Returns
-    ``(streams, curate_report, pre_mix_handle)`` — the caller MUST
+    ``(streams, curate_counts, pre_mix_handle)`` — the caller MUST
     unpersist ``pre_mix_handle`` (when not None) after its first action
-    over ``streams`` materializes downstream state (the scoped-persist
-    rule: temperature_mixture's count collect plus the caller's own
-    scan would otherwise execute the gate stack twice).
+    over ``streams`` (temperature_mixture's count collect plus the
+    caller's own scan would otherwise execute the gate stack twice).
     ``keep_source`` additionally carries ``source_col`` through (as
     ``source``) when the input has it — the token store persists it so
     mixture can be applied per EPOCH at repack time (round 12).
 
-    ``curate_report`` comes back as a ``curate._DeferredReport``
-    (optimization r13): the waterfall rides the caller's first action
-    as CollectMetrics instead of costing its own gate-stack pass —
-    call ``resolve_report`` on it AFTER that action."""
+    ``curate_counts`` is the getter of the waterfall observation
+    (:func:`operators.observed.observe`): the per-stage counts ride the
+    caller's first action over ``streams``, so the gate stack executes
+    once per export — call it after that action."""
     from s3_access_logs_spark.functions import bpe as B
     from s3_access_logs_spark.operators.curate import curate_corpus
 
-    survivors, report = curate_corpus(
+    survivors, curate_counts = curate_corpus(
         docs, id_col=id_col, text_col=text_col, **(curate or {}),
         _observe_report=True,
     )
@@ -202,18 +205,34 @@ def _curated_id_streams(
     ]
     if keep_source and source_col in survivors.columns:
         cols.append(F.col(source_col).alias("source"))
-    return survivors.select(*cols), report, pre_mix
+    return survivors.select(*cols), curate_counts, pre_mix
 
 
-def resolve_report(report) -> DataFrame:
-    """Materialize a ``_curated_id_streams`` report: a deferred
-    (CollectMetrics) handle resolves against the action that already
-    ran; an eager frame passes through — callers stay agnostic."""
-    from s3_access_logs_spark.operators.curate import _DeferredReport
+def _report(
+    docs: DataFrame,
+    curate_counts: Callable[[], dict],
+    mixture: dict | None,
+    n_kept: int,
+    metric_rows: list[tuple[str, int]],
+) -> DataFrame:
+    """The export report: curate's waterfall (stages with >= 1 drop, in
+    stage order), a ``mixture`` row when re-balancing was requested, then
+    the caller's metric rows, in one ``(stage, dropped)`` frame.
 
-    if isinstance(report, _DeferredReport):
-        return report.resolve()
-    return report
+    Mixture drops come by arithmetic, not an extra corpus action: input
+    (parquet metadata-count cheap) minus the curate drops minus the
+    ``n_kept`` documents that reached the artifact — exact because every
+    document that survives curation+mixture contributes exactly one EOS."""
+    from s3_access_logs_spark.operators.curate import STAGES
+
+    counts = curate_counts()
+    rows = [(s, int(counts[s])) for s in STAGES if counts[s]]
+    if mixture is not None:
+        drops = sum(n for _, n in rows)
+        rows.append(("mixture", int(docs.count() - drops - n_kept)))
+    return docs.sparkSession.createDataFrame(
+        rows + metric_rows, "stage string, dropped bigint"
+    )
 
 
 def export_training_set(
@@ -286,7 +305,7 @@ def export_training_set(
     ``shard`` AND NULL ``shard_order``, so such survivors land in the
     hive ``__HIVE_DEFAULT_PARTITION__`` leaf, read back with
     ``shard IS NULL``, are EXCLUDED from ``shards_written``'s
-    count_distinct, and order among themselves by the ids-array
+    distinct count, and order among themselves by the ids-array
     tie-break alone. Consistent across reruns, the oracle replica and
     ``repack_epoch`` — but a trainer enumerating ``shard=<n>`` dirs
     will not see them; filter NULL ids upstream if that matters."""
@@ -298,7 +317,7 @@ def export_training_set(
     ms, _vs, eos, pad = _resolve_special_ids(
         merges, vocab, unk_id, eos_id, pad_id
     )
-    t, report, _pre_mix = _curated_id_streams(
+    t, curate_counts, _pre_mix = _curated_id_streams(
         docs, ms, vocab, unk_id, eos,
         id_col, text_col, curate, mixture, source_col,
         pretokenizer=pretokenizer,
@@ -317,67 +336,37 @@ def export_training_set(
         emit_spans=emit_spans,
         pad_id=pad,
     )
-    # metrics are aggregated over the windows FRAME under one scoped
-    # persist (write + three aggregates in a single pass over the
-    # cached artifact), not re-derived from the written files — and
-    # the tokenize/pack lineage executes once
-    windows = windows.persist()
-    try:
-        _write_windows(windows, dst, n_shards)
-        if _pre_mix is not None:
-            # the windows cache is materialized by the write above, so
-            # the pre-mixture survivors frame has served both its
-            # consumers (the mixture count collect + the tokenize scan)
-            _pre_mix.unpersist()
-            _pre_mix = None
-        aggs = [
-            F.count(F.lit(1)).alias("nw"),
-            F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
-            F.coalesce(
-                F.sum(F.size(F.filter("ids", lambda x: x == eos))),
-                F.lit(0),
-            ).alias("neos"),
-            F.count_distinct("shard").alias("ns"),
-        ]
-        if pad is not None:
-            # pads are layout, not content: subtracted from tokens_kept
-            # below (pad != eos is guaranteed, so the counts are
-            # disjoint)
-            aggs.append(
-                F.coalesce(
-                    F.sum(F.size(F.filter("ids", lambda x: x == pad))),
-                    F.lit(0),
-                ).alias("npad")
-            )
-        m = windows.agg(*aggs).first()
-    finally:
-        windows.unpersist()
-        if _pre_mix is not None:  # failure path: release the cache
-            _pre_mix.unpersist()
-    # the write above was the observed action — the deferred waterfall
-    # is ready without a pass of its own
-    report = resolve_report(report)
-    npad = int(m["npad"]) if pad is not None else 0
-    sess = docs.sparkSession
-    rows = [
-        ("tokens_kept", int(m["total"] - m["neos"]) - npad),
-        ("windows_emitted", int(m["nw"])),
-        ("shards_written", int(m["ns"])),
+    aggs = [
+        F.count(F.lit(1)).alias("nw"),
+        F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
+        F.coalesce(
+            F.sum(F.size(F.filter("ids", lambda x: x == eos))), F.lit(0)
+        ).alias("neos"),
+        F.size(F.collect_set("shard")).alias("ns"),
     ]
-    if mixture is not None:
-        # mixture drops by arithmetic, not an extra corpus action:
-        # input (parquet metadata-count cheap) minus the curate drops
-        # (already local) minus the docs that reached windows (the EOS
-        # count, already aggregated) — exact because every document
-        # that survives curation+mixture contributes exactly one EOS
-        n_input = docs.count()
-        curate_drops = sum(r["dropped"] for r in report.collect())
-        rows.insert(
-            0, ("mixture", int(n_input - curate_drops - m["neos"]))
+    if pad is not None:
+        # pads are layout, not content: subtracted from tokens_kept
+        # below (pad != eos is guaranteed, so the counts are disjoint)
+        aggs.append(
+            F.coalesce(
+                F.sum(F.size(F.filter("ids", lambda x: x == pad))), F.lit(0)
+            ).alias("npad")
         )
-    extra = sess.createDataFrame(rows, "stage string, dropped bigint")
-    out_report = report.unionByName(extra)
-    return _read_windows_or_empty(sess, dst, windows), out_report
+    observed, written = observe(windows, *aggs)
+    try:
+        _write_windows(observed, dst, n_shards)
+    finally:
+        if _pre_mix is not None:
+            _pre_mix.unpersist()
+    m = written()
+    npad = int(m["npad"]) if pad is not None else 0
+    return _read_windows_or_empty(docs.sparkSession, dst, windows), _report(
+        docs, curate_counts, mixture, m["neos"], [
+            ("tokens_kept", int(m["total"] - m["neos"]) - npad),
+            ("windows_emitted", int(m["nw"])),
+            ("shards_written", int(m["ns"])),
+        ],
+    )
 
 
 def _empty_windows(spark, emit_spans: bool) -> DataFrame:
@@ -610,7 +599,7 @@ def write_token_store(
     ms, vs, eos, _pad = _resolve_special_ids(
         merges, vocab, unk_id, eos_id, None, caller="write_token_store"
     )
-    t, report, pre_mix = _curated_id_streams(
+    t, curate_counts, pre_mix = _curated_id_streams(
         docs, ms, vocab, unk_id, eos,
         id_col, text_col, curate, mixture, source_col,
         pretokenizer=pretokenizer, keep_source=True,
@@ -619,7 +608,12 @@ def write_token_store(
     rows = training_shards(
         t, n_shards, id_col="id", salt=salt
     ).select(F.col("id").alias("doc_id"), *keep)
-    rows = rows.persist()
+    rows, written = observe(
+        rows,
+        F.count(F.lit(1)).alias("nd"),
+        F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
+        F.size(F.collect_set("shard")).alias("ns"),
+    )
     try:
         (
             rows.repartition(max(int(n_shards), 1), "shard")
@@ -643,34 +637,17 @@ def write_token_store(
              "pretokenizer": pretokenizer,
              "merges_md5": merges_fingerprint(ms)},
         )
+    finally:
         if pre_mix is not None:
             pre_mix.unpersist()
-            pre_mix = None
-        m = rows.agg(
-            F.count(F.lit(1)).alias("nd"),
-            F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
-            F.count_distinct("shard").alias("ns"),
-        ).first()
-    finally:
-        rows.unpersist()
-        if pre_mix is not None:  # failure path: release the cache
-            pre_mix.unpersist()
-    # the store write was the observed action — see resolve_report
-    report = resolve_report(report)
-    sess = docs.sparkSession
-    out = [
+    m = written()
+    return _report(docs, curate_counts, mixture, m["nd"], [
+        ("docs_stored", int(m["nd"])),
         # every stored stream ends in exactly one EOS, so the token
         # count is total minus the row count — no second aggregate
-        ("docs_stored", int(m["nd"])),
         ("tokens_stored", int(m["total"] - m["nd"])),
         ("shards_written", int(m["ns"])),
-    ]
-    if mixture is not None:
-        n_input = docs.count()
-        curate_drops = sum(r["dropped"] for r in report.collect())
-        out.insert(0, ("mixture", int(n_input - curate_drops - m["nd"])))
-    extra = sess.createDataFrame(out, "stage string, dropped bigint")
-    return report.unionByName(extra)
+    ])
 
 
 def repack_epoch(

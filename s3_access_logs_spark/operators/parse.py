@@ -67,7 +67,7 @@ def project_fields(df: DataFrame, fields_col: str = "fields") -> DataFrame:
     return df.select(*cols)
 
 
-def with_derived_columns(df: DataFrame, compat_is_user: bool = True) -> DataFrame:
+def with_derived_columns(df: DataFrame) -> DataFrame:
     """Add the 11 derived columns (reference: s3access/normalize.py:50-79).
 
     Parity note: the reference derives year..second and the ISO string from
@@ -78,9 +78,10 @@ def with_derived_columns(df: DataFrame, compat_is_user: bool = True) -> DataFram
     reformatted '+0000' -> '+00:00' for isoformat parity, and only the
     epoch uses the zoned parse.
 
-    ``compat_is_user=True`` preserves the reference quirk that ``is_user``
-    is a plain substring match (an assumed-role ARN containing 'user' sets
-    both flags, s3access/normalize.py:76-77).
+    ``is_user`` keeps the reference quirk of a plain substring match: an
+    assumed-role ARN containing 'user' sets both flags
+    (s3access/normalize.py:76-77), and the exported table must agree with
+    the reference's row for row.
     """
     ts_ts = F.try_to_timestamp(
         "requestdatetime", F.lit(REQUEST_DATETIME_FORMAT)
@@ -92,11 +93,6 @@ def with_derived_columns(df: DataFrame, compat_is_user: bool = True) -> DataFram
         F.substring("requestdatetime", 22, 3),
         F.lit(":"),
         F.substring("requestdatetime", 25, 2),
-    )
-    user_pred = (
-        F.col("requester").contains("user")
-        if compat_is_user
-        else F.col("requester").contains(":user/")
     )
     return (
         df.withColumn("ts_ts", ts_ts)
@@ -117,7 +113,9 @@ def with_derived_columns(df: DataFrame, compat_is_user: bool = True) -> DataFram
                 "is_assumed_role": F.coalesce(
                     F.col("requester").contains("assumed-role"), F.lit(False)
                 ),
-                "is_user": F.coalesce(user_pred, F.lit(False)),
+                "is_user": F.coalesce(
+                    F.col("requester").contains("user"), F.lit(False)
+                ),
             }
         )
         .drop("wall_ts")
@@ -127,7 +125,6 @@ def with_derived_columns(df: DataFrame, compat_is_user: bool = True) -> DataFram
 def parse_logs(
     df: DataFrame,
     line_col: str = "value",
-    compat_is_user: bool = True,
     keep_native_ts: bool = False,
 ) -> DataFrame:
     """Full parse pipeline: raw-line DataFrame -> 35-column parsed table.
@@ -136,7 +133,6 @@ def parse_logs(
     (engine extension — enables watermarks and native time predicates).
     """
     out = with_derived_columns(
-        project_fields(df.select(tokenize(line_col).alias("fields"))),
-        compat_is_user=compat_is_user,
+        project_fields(df.select(tokenize(line_col).alias("fields")))
     )
     return out if keep_native_ts else out.drop("ts_ts")

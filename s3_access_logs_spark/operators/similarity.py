@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from s3_access_logs_spark.operators.observed import observe
+
 from s3_access_logs_spark.functions.vectors import (
     cosine_from_norms,
     cosine_similarity,
@@ -1038,93 +1040,51 @@ def append_to_ivf_index(
         F.col(vec_col).alias("c_vec"),
         l2_norm(vec_col).alias("c_norm"),
     )
-    assigned = _assign_clusters(c, centroids, "c_vec", 1)
-    # The returned stats RIDE the append write as CollectMetrics
-    # (optimization r14, guide §1.2 — the curate observe-report shape):
-    # previously a separate groupBy collect materialized a persist and
-    # the write re-read the cache — two jobs, two passes (one full, one
-    # cached) per append. Now ONE write job pays the assignment+join
-    # lineage once, no persist pressure, and the two counts cross the
-    # boundary as longs. The write runs unconditionally: a zero-fresh
-    # append commits no files (same on-disk no-op as the old skipped
-    # write) but still completes the observation. Fallback below: any
-    # observation failure recomputes the counts eagerly (one extra
-    # pass — the old cost), warning loudly, never losing the contract.
-    from pyspark.sql import Observation
+    return _append_posting_lists(
+        spark,
+        _assign_clusters(c, centroids, "c_vec", 1),
+        index_path,
+        skip_existing,
+    )
 
-    obs = Observation()
+
+def _append_posting_lists(
+    spark, rows: DataFrame, index_path: str, skip_existing: bool
+) -> dict[str, int]:
+    """The shared append sink of :func:`append_to_ivf_index` and
+    :func:`append_to_ivfpq_index`: append ``rows`` (keyed by
+    ``neighbor_id`` and ``cluster``) into their ``cluster=<label>``
+    partitions in ONE write job whose observation returns the stats.
+    ``skip_existing`` anti-joins against the ids already present in the
+    touched partitions only (partition-pruned read). The write runs even
+    when nothing is fresh: it then commits no files, the same on-disk
+    no-op a skipped write would be."""
     if skip_existing:
         touched = sorted(
-            r["cluster"]
-            for r in assigned.select("cluster").distinct().collect()
+            r["cluster"] for r in rows.select("cluster").distinct().collect()
         )
         existing = (
             spark.read.parquet(index_path)
             .filter(F.col("cluster").isin(touched))
             .select("neighbor_id", F.lit(True).alias("_seen"))
         )
-        marked = assigned.join(existing, "neighbor_id", "left").observe(
-            obs,
-            F.sum(
-                F.when(F.col("_seen").isNull(), 1).otherwise(0)
-            ).alias("appended"),
-            F.sum(
-                F.when(F.col("_seen"), 1).otherwise(0)
-            ).alias("skipped"),
-        )
-        fresh = marked.filter(F.col("_seen").isNull()).drop("_seen")
+        marked = rows.join(existing, "neighbor_id", "left")
     else:
-        # observed expressions must be aggregates; skipped is identically
-        # zero on this path and set directly below
-        fresh = assigned.observe(
-            obs,
-            F.count(F.lit(1)).alias("appended"),
-            F.sum(F.lit(0)).cast("bigint").alias("skipped"),
-        )
+        marked = rows.withColumn("_seen", F.lit(None).cast("boolean"))
+    marked, stats = observe(
+        marked,
+        F.count(F.when(F.col("_seen").isNull(), 1)).alias("appended"),
+        F.count(F.when(F.col("_seen"), 1)).alias("skipped_existing"),
+    )
     (
-        fresh.repartition("cluster")
+        marked.filter(F.col("_seen").isNull())
+        .drop("_seen")
+        .repartition("cluster")
         .write.mode("append")
         .partitionBy("cluster")
         .parquet(index_path)
     )
-    def _eager_counts() -> tuple[int, int]:
-        if not skip_existing:
-            return assigned.count(), 0
-        stats = {
-            r["_seen"]: r["n"]
-            for r in marked.groupBy("_seen").agg(
-                F.count("*").alias("n")
-            ).collect()
-        }
-        return stats.get(None, 0), stats.get(True, 0)
-
-    try:
-        got = obs.get  # completed by the write above — returns instantly
-        appended = int(got["appended"] or 0)
-        skipped = int(got["skipped"] or 0)
-    except Exception as e:  # noqa: BLE001 — classified below
-        # KNOWN corner (measured, Spark 4.1 + AQE): when the append's
-        # final frame is runtime-EMPTY — i.e. a fully-replayed slice,
-        # every id already present — AQE's empty-relation propagation
-        # drops the CollectMetrics node and the observation completes
-        # with a schemaless row; Observation.get surfaces it as a py4j
-        # AssertionError from PythonSQLUtils.toPyRow. Recompute the
-        # counts eagerly and silently there (replays are the crash-
-        # recovery path — correct beats chatty); warn loudly on any
-        # OTHER failure so real observation breakage stays visible.
-        if not ("AssertionError" in str(e) or "toPyRow" in str(e)):
-            import warnings
-
-            warnings.warn(
-                f"append_to_ivf_index: stats observation failed "
-                f"unexpectedly ({type(e).__name__}: {e}); recomputing "
-                "counts eagerly — one extra pass over the append "
-                "lineage",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        appended, skipped = _eager_counts()
-    return {"appended": appended, "skipped_existing": skipped}
+    return stats()
 
 
 def random_projection(
@@ -2454,51 +2414,7 @@ def append_to_ivfpq_index(
         m=m,
         impl=_bulk_encode_impl(new_vectors),
     ).select("neighbor_id", "pq_codes", "cluster")
-    if not skip_existing:
-        # two consumers (count + write) -> persist, else assign+encode
-        # executes twice per append
-        encoded = encoded.persist()
-        try:
-            appended = encoded.count()
-            (
-                encoded.repartition("cluster")
-                .write.mode("append")
-                .partitionBy("cluster")
-                .parquet(index_path)
-            )
-        finally:
-            encoded.unpersist()
-        return {"appended": appended, "skipped_existing": 0}
-    touched = sorted(
-        r["cluster"]
-        for r in encoded.select("cluster").distinct().collect()
-    )
-    existing = (
-        spark.read.parquet(index_path)
-        .filter(F.col("cluster").isin(touched))
-        .select("neighbor_id", F.lit(True).alias("_seen"))
-    )
-    marked = encoded.join(existing, "neighbor_id", "left").persist()
-    try:
-        fresh = marked.filter(F.col("_seen").isNull()).drop("_seen")
-        stats = {
-            r["_seen"]: r["n"]
-            for r in marked.groupBy("_seen").agg(
-                F.count("*").alias("n")
-            ).collect()
-        }
-        appended = stats.get(None, 0)
-        skipped = stats.get(True, 0)
-        if appended:
-            (
-                fresh.repartition("cluster")
-                .write.mode("append")
-                .partitionBy("cluster")
-                .parquet(index_path)
-            )
-    finally:
-        marked.unpersist()
-    return {"appended": appended, "skipped_existing": skipped}
+    return _append_posting_lists(spark, encoded, index_path, skip_existing)
 
 
 def probe_ivfpq_index(

@@ -46,10 +46,10 @@ def read_log_stream(
     )
 
 
-def parse_log_stream(lines: DataFrame, compat_is_user: bool = True) -> DataFrame:
+def parse_log_stream(lines: DataFrame) -> DataFrame:
     """The batch parser applied to a stream — same Column plan, plus the
     native TimestampType column ``ts_ts`` required for watermarking."""
-    return parse_logs(lines, compat_is_user=compat_is_user, keep_native_ts=True)
+    return parse_logs(lines, keep_native_ts=True)
 
 
 def hourly_rollup(
@@ -176,14 +176,13 @@ def run_export_stream(
     dst: str,
     checkpoint: str,
     available_now: bool = True,
-    compat_is_user: bool = True,
 ) -> StreamingQuery:
     """The reference's whole cron job as one streaming pipeline:
     scan -> parse -> partitioned write, exactly-once per input file.
     ``available_now=True`` drains everything currently in ``src`` and stops
     (a "catch-up batch" — the cron-parity mode); ``False`` runs forever."""
     lines = read_log_stream(spark, src)
-    parsed = parse_log_stream(lines, compat_is_user=compat_is_user)
+    parsed = parse_log_stream(lines)
     return write_partitioned_stream(
         parsed, dst, checkpoint, available_now=available_now
     )

@@ -90,6 +90,11 @@ class TestWriteLogs:
         assert n1 == n2 == 3
         assert read_parsed(spark, dst).count() == 3  # no dup rows
 
+    def test_hour_without_files_writes_nothing(self, spark, log_dir, tmp_path):
+        dst = tmp_path / "out"
+        assert export_hour(spark, log_dir, str(dst), hour="2019-02-06-05") == 0
+        assert not dst.exists() or not [p for p in dst.iterdir() if p.is_dir()]
+
     def test_hot_partition_salting_spreads_files(self, spark, tmp_path):
         # files_per_partition > 1: one hot bucket x op x hour partition is
         # split across multiple writer tasks/files (straggler mitigation);
