@@ -462,13 +462,13 @@ def curate_corpus(
         # WHOLE batch group (keeper included — history holds the keeper).
         # Replay safety mirrors the streaming read: the current batch's
         # own partition is excluded so a rerun never self-collides.
-        from s3_access_logs_spark.sources.fsutil import has_data_files
-        from s3_access_logs_spark.streaming.pipeline import (
-            check_no_fold_residue,
+        from s3_access_logs_spark.sources.fsutil import (
+            check_no_swap_residue,
+            has_data_files,
         )
 
         sess = docs.sparkSession
-        check_no_fold_residue(sess, digest_store)
+        check_no_swap_residue(sess, digest_store)
         if has_data_files(sess, digest_store):
             hist = sess.read.parquet(digest_store)
             if store_batch_id is not None:
@@ -544,13 +544,13 @@ def curate_corpus(
             from s3_access_logs_spark.operators.dedup import (
                 near_dup_incremental,
             )
-            from s3_access_logs_spark.sources.fsutil import has_data_files
-            from s3_access_logs_spark.streaming.pipeline import (
-                check_no_fold_residue,
+            from s3_access_logs_spark.sources.fsutil import (
+                check_no_swap_residue,
+                has_data_files,
             )
 
             sess = docs.sparkSession
-            check_no_fold_residue(sess, band_store)
+            check_no_swap_residue(sess, band_store)
             if has_data_files(sess, band_store):
                 hist_bands = sess.read.parquet(band_store)
                 if store_batch_id is not None:

@@ -153,35 +153,28 @@ def apply_reference_filenames(spark: SparkSession, root: str) -> int:
     """
     from urllib.parse import unquote
 
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
+    from s3_access_logs_spark.sources.fsutil import (
+        NULL_PART,
+        hadoop_fs,
+        iter_data_files,
+    )
 
-    _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
     fs, jpath = hadoop_fs(spark, root)
     if not fs.exists(jpath):
         return 0
-    root_uri = fs.makeQualified(jpath).toString().rstrip("/")
     Path = spark._jvm.org.apache.hadoop.fs.Path
 
     per_dir: dict[str, list] = {}
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        p = it.next().getPath()
-        if p.getName().startswith(("_", ".")):
-            continue
-        parent = p.getParent().toString()
-        rel = parent[len(root_uri):].strip("/")
-        if not rel or any(
-            seg.startswith(("_", ".")) or "=" not in seg
-            for seg in rel.split("/")
-        ):
-            continue  # root-level files / staging dirs / non-hive layout
-        per_dir.setdefault(rel, []).append(p)
+    for rel, st in iter_data_files(fs, jpath):
+        if not rel or any("=" not in seg for seg in rel.split("/")):
+            continue  # root-level files / non-hive layout
+        per_dir.setdefault(rel, []).append(st.getPath())
 
     renamed = 0
     for rel, files in sorted(per_dir.items()):
         values = [
             raw
-            if raw == _NULL_PART
+            if raw == NULL_PART
             else unquote(raw).replace("/", "%2F").replace(":", "%3A")
             for raw in (seg.split("=", 1)[1] for seg in rel.split("/"))
         ]
@@ -266,85 +259,32 @@ def export_hour(
 # Iceberg/Delta territory), so compaction must STAGE new files and swap
 # them in: Spark refuses to overwrite a path it is reading
 # ("Cannot overwrite a path that is also being read from"), and even if it
-# did not, a mid-job failure would destroy data. The swap is per-file
-# delete+rename from the driver — metadata-only on HDFS/local; on object
-# stores rename is a copy, which is the same cost every
-# compactor (including Iceberg's rewrite action) pays to move bytes.
+# did not, a mid-job failure would destroy data. The swap renames leaf
+# dirs from the driver (sources.fsutil.swap_leaves) — metadata-only on
+# HDFS/local; on object stores rename is a copy, which is the same cost
+# every compactor (including Iceberg's rewrite action) pays to move bytes.
 # ---------------------------------------------------------------------------
 
 
 def partition_file_stats(spark: SparkSession, root: str) -> list[dict]:
     """Inventory the leaf partition directories of a hive-layout table via
     the Hadoop FileSystem API (works on file://, hdfs:// and s3a:// alike):
-    one dict per leaf dir with its data-file count and total bytes."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
+    one dict per leaf dir with its data-file count and total bytes.
+    Hidden dirs are skipped as Hive readers skip them — this is also what
+    keeps a maintenance op's staging/trash out of the victim set."""
+    from s3_access_logs_spark.sources.fsutil import hadoop_fs, iter_data_files
 
     fs, jpath = hadoop_fs(spark, root)
     if not fs.exists(jpath):
         return []
-    root_uri = fs.makeQualified(jpath).toString().rstrip("/")
     per_dir: dict[str, dict] = {}
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        name = p.getName()
-        if name.startswith(("_", ".")):  # markers, checkpoints, staging
-            continue
-        parent = p.getParent().toString()
-        rel = parent[len(root_uri):].strip("/")
-        # Hive readers ignore underscore/dot-prefixed directories; so does
-        # the inventory — this is also what keeps `_compact_staging` and a
-        # crashed run's `_compact_trash` out of the victim set.
-        if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
-            continue
+    for rel, st in iter_data_files(fs, jpath):
         d = per_dir.setdefault(
             rel, {"partition": rel, "n_files": 0, "bytes": 0}
         )
         d["n_files"] += 1
         d["bytes"] += st.getLen()
     return sorted(per_dir.values(), key=lambda d: d["partition"])
-
-
-def _recover_trash(spark: SparkSession, root: str) -> None:
-    """Complete a crashed swap before doing anything else. A run that died
-    between moving a partition aside and installing its replacement left
-    that partition's ONLY copy under ``_compact_trash``; restore it (the
-    live dir is absent in exactly that crash window). A trash entry whose
-    live dir exists was superseded by a completed install and is safe to
-    drop. Without this pass, a rerun's end-of-run trash cleanup would
-    destroy the sole surviving copy."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
-
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    fs, _ = hadoop_fs(spark, root)
-    trash = HPath(f"{root.rstrip('/')}/_compact_trash")
-    if not fs.exists(trash):
-        return
-    trash_uri = fs.makeQualified(trash).toString().rstrip("/")
-    # leaf dirs inside the trash = partition dirs moved aside
-    stack, leaves = [trash], []
-    while stack:
-        d = stack.pop()
-        kids = [s for s in fs.listStatus(d) if s.isDirectory()]
-        if kids:
-            stack.extend(s.getPath() for s in kids)
-        elif d.toString() != trash_uri:
-            leaves.append(d)
-    for d in leaves:
-        rel = fs.makeQualified(d).toString()[len(trash_uri):].strip("/")
-        live = HPath(f"{root.rstrip('/')}/{rel}")
-        if not fs.exists(live):
-            fs.mkdirs(live.getParent())
-            # This rename is the partition's ONLY copy coming back; a
-            # silent failure followed by the trash delete below would be
-            # permanent loss, so a failure here must abort the run.
-            if not fs.rename(d, live):
-                raise IOError(
-                    f"compaction recovery: cannot restore {d} to {live}; "
-                    "trash left in place for manual recovery"
-                )
-    fs.delete(trash, True)
 
 
 def compact_partitions(
@@ -362,17 +302,24 @@ def compact_partitions(
     victim is read, shuffled once on (partition cols, salt) so that every
     output file is produced by exactly one task, and staged under
     ``<root>/_compact_staging``. Untouched partitions are never read,
-    never rewritten. The driver then swaps data files per victim dir.
-    Idempotent: a rerun finds every partition already at its target count
-    and selects nothing; a crash before the swap leaves only an inert
-    staging dir (ignored by ``partition_file_stats``, invisible to readers
-    as a ``_``-prefixed path).
+    never rewritten. The victims are then swapped in by the stage-and-swap
+    protocol of ``sources.fsutil`` (move aside, ``_moved_ok`` commit
+    marker, install), and every run first converges a crashed swap of any
+    maintenance op on the table (``recover_swaps``). Idempotent: a rerun
+    finds every partition already at its target count and selects nothing.
 
     Returns the victim inventory (partition, n_files, bytes,
     target_files); with ``dry_run`` it only returns the plan."""
     import math
 
-    _recover_trash(spark, root)
+    from s3_access_logs_spark.sources.fsutil import (
+        COMPACT_DIRS,
+        NULL_PART,
+        recover_swaps,
+        swap_leaves,
+    )
+
+    recover_swaps(spark, root)
     stats = partition_file_stats(spark, root)
     victims = []
     for d in stats:
@@ -401,11 +348,10 @@ def compact_partitions(
     # identically, so the staged dirs' names match the victims' names.
     from urllib.parse import unquote
 
-    _NULL_PART = "__HIVE_DEFAULT_PARTITION__"
     stats_rows = []
     for v in victims:
         vals = tuple(
-            None if raw == _NULL_PART else unquote(raw)
+            None if raw == NULL_PART else unquote(raw)
             for raw in (
                 seg.split("=", 1)[1] for seg in v["partition"].split("/")
             )
@@ -464,7 +410,6 @@ def compact_partitions(
         .withColumn("_salt", salt)
         .drop(*[f"_pv_{c}" for c in part_cols], "_target_files")
     )
-    staging = f"{root.rstrip('/')}/_compact_staging"
     out = salted.repartition(
         *[F.col(c) for c in part_cols], F.col("_salt")
     ).drop("_salt")
@@ -475,31 +420,7 @@ def compact_partitions(
         out.write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
         .partitionBy(*part_cols)
-        .parquet(staging)
+        .parquet(f"{root.rstrip('/')}/{COMPACT_DIRS[0]}")
     )
-
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
-
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    fs, _ = hadoop_fs(spark, root)
-    # Swap order matters for crash safety: the old dir is renamed to a
-    # trash path FIRST, then the staged dir takes its place — a crash in
-    # the window leaves the partition momentarily absent (and fully
-    # recoverable from `_compact_trash`), never destroyed. The reverse
-    # order (delete old files, then move staged in) loses the partition if
-    # the process dies between the two steps.
-    trash = f"{root.rstrip('/')}/_compact_trash"
-    for v in victims:
-        old_dir = HPath(f"{root.rstrip('/')}/{v['partition']}")
-        new_dir = HPath(f"{staging}/{v['partition']}")
-        trash_dir = HPath(f"{trash}/{v['partition']}")
-        fs.mkdirs(trash_dir.getParent())
-        fs.delete(trash_dir, True)  # stale trash from a crashed run
-        if not fs.rename(old_dir, trash_dir):
-            raise IOError(f"compaction swap: cannot move {old_dir} aside")
-        if not fs.rename(new_dir, old_dir):
-            fs.rename(trash_dir, old_dir)  # roll back, partition restored
-            raise IOError(f"compaction swap: cannot install {new_dir}")
-    fs.delete(HPath(trash), True)
-    fs.delete(HPath(staging), True)
+    swap_leaves(spark, root, [v["partition"] for v in victims], COMPACT_DIRS)
     return victims

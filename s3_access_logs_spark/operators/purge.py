@@ -15,16 +15,13 @@ a rewrite is a one-time cost bounded by the AFFECTED leaves only (the
 id set names its leaves via a column-pruned scan; untouched leaves are
 never read, never rewritten — the ``compact_partitions`` victim rule).
 
-Crash posture: per store, the affected leaves are staged
-(``_purge_staging``), moved aside (``_purge_trash``), committed with a
-``_moved_ok`` marker, installed, then trash+staging dropped — the
-``compact_ingest_store`` fold protocol with by-basename merges, so a
-crash at any point rolls back (before the marker) or forward (after
-it) on the NEXT PURGE call over the same store, on object stores too.
-Each maintenance op heals its own staging dirs only (purge →
-``_purge_*``, the fold ops → ``_fold_*``); they share the stores'
-one-maintenance-writer-at-a-time contract, so run a crashed op's
-successor before a different op touches the store. Root sidecars
+Crash posture: per store, the affected leaves are staged under
+``_purge_staging`` and swapped in by the stage-and-swap protocol of
+``sources.fsutil`` (``swap_leaves``: move aside, ``_moved_ok`` commit
+marker, install). Every purge first runs that module's
+``recover_swaps``, which converges a crashed swap of ANY maintenance op
+(purge, the folds, compaction) on the store, and every store reader's
+``check_no_swap_residue`` refuses to read past one. Root sidecars
 (``_token_store_meta.json``, ``_ivfpq_meta.json``) live outside the
 leaf dirs and are never touched.
 
@@ -48,16 +45,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from s3_access_logs_spark.sources.fsutil import (  # noqa: F401 (re-export)
+    MOVED_OK as _MOVED_OK,
+    NULL_PART as _NULL_PART,
+    PURGE_DIRS,
+    hadoop_fs,
+    has_data_files,
+    recover_swaps,
+    swap_leaves,
+)
+
 #: Driver-side bound on the purge id set (the ``temperature_mixture``
 #: max_sources pattern): takedown / decontamination sets are
 #: bounded-by-nature; a caller passing a huge frame would silently OOM
 #: the driver, so the guard fails loud instead.
 MAX_PURGE_IDS = 1_000_000
 
-_MOVED_OK = "_moved_ok"
-_STAGING = "_purge_staging"
-_TRASH = "_purge_trash"
-_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+_STAGING, _TRASH = PURGE_DIRS
 
 #: Spark dtypes the bigint purge-id frame compares against LOSSLESSLY.
 #: Anything else (string above all) would semi-join through an implicit
@@ -107,87 +111,6 @@ def _ids_frame(spark: SparkSession, ids) -> DataFrame:
     )
 
 
-def _merge_dir(fs, HPath, src_dir, dst_dir) -> None:
-    # the streaming fold's recovery primitive — shared, not re-derived
-    from s3_access_logs_spark.streaming.pipeline import (
-        _merge_dir as _m,
-    )
-
-    _m(fs, HPath, src_dir, dst_dir)
-
-
-def _hive_leaves(fs, root_path):
-    """Yield the relative-path LEAF hive dirs under ``root_path`` at
-    whatever depth the tree has: descend while a dir has hive
-    (``col=value`` / null-partition) children, yield when it has none —
-    depth-agnostic, so recovery never needs to know (or guess) a
-    crashed tree's layout (review r12: a fixed depth inferred from the
-    live store misclassified a store whose data sat entirely in
-    staging/trash)."""
-    if not fs.exists(root_path):
-        return
-    frontier = [("", root_path)]
-    while frontier:
-        rel, p = frontier.pop()
-        kids = [
-            st
-            for st in fs.listStatus(p)
-            if st.isDirectory()
-            and (
-                "=" in st.getPath().getName()
-                or st.getPath().getName() == _NULL_PART
-            )
-        ]
-        if not kids and rel:
-            yield rel, p
-            continue
-        for st in kids:
-            name = st.getPath().getName()
-            frontier.append(
-                (f"{rel}/{name}" if rel else name, st.getPath())
-            )
-
-
-def _recover_swap(
-    spark: SparkSession,
-    store: str,
-    staging_name: str = _STAGING,
-    trash_name: str = _TRASH,
-) -> None:
-    """Roll a crashed stage-and-swap back (no marker: restore trash) or
-    forward (marker: install staged leaves, drop the superseded trash
-    copies). Generic over leaf depth (``_hive_leaves``) and over the
-    staging/trash names, so the purge ops AND the token-store fold
-    share ONE copy of the protocol (review r12)."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
-
-    fs, _ = hadoop_fs(spark, store)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    root = store.rstrip("/")
-    staging = HPath(f"{root}/{staging_name}")
-    trash = HPath(f"{root}/{trash_name}")
-
-    def _merge_tree(src) -> None:
-        for rel, p in _hive_leaves(fs, src):
-            parent = rel.rsplit("/", 1)[0] if "/" in rel else ""
-            if parent:
-                fs.mkdirs(HPath(f"{root}/{parent}"))
-            _merge_dir(fs, HPath, p, HPath(f"{root}/{rel}"))
-
-    if not fs.exists(staging):
-        if fs.exists(trash):
-            _merge_tree(trash)
-            fs.delete(trash, True)
-        return
-    if fs.exists(HPath(f"{staging}/{_MOVED_OK}")):
-        _merge_tree(staging)  # forward: finish the install
-        fs.delete(trash, True)
-    else:
-        _merge_tree(trash)  # back: the install never began
-        fs.delete(trash, True)
-    fs.delete(staging, True)
-
-
 def _validate_store(
     spark: SparkSession,
     kind: str,
@@ -207,10 +130,8 @@ def _validate_store(
     store's layout detection does). Returns the validated frame for
     reuse (``None`` for an empty store), so the rewrite pass reads no
     second footer (review r13)."""
-    from s3_access_logs_spark.sources.fsutil import has_data_files
-
     if recover:
-        _recover_swap(spark, store)
+        recover_swaps(spark, store)
     if not has_data_files(spark, store):
         return None
     df = spark.read.parquet(store)
@@ -248,8 +169,6 @@ def _purge_one(
     before any rewrite and passes the validated frame back in via
     ``df``, so no second footer read happens here; review r13 removed
     the duplicate pass)."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs, has_data_files
-
     if df is None:
         if not has_data_files(spark, store):
             return {"leaves_rewritten": 0, "rows_purged": 0}
@@ -285,40 +204,22 @@ def _purge_one(
         affected[row_id_col] == ids["_purge_id"],
         "left_anti",
     )
-    staging, trash = f"{root}/{_STAGING}", f"{root}/{_TRASH}"
     (
         kept.repartition(len(rels), *part_cols)
         .sortWithinPartitions(*part_cols, *sort_tail)
         .write.mode("overwrite")
         .option("compression", "snappy")
         .partitionBy(*part_cols)
-        .parquet(staging)
+        .parquet(f"{root}/{_STAGING}")
     )
-    # 3. move the old leaves aside, commit, install, clean up
-    fs, _ = hadoop_fs(spark, store)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    for rel in rels:
-        parent_rel = rel.rsplit("/", 1)[0] if "/" in rel else ""
-        fs.mkdirs(
-            HPath(f"{trash}/{parent_rel}" if parent_rel else trash)
-        )
-        dst = HPath(f"{trash}/{rel}")
-        fs.delete(dst, True)
-        if not fs.rename(HPath(f"{root}/{rel}"), dst):
-            raise IOError(f"purge: cannot move {root}/{rel} aside")
-    fs.create(HPath(f"{staging}/{_MOVED_OK}"), True).close()
-    n_after = 0
-    for rel, p in _hive_leaves(fs, HPath(staging)):
-        parent_rel = rel.rsplit("/", 1)[0] if "/" in rel else ""
-        if parent_rel:
-            fs.mkdirs(HPath(f"{root}/{parent_rel}"))
-        if not fs.rename(p, HPath(f"{root}/{rel}")):
-            raise IOError(f"purge: cannot install {rel}")
-    fs.delete(HPath(trash), True)
-    fs.delete(HPath(staging), True)
+    # 3. swap them in
+    swap_leaves(spark, store, rels, PURGE_DIRS)
     # count AFTER the swap (reading the live store) so the reported
     # delta reflects what is actually on disk
+    fs, _ = hadoop_fs(spark, store)
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
     remaining = [rel for rel in rels if fs.exists(HPath(f"{root}/{rel}"))]
+    n_after = 0
     if remaining:
         n_after = (
             spark.read.option("basePath", store)
@@ -368,7 +269,7 @@ def purge_documents(
             _token_store_leaves,
         )
 
-        _recover_swap(spark, token_store)
+        recover_swaps(spark, token_store)
         # ALL shard dirs, via the fold's own listing helper (review
         # r12, second pass: inspecting only the first dir misreads a
         # store whose first shard was fully purged — an empty shard

@@ -175,10 +175,30 @@ def read_json_sidecar(
         ) from e
 
 
+def iter_data_files(fs, jpath):
+    """Yield ``(rel_dir, FileStatus)`` for every COMMITTED data file under
+    ``jpath`` (recursively), ``rel_dir`` being its directory relative to
+    ``jpath``. Underscore/dot-prefixed names — _SUCCESS, _temporary,
+    .spark-staging, a maintenance op's staging/trash — are skipped, and
+    so is everything below such a dir. Only segments BELOW ``jpath``
+    are judged: a store whose own path sits under a hidden ancestor
+    (``.cache/``, ``_runs/``) is still read like any other."""
+    root_uri = fs.makeQualified(jpath).toString().rstrip("/")
+    it = fs.listFiles(jpath, True)
+    while it.hasNext():
+        st = it.next()
+        p = st.getPath()
+        if p.getName().startswith(("_", ".")):
+            continue
+        rel = p.getParent().toString()[len(root_uri):].strip("/")
+        if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
+            continue
+        yield rel, st
+
+
 def has_data_files(spark: SparkSession, path_str: str) -> bool:
     """True iff the directory holds at least one COMMITTED data file
-    (recursively; underscore/dot-prefixed names — _SUCCESS, _temporary,
-    .spark-staging — don't count).
+    (:func:`iter_data_files`).
 
     The distinction matters for store-probing: a dir can EXIST while
     holding no data (an empty first write leaves only _SUCCESS; a crashed
@@ -188,16 +208,167 @@ def has_data_files(spark: SparkSession, path_str: str) -> bool:
     fs, jpath = hadoop_fs(spark, path_str)
     if not fs.exists(jpath):
         return False
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        p = it.next().getPath()
-        if p.getName().startswith(("_", ".")):
+    return next(iter_data_files(fs, jpath), None) is not None
+
+
+# ---------------------------------------------------------------------------
+# Stage-and-swap: the ONE crash-safe protocol for rewriting committed leaf
+# partitions in place (small-file compaction, the ingest/token-store folds,
+# purge). The op writes its new leaves under ``<root>/<staging>``, then
+# :func:`swap_leaves` moves the old leaves aside to ``<root>/<trash>``,
+# stamps ``<staging>/_moved_ok`` — the commit point — installs every staged
+# leaf and drops trash + staging. :func:`recover_swaps` heals a crash at any
+# point: with the marker it rolls FORWARD (finish the install; trash holds
+# superseded copies), without it it rolls BACK (restore trash; the install
+# never began). The marker, not directory existence, decides, because on
+# object stores (s3a) a directory rename is per-object copy+delete and a
+# crash mid-move leaves a leaf split across two dirs; every move is a
+# by-basename merge (:func:`_merge_dir`), so split leaves reassemble to
+# exactly one copy of every file and a re-crashed recovery converges.
+# Each op keeps its own (staging, trash) names so residue says which op
+# crashed; recovery and the reader guard cover all of them, so any
+# maintenance op heals any other op's crash.
+# ---------------------------------------------------------------------------
+
+FOLD_DIRS = ("_fold_staging", "_fold_trash")
+PURGE_DIRS = ("_purge_staging", "_purge_trash")
+COMPACT_DIRS = ("_compact_staging", "_compact_trash")
+_SWAP_DIRS = {
+    "fold": FOLD_DIRS, "purge": PURGE_DIRS, "compaction": COMPACT_DIRS,
+}
+MOVED_OK = "_moved_ok"
+NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _hive_leaves(fs, root_path):
+    """Yield ``(rel, Path)`` for the LEAF hive dirs under ``root_path``
+    at whatever depth the tree has: descend while a dir has hive
+    (``col=value`` / null-partition) children, yield when it has none —
+    depth-agnostic, so recovery never needs to know (or guess) a
+    crashed tree's layout (a fixed depth inferred from the live store
+    misclassifies a store whose data sits entirely in staging/trash)."""
+    if not fs.exists(root_path):
+        return
+    frontier = [("", root_path)]
+    while frontier:
+        rel, p = frontier.pop()
+        kids = [
+            st
+            for st in fs.listStatus(p)
+            if st.isDirectory()
+            and (
+                "=" in st.getPath().getName()
+                or st.getPath().getName() == NULL_PART
+            )
+        ]
+        if not kids and rel:
+            yield rel, p
             continue
-        # any ancestor dir under a hidden segment is hidden too
-        parts = p.toString().split("/")
-        if any(seg.startswith(("_", ".")) for seg in parts[:-1] if seg):
-            # scheme://host segments never start with _ or .; partition
-            # dirs like part=1 don't either — only markers/staging do
+        for st in kids:
+            name = st.getPath().getName()
+            frontier.append(
+                (f"{rel}/{name}" if rel else name, st.getPath())
+            )
+
+
+def _merge_dir(fs, HPath, src_dir, dst_dir) -> None:
+    """Move ``src_dir`` to ``dst_dir``: one rename when ``dst_dir`` is
+    absent, else every entry moved across, skipping names already
+    present. S3 copy is atomic per object and part-file names are
+    unique, so a name present on both sides is the same whole object
+    (a crashed per-object move caught between copy and delete) —
+    union-by-basename reconstructs exactly one copy of every file, and
+    re-running after another crash converges."""
+    if not fs.exists(src_dir):
+        return
+    if not fs.exists(dst_dir):
+        fs.mkdirs(dst_dir.getParent())
+        if not fs.rename(src_dir, dst_dir):
+            raise IOError(f"swap: cannot move {src_dir} to {dst_dir}")
+        return
+    for st in fs.listStatus(src_dir):
+        dst = HPath(f"{dst_dir}/{st.getPath().getName()}")
+        if fs.exists(dst):
+            continue  # same object, already (copied) there
+        if not fs.rename(st.getPath(), dst):
+            raise IOError(
+                f"swap: cannot move {st.getPath()} into {dst_dir}; "
+                "store left as-is for manual recovery"
+            )
+    fs.delete(src_dir, True)
+
+
+def _merge_tree(fs, HPath, src_root, root: str) -> None:
+    # every hive leaf under src_root merged into the same rel under root
+    for rel, p in _hive_leaves(fs, src_root):
+        _merge_dir(fs, HPath, p, HPath(f"{root}/{rel}"))
+
+
+def swap_leaves(
+    spark: SparkSession, root: str, moved_rels, names: tuple[str, str]
+) -> None:
+    """Replace leaves of the hive table at ``root`` with the ones the
+    caller already wrote under ``<root>/<names[0]>`` (staging): move
+    each existing ``<root>/<rel>`` in ``moved_rels`` aside to
+    ``<root>/<names[1]>`` (trash), stamp the commit marker, install
+    every staged leaf, drop trash and staging. A leaf moved aside with
+    no staged replacement is gone afterwards (e.g. a fully purged
+    leaf). Callers run :func:`recover_swaps` before staging, so trash
+    starts empty."""
+    fs, _ = hadoop_fs(spark, root)
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    root = root.rstrip("/")
+    staging, trash = (HPath(f"{root}/{n}") for n in names)
+    for rel in moved_rels:
+        _merge_dir(fs, HPath, HPath(f"{root}/{rel}"), HPath(f"{trash}/{rel}"))
+    fs.create(HPath(f"{staging}/{MOVED_OK}"), True).close()
+    _merge_tree(fs, HPath, staging, root)
+    fs.delete(trash, True)
+    fs.delete(staging, True)
+
+
+def recover_swaps(spark: SparkSession, root: str) -> None:
+    """Converge a crashed (or interrupted) swap of ANY op at ``root``:
+    marker present — roll forward (install staged leaves, drop the
+    superseded trash); no marker — roll back (restore trash). Writer
+    side only: every maintenance op runs it first. A reader must not
+    (racing a live, healthy swap it would undo it) — readers call
+    :func:`check_no_swap_residue`."""
+    fs, _ = hadoop_fs(spark, root)
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    root = root.rstrip("/")
+    for staging_name, trash_name in _SWAP_DIRS.values():
+        staging = HPath(f"{root}/{staging_name}")
+        trash = HPath(f"{root}/{trash_name}")
+        if not (fs.exists(staging) or fs.exists(trash)):
             continue
-        return True
-    return False
+        committed = fs.exists(HPath(f"{staging}/{MOVED_OK}"))
+        _merge_tree(fs, HPath, staging if committed else trash, root)
+        fs.delete(trash, True)
+        fs.delete(staging, True)
+
+
+def check_no_swap_residue(spark: SparkSession, path: str) -> None:
+    """Refuse to read a store that carries a crashed (or in-progress)
+    swap's residue. Trash may hold the ONLY copy of moved-aside rows in
+    a ``_``-prefixed dir every parquet reader silently SKIPS, so a dedup
+    gate reading past it would see a partial store and commit silent
+    duplicates. Detect, stop loudly, and let a maintenance op's
+    :func:`recover_swaps` converge the store. Cost when healthy: six
+    driver-side ``exists`` calls."""
+    fs, _ = hadoop_fs(spark, path)
+    HPath = spark._jvm.org.apache.hadoop.fs.Path
+    root = path.rstrip("/")
+    for op, dirs in _SWAP_DIRS.items():
+        for residue in dirs:
+            if fs.exists(HPath(f"{root}/{residue}")):
+                raise RuntimeError(
+                    f"store at {path!r} has {op} residue ({residue}) "
+                    "from a crashed or in-progress maintenance run — "
+                    "reading past it would treat moved-aside rows as "
+                    "absent (silent duplicate ingestion). Re-run a "
+                    "maintenance op on this store (compact_ingest_store, "
+                    "compact_token_store, purge_documents or "
+                    "compact_partitions: each first completes or rolls "
+                    "back the crashed swap), then retry."
+                )

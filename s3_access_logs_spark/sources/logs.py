@@ -47,17 +47,3 @@ def read_logs(
         )
     return df
 
-
-def read_logs_stream(spark: SparkSession, src: str) -> DataFrame:
-    """Streaming variant: continuous ingestion of the same directory.
-
-    Replaces cron + previous-hour default + tracking files
-    (cmd/export.py:238-241, :319-324) with Structured Streaming's exactly-once
-    file tracking (checkpointed file index).
-    """
-    return (
-        spark.readStream.format("text")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "256")
-        .load(src)
-    )

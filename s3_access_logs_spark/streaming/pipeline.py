@@ -31,6 +31,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from s3_access_logs_spark.operators.etl import write_logs
 from s3_access_logs_spark.operators.parse import parse_logs
+from s3_access_logs_spark.sources.fsutil import (  # noqa: F401 (re-export)
+    MOVED_OK as _MOVED_OK,
+    check_no_swap_residue,
+)
 
 
 def read_log_stream(
@@ -1168,7 +1172,7 @@ def backfill_bloom_store(
             f"backfill_bloom_store: base_batch_id must be negative "
             f"(streaming epochs count up from 0), got {base_batch_id}"
         )
-    check_no_fold_residue(spark, store)
+    check_no_swap_residue(spark, store)
     digests = spark.read.parquet(store).select("digest")
     covered = [b for b in _hive_batch_ids(spark, store) if b >= 0]
     base = bloom_build(
@@ -1194,104 +1198,6 @@ def backfill_bloom_store(
         .partitionBy("batch_id")
         .parquet(bloom_store)
     )
-
-
-_MOVED_OK = "_moved_ok"  # every partition fully moved aside; install began
-
-
-def _merge_dir(fs, HPath, src_dir, dst_dir) -> None:
-    """Move every entry of ``src_dir`` into ``dst_dir``, skipping names
-    already present — the recovery primitive that makes the fold safe on
-    object stores. A directory "rename" on s3a is per-object copy+delete,
-    so a crash can leave a partition's files SPLIT across two dirs with
-    the mid-flight object in both (S3 copy is atomic per object: each
-    file is whole wherever it appears, and part-file names are unique).
-    Union-by-basename therefore reconstructs exactly one copy of every
-    file, and re-running the merge after another crash converges — no
-    file is ever lost or duplicated."""
-    if not fs.exists(src_dir):
-        return
-    fs.mkdirs(dst_dir)
-    for st in fs.listStatus(src_dir):
-        dst = HPath(f"{dst_dir}/{st.getPath().getName()}")
-        if fs.exists(dst):
-            continue  # same object, already (copied) there
-        if not fs.rename(st.getPath(), dst):
-            raise IOError(
-                f"fold recovery: cannot move {st.getPath()} into "
-                f"{dst_dir}; store left as-is for manual recovery"
-            )
-
-
-def _recover_fold(spark: SparkSession, store: str) -> None:
-    """Complete or roll back a crashed :func:`compact_ingest_store` fold
-    before anything reads the store. The commit point is the
-    ``_moved_ok`` marker inside ``_fold_staging`` — NOT directory
-    existence, because on object stores (s3a) a directory rename is
-    per-object copy+delete and a crash mid-move leaves a partition half
-    in place and half in ``_fold_trash``; classifying on "does the live
-    dir exist" would then delete the trash half, permanently losing rows
-    (review r5).
-
-    - ``_moved_ok`` present: every folded partition is wholly in trash,
-      so live-side rows can only be the (possibly partial) installed
-      base — ROLL FORWARD by merging the staged base into the live base
-      dir, then drop trash (superseded copies) + staging.
-    - no marker, staging holds a ``batch_id=`` child: the install never
-      began — ROLL BACK by merging each trash partition into its live
-      dir (:func:`_merge_dir` unions by basename, so split partitions
-      and mid-flight objects reassemble to exactly one copy), then drop
-      trash + staging; the rerun re-folds from the restored state. This
-      branch also covers a crash during the staging write itself (trash
-      absent — nothing to restore) and crashed folds from the
-      pre-marker protocol version.
-    - no marker, no staged child: the install committed (the pre-marker
-      protocol's post-install state — its rename moved the child away)
-      — the trash holds only superseded copies; drop trash + staging.
-
-    Either way the store ends with every history row in exactly one live
-    partition, so a SUMMING store (count-min) can never double-count a
-    crashed fold (ADVICE r4), on atomic-rename filesystems AND object
-    stores."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
-
-    fs, _ = hadoop_fs(spark, store)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    root = store.rstrip("/")
-    staging = HPath(f"{root}/_fold_staging")
-    trash = HPath(f"{root}/_fold_trash")
-
-    def _restore_trash() -> None:
-        if fs.exists(trash):
-            for st in fs.listStatus(trash):
-                _merge_dir(
-                    fs, HPath, st.getPath(),
-                    HPath(f"{root}/{st.getPath().getName()}"),
-                )
-            fs.delete(trash, True)
-
-    if not fs.exists(staging):
-        # trash is deleted before staging, so trash without staging is
-        # protocol-unreachable (manual surgery); restore conservatively
-        # — a merge never loses either side
-        _restore_trash()
-        return
-    staged_kids = [
-        s.getPath()
-        for s in fs.listStatus(staging)
-        if s.getPath().getName().startswith("batch_id=")
-    ]
-    if fs.exists(HPath(f"{staging}/{_MOVED_OK}")):
-        for kid in staged_kids:  # roll FORWARD: finish the install
-            _merge_dir(
-                fs, HPath, kid, HPath(f"{root}/{kid.getName()}")
-            )
-        fs.delete(trash, True)
-    elif staged_kids:
-        _restore_trash()  # roll BACK: the install never began
-    else:
-        fs.delete(trash, True)  # pre-marker post-install: superseded
-    fs.delete(staging, True)
 
 
 def _sweep_orphan_markers(spark: SparkSession, store: str) -> None:
@@ -1346,27 +1252,23 @@ def compact_ingest_store(
     replay exclusion.
 
     Crash posture (summing-store safe, object-store safe): the fold
-    STAGES the combined base under ``_fold_staging`` (a ``_``-prefixed
-    dir — invisible to readers and to ``partition_file_stats``), moves
-    the old base and every folded partition aside to ``_fold_trash``,
-    stamps ``_moved_ok`` — the commit point — then installs the staged
-    base and drops trash + staging. A rerun first recovers from the
-    marker: before ``_moved_ok`` the moves roll BACK; after it the
-    install rolls FORWARD. Both recovery moves are
-    by-basename directory merges (:func:`_merge_dir`), so they stay
-    correct on object stores where a directory rename is per-object
-    copy+delete and a crash can leave one partition split across two
-    dirs (review r5). History rows therefore exist in exactly one live
+    STAGES the combined base under ``_fold_staging`` and swaps it in by
+    the stage-and-swap protocol of ``sources.fsutil`` (``swap_leaves``:
+    move aside, ``_moved_ok`` commit marker, install; every run first
+    converges a crashed swap of any maintenance op via
+    ``recover_swaps``). History rows therefore exist in exactly one live
     place at every crash point, which matters for LINEAR stores: the
-    count-min frequency store SUMS counter rows, so the old posture
-    (write base, then delete folded dirs) could bake a second copy of a
-    folded batch's counters into the base if a crash hit between the
-    two and the next run re-folded base ∪ still-present dirs
-    (ADVICE r4). Set-semantics stores (digest/band/bloom/profile) were
-    never affected, but share the stronger protocol. Returns
+    count-min frequency store SUMS counter rows, so a crash must never
+    leave a folded batch's counters both in the base and in its own
+    partition (ADVICE r4). Returns
     ``{"folded": [...], "kept": [...], "compacted": [...]}``."""
     from s3_access_logs_spark.operators.etl import compact_partitions
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs, has_data_files
+    from s3_access_logs_spark.sources.fsutil import (
+        FOLD_DIRS,
+        has_data_files,
+        recover_swaps,
+        swap_leaves,
+    )
 
     if base_batch_id >= 0:
         raise ValueError(
@@ -1375,14 +1277,12 @@ def compact_ingest_store(
         )
     if keep_recent < 0:
         raise ValueError("keep_recent must be >= 0")
-    _recover_fold(spark, store)
+    recover_swaps(spark, store)
     # sweep BEFORE the empty-store return too: a crashed fold's rerun
     # (or a claim that never wrote data) must not leak markers
     _sweep_orphan_markers(spark, store)
     if not has_data_files(spark, store):
         return {"folded": [], "kept": [], "compacted": []}
-    fs, root_path = hadoop_fs(spark, store)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
     # the shared listing helper, not a re-implementation: it skips
     # non-numeric batch_id dirs (__HIVE_DEFAULT_PARTITION__, strays)
     # instead of crashing the maintenance job on them
@@ -1399,10 +1299,8 @@ def compact_ingest_store(
                 spark, store, target_file_bytes=target_file_bytes
             )],
         }
-    root = store.rstrip("/")
-    staging, trash = f"{root}/_fold_staging", f"{root}/_fold_trash"
-    # 1. STAGE the combined base outside the hive tree: readers (and a
-    #    crashed run's rerun) never see a partial or duplicated fold.
+    # STAGE the combined base outside the hive tree: readers (and a
+    # crashed run's rerun) never see a partial or duplicated fold.
     history = spark.read.parquet(store).filter(
         F.col("batch_id").isin([base_batch_id] + folded)
     )
@@ -1410,35 +1308,12 @@ def compact_ingest_store(
         history.withColumn("batch_id", F.lit(base_batch_id))
         .write.mode("overwrite")
         .partitionBy("batch_id")
-        .parquet(staging)
+        .parquet(f"{store.rstrip('/')}/{FOLD_DIRS[0]}")
     )
-    # 2. Move the old base and every folded partition aside. After this
-    #    loop the folded rows live ONLY in trash + staging.
-    fs.mkdirs(HPath(trash))
-    for b in [base_batch_id] + folded:
-        src_dir = HPath(f"{root}/batch_id={b}")
-        if not fs.exists(src_dir):
-            continue  # first fold: no base partition yet
-        dst_dir = HPath(f"{trash}/batch_id={b}")
-        fs.delete(dst_dir, True)
-        if not fs.rename(src_dir, dst_dir):
-            raise IOError(f"fold: cannot move {src_dir} aside")
-    # moved_ok marker — the commit point: before it, recovery rolls the
-    # moves BACK (merge trash into live); after it, recovery rolls the
-    # install FORWARD (merge staged base into live). Both merges are
-    # by-basename unions, idempotent under repeated crashes even when a
-    # non-atomic rename left a partition split across two dirs.
-    fs.create(HPath(f"{staging}/{_MOVED_OK}"), True).close()
-    # 3. Install the staged base. On HDFS/local this is one atomic
-    #    rename; on an object store a crash mid-install is converged by
-    #    the rerun's roll-forward merge.
-    if not fs.rename(
-        HPath(f"{staging}/batch_id={base_batch_id}"),
-        HPath(f"{root}/batch_id={base_batch_id}"),
-    ):
-        raise IOError("fold: cannot install staged base partition")
-    fs.delete(HPath(trash), True)
-    fs.delete(HPath(staging), True)
+    swap_leaves(
+        spark, store,
+        [f"batch_id={b}" for b in [base_batch_id] + folded], FOLD_DIRS,
+    )
     _sweep_orphan_markers(spark, store)
     compacted = compact_partitions(
         spark, store, target_file_bytes=target_file_bytes
@@ -1448,36 +1323,6 @@ def compact_ingest_store(
         "kept": [b for b in live if b not in folded],
         "compacted": [c["partition"] for c in compacted],
     }
-
-
-def check_no_fold_residue(spark: SparkSession, path: str) -> None:
-    """Refuse to read a store that carries a crashed (or in-progress)
-    fold's residue. A fold that died between moving history aside and
-    installing the staged base leaves partitions under ``_fold_trash``
-    — a ``_``-prefixed dir every parquet reader silently SKIPS, so a
-    dedup gate reading past it would see an empty/partial store and
-    commit silent duplicates (the exact history loss the staged
-    protocol exists to prevent). Readers must not run the recovery
-    themselves — a reader racing a live, healthy fold would destroy it
-    — so the contract is: detect, stop loudly, and let the maintenance
-    entry point (``compact_ingest_store``, whose ``_recover_fold`` is
-    the single writer-side owner of the state machine) converge the
-    store. Cost when healthy: two driver-side ``exists`` calls."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
-
-    fs, _ = hadoop_fs(spark, path)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    root = path.rstrip("/")
-    for residue in ("_fold_trash", "_fold_staging"):
-        if fs.exists(HPath(f"{root}/{residue}")):
-            raise RuntimeError(
-                f"store at {path!r} has fold residue ({residue}) from a "
-                "crashed or in-progress compact_ingest_store run — "
-                "reading past it would treat moved-aside history as "
-                "absent (silent duplicate ingestion). Re-run "
-                "compact_ingest_store on this store (its recovery pass "
-                "completes or rolls back the fold), then retry."
-            )
 
 
 def write_batch_partition(
@@ -1559,12 +1404,12 @@ def _read_prior_batches(
     (for a dedup gate that silently drops the whole batch forever). A
     store with no COMMITTED data files means "no history"; any other
     read failure must surface — swallowing a transient error here would
-    re-ingest a batch as if nothing had been seen. The fold-residue
-    check runs FIRST: after a crashed fold the trash may hold the only
-    copy of the history, and ``has_data_files`` cannot see it."""
+    re-ingest a batch as if nothing had been seen. The swap-residue
+    check runs FIRST: after a crashed maintenance op the trash may hold
+    the only copy of the history, and ``has_data_files`` cannot see it."""
     from s3_access_logs_spark.sources.fsutil import has_data_files
 
-    check_no_fold_residue(sess, path)
+    check_no_swap_residue(sess, path)
     if not has_data_files(sess, path):
         return sess.createDataFrame([], empty_schema)
     return sess.read.parquet(path).filter(F.col("batch_id") != batch_id)
@@ -1911,7 +1756,7 @@ def profile_quantiles(
         quantile_values,
     )
 
-    check_no_fold_residue(spark, profile_store)
+    check_no_swap_residue(spark, profile_store)
     store = spark.read.parquet(profile_store).select("h", "v")
     return quantile_values(quantile_sketch_merge(store), qs)
 
@@ -1935,7 +1780,7 @@ def frequency_estimates(
     # stream age (327k rows x batches at default size) while the merged
     # sketch is one bounded grid forever — cms_merge's per-counter SUM
     # is exactly the fold, and linearity makes the estimates identical
-    check_no_fold_residue(spark, sketch_store)
+    check_no_swap_residue(spark, sketch_store)
     rows = cms_merge(
         spark.read.parquet(sketch_store).select("row", "col", "cnt")
     ).collect()
@@ -1953,7 +1798,7 @@ def heavy_hitters(
     against the merged sketch, ordered by estimated count. Exactness
     caveats inherit from :func:`track_frequencies_stream`: estimates are
     overestimates, and a key never locally-top in any batch is absent."""
-    check_no_fold_residue(spark, candidates_store)
+    check_no_swap_residue(spark, candidates_store)
     cands = (
         spark.read.parquet(candidates_store)
         .select("token")
@@ -2011,21 +1856,6 @@ def _token_store_leaves(
     return out
 
 
-def _recover_token_fold(spark: SparkSession, store: str) -> None:
-    """Complete or roll back a crashed :func:`compact_token_store` fold
-    — ONE shared copy of the stage-and-swap recovery protocol lives in
-    ``operators/purge.py`` (depth-agnostic hive-leaf walk, by-basename
-    merges — review r12: a second hand-rolled copy here would have to
-    be kept semantically identical forever); this fold differs only in
-    its staging/trash names."""
-    from s3_access_logs_spark.operators.purge import _recover_swap
-
-    _recover_swap(
-        spark, store,
-        staging_name="_fold_staging", trash_name="_fold_trash",
-    )
-
-
 def compact_token_store(
     spark: SparkSession,
     store: str,
@@ -2053,15 +1883,18 @@ def compact_token_store(
     ``keep_recent`` defaults to 1 (0 is legal with the stream
     stopped); ``base_batch_id`` must be negative so it can never
     collide with a live epoch's dynamic-overwrite leaves. Crash
-    posture is the same stage → move-aside → ``_moved_ok`` → install
-    protocol, with staging/trash mirroring the two-level layout
-    (:func:`_recover_token_fold` rolls a crash back before the marker
-    and forward after it, by-basename merges at the batch level so
-    object-store renames stay safe). Token-store rows are
+    posture is the stage-and-swap protocol of ``sources.fsutil``
+    (``recover_swaps`` first, then ``swap_leaves`` over the two-level
+    ``shard=<s>/batch_id=<b>`` leaves). Token-store rows are
     set-semantics (one row per (doc_id, digest-gated ingest)), so
     even the linear-store concern does not arise. Returns
     ``{"folded": [...], "kept": [...]}`` (global batch ids)."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs, has_data_files
+    from s3_access_logs_spark.sources.fsutil import (
+        FOLD_DIRS,
+        has_data_files,
+        recover_swaps,
+        swap_leaves,
+    )
 
     if base_batch_id >= 0:
         raise ValueError(
@@ -2071,7 +1904,7 @@ def compact_token_store(
         )
     if keep_recent < 0:
         raise ValueError("keep_recent must be >= 0")
-    _recover_token_fold(spark, store)
+    recover_swaps(spark, store)
     if not has_data_files(spark, store):
         return {"folded": [], "kept": []}
     leaves = _token_store_leaves(spark, store)
@@ -2092,14 +1925,10 @@ def compact_token_store(
     )
     if not folded:
         return {"folded": [], "kept": live}
-    fs, _ = hadoop_fs(spark, store)
-    HPath = spark._jvm.org.apache.hadoop.fs.Path
-    root = store.rstrip("/")
-    staging, trash = f"{root}/_fold_staging", f"{root}/_fold_trash"
-    # 1. STAGE the combined per-shard base outside the hive tree. One
-    #    job over only the folded batches' bytes; repartition keys each
-    #    shard to one writer task -> exactly one file per shard leaf,
-    #    in-file rows in the stream's own (shard_order, doc_id) order.
+    # STAGE the combined per-shard base outside the hive tree. One job
+    # over only the folded batches' bytes; repartition keys each shard
+    # to one writer task -> exactly one file per shard leaf, in-file
+    # rows in the stream's own (shard_order, doc_id) order.
     history = spark.read.parquet(store).filter(
         F.col("batch_id").isin([base_batch_id] + folded)
     )
@@ -2113,43 +1942,16 @@ def compact_token_store(
         .write.mode("overwrite")
         .option("compression", "snappy")
         .partitionBy("shard", "batch_id")
-        .parquet(staging)
+        .parquet(f"{store.rstrip('/')}/{FOLD_DIRS[0]}")
     )
-    # 2. Move the old base and every folded leaf aside, mirroring the
-    #    shard level. After this the folded rows live ONLY in
-    #    trash + staging.
-    for sh, ids in leaves.items():
-        moved_any = False
-        for b in [base_batch_id] + folded:
-            if b not in ids:
-                continue
-            src_dir = HPath(f"{root}/{sh}/batch_id={b}")
-            if not fs.exists(src_dir):
-                continue
-            if not moved_any:
-                fs.mkdirs(HPath(f"{trash}/{sh}"))
-                moved_any = True
-            dst_dir = HPath(f"{trash}/{sh}/batch_id={b}")
-            fs.delete(dst_dir, True)
-            if not fs.rename(src_dir, dst_dir):
-                raise IOError(f"token fold: cannot move {src_dir} aside")
-    # the commit point (see _recover_token_fold)
-    fs.create(HPath(f"{staging}/{_MOVED_OK}"), True).close()
-    # 3. Install each staged shard base. Atomic per rename on
-    #    HDFS/local; a crash mid-install is converged by the rerun's
-    #    roll-forward merge.
-    for st in fs.listStatus(HPath(staging)):
-        if not st.isDirectory():
-            continue
-        sh = st.getPath().getName()
-        fs.mkdirs(HPath(f"{root}/{sh}"))
-        if not fs.rename(
-            HPath(f"{staging}/{sh}/batch_id={base_batch_id}"),
-            HPath(f"{root}/{sh}/batch_id={base_batch_id}"),
-        ):
-            raise IOError(
-                f"token fold: cannot install staged base for {sh}"
-            )
-    fs.delete(HPath(trash), True)
-    fs.delete(HPath(staging), True)
+    swap_leaves(
+        spark, store,
+        [
+            f"{sh}/batch_id={b}"
+            for sh, ids in leaves.items()
+            for b in [base_batch_id] + folded
+            if b in ids
+        ],
+        FOLD_DIRS,
+    )
     return {"folded": folded, "kept": [b for b in live if b not in folded]}

@@ -6944,3 +6944,48 @@ class TestCurateStoreOwnership:
         # folded curate rows survive under the base partition
         kept = {r.keep_id for r in spark.read.parquet(store).collect()}
         assert kept == {5, 6}
+
+
+class TestHasDataFiles:
+    """Hidden (``_``/``.``) names mark commit debris only BELOW the
+    probed root; a store whose own path sits under a hidden ancestor
+    holds data like any other."""
+
+    @pytest.mark.parametrize("ancestor", [".hidden", "_under"])
+    def test_hidden_ancestor_does_not_hide_data(
+        self, spark, tmp_path, ancestor
+    ):
+        from s3_access_logs_spark.sources.fsutil import has_data_files
+
+        store = tmp_path / ancestor / "store"
+        spark.range(3).withColumn("part", F.lit(1)).write.partitionBy(
+            "part"
+        ).parquet(str(store))
+        assert has_data_files(spark, str(store))
+        debris = tmp_path / ancestor / "debris"
+        (debris / "_temporary" / "0").mkdir(parents=True)
+        (debris / "_temporary" / "0" / "part-0.parquet").write_bytes(b"x")
+        (debris / "_SUCCESS").write_bytes(b"")
+        assert not has_data_files(spark, str(debris))
+
+    def test_export_under_hidden_ancestor_reads_back_every_window(
+        self, spark, tmp_path
+    ):
+        from s3_access_logs_spark.operators.export import (
+            export_training_set,
+        )
+
+        docs = spark.createDataFrame(
+            [(i, f"hidden ancestor document {i} with words") for i in
+             range(40)],
+            "doc_id long, text string",
+        )
+        wins, report = export_training_set(
+            docs, str(tmp_path / ".work" / "shards"), n_shards=2,
+            window_ids=16,
+        )
+        emitted = {r.stage: r.dropped for r in report.collect()}[
+            "windows_emitted"
+        ]
+        assert emitted > 0
+        assert wins.count() == emitted

@@ -603,3 +603,44 @@ class TestPurgeCli:
             [(1, "x")], "some_id long, text string"
         ).write.parquet(wrong)
         assert run_purge(["1", "--token-store", wrong]) == 2
+
+
+class TestCrossOpRecovery:
+    def test_fold_heals_a_purge_crashed_before_its_marker(
+        self, spark, tmp_path
+    ):
+        """Every maintenance op runs the ONE swap recovery over every
+        op's staging/trash names, so a purge that died after moving a
+        leaf aside (no commit marker) is rolled back by the next
+        ``compact_ingest_store`` — not only by a second purge. The
+        moved-aside rows come back and are then folded; the staged
+        rewrite that never committed is discarded."""
+        import shutil
+
+        from s3_access_logs_spark.streaming import compact_ingest_store
+
+        store = str(tmp_path / "digests")
+        spark.createDataFrame(
+            [(i, f"d{i}", i % 3) for i in range(12)],
+            "keep_id long, digest string, batch_id int",
+        ).write.partitionBy("batch_id").parquet(store)
+        # crash state: batch 1 rewritten into staging without keep_id 1,
+        # its live leaf moved under _purge_trash, marker never stamped
+        (
+            spark.read.parquet(store)
+            .filter("batch_id = 1 AND keep_id != 1")
+            .write.partitionBy("batch_id")
+            .parquet(f"{store}/_purge_staging")
+        )
+        os.makedirs(f"{store}/_purge_trash")
+        shutil.move(
+            f"{store}/batch_id=1", f"{store}/_purge_trash/batch_id=1"
+        )
+        res = compact_ingest_store(spark, store, keep_recent=0)
+        assert res["folded"] == [0, 1, 2]
+        back = spark.read.parquet(store).collect()
+        assert sorted(r.keep_id for r in back) == list(range(12))
+        assert {r.batch_id for r in back} == {-1}
+        assert sorted(
+            d for d in os.listdir(store) if not d.startswith(".")
+        ) == ["_SUCCESS", "batch_id=-1"]

@@ -2717,6 +2717,32 @@ class TestFoldResidueGuard:
         assert r["est_count"] == 2
 
 
+class TestSwapResidueGuard:
+    @pytest.mark.parametrize("trash", ["_purge_trash", "_compact_trash"])
+    def test_prior_batch_read_refuses_any_ops_residue(
+        self, spark, tmp_path, trash
+    ):
+        """A leaf moved under ANY maintenance op's trash is invisible to
+        parquet readers; a gate reading past it would take half the
+        history for all of it and re-ingest the rest as new."""
+        import os
+        import shutil
+
+        from s3_access_logs_spark.streaming.pipeline import (
+            _read_prior_batches,
+        )
+
+        store = str(tmp_path / "store")
+        spark.createDataFrame(
+            [(f"d{i}", i % 2) for i in range(10)],
+            "digest string, batch_id int",
+        ).write.partitionBy("batch_id").parquet(store)
+        os.makedirs(f"{store}/{trash}")
+        shutil.move(f"{store}/batch_id=0", f"{store}/{trash}/batch_id=0")
+        with pytest.raises(RuntimeError, match=f"residue \\({trash}\\)"):
+            _read_prior_batches(spark, store, "digest string", 99)
+
+
 class TestShardStoreTokenizerSwitch:
     def test_restart_under_different_tokenizer_fails_loud(
         self, spark, tmp_path
