@@ -56,7 +56,7 @@ def _assert_owns_partition(spark, store: str, batch_id: int) -> None:
     of the same curate batch passes while a foreign partition fails
     loudly, with no crash window in which committed curate rows sit
     unmarked. The reverse direction is enforced inside
-    ``streaming.pipeline.write_batch_partition``: stream sinks refuse
+    ``sources.fsutil.write_batch_partition``: stream sinks refuse
     MARKED partitions, so neither writer can clobber the other. The
     check-then-claim window is not transactional — the store contract
     assumes one maintenance writer at a time (the same assumption
@@ -99,8 +99,6 @@ def _claimed_append(df, batch_id: int, store: str) -> None:
         partition_has_marker,
         remove_partition_marker,
         touch_partition_marker,
-    )
-    from s3_access_logs_spark.streaming.pipeline import (
         write_batch_partition,
     )
 
@@ -462,41 +460,30 @@ def curate_corpus(
         # WHOLE batch group (keeper included — history holds the keeper).
         # Replay safety mirrors the streaming read: the current batch's
         # own partition is excluded so a rerun never self-collides.
-        from s3_access_logs_spark.sources.fsutil import (
-            check_no_swap_residue,
-            has_data_files,
-        )
+        from s3_access_logs_spark.sources.fsutil import read_prior_batches
 
-        sess = docs.sparkSession
-        check_no_swap_residue(sess, digest_store)
-        if has_data_files(sess, digest_store):
-            hist = sess.read.parquet(digest_store)
-            if store_batch_id is not None:
-                hist = hist.filter(F.col("batch_id") != store_batch_id)
-            seen = (
-                hist.select(F.col("digest").alias("_seen_digest"))
-                .distinct()
-                .withColumn("_seen", F.lit(True))
+        seen = (
+            read_prior_batches(
+                docs.sparkSession, digest_store, "digest string",
+                store_batch_id,
             )
-            flags = (
-                flags.withColumn(
-                    "_digest", normalized_digest(F.col(text_col))
-                )
-                .join(
-                    seen,
-                    F.col("_digest") == F.col("_seen_digest"),
-                    "left",
-                )
-                .withColumn(
-                    "_f_exact_dup",
-                    F.col("_f_exact_dup")
-                    | (
-                        F.coalesce(F.col("_seen"), F.lit(False))
-                        & ~F.col("_f_empty")
-                    ),
-                )
-                .drop("_seen_digest", "_seen", "_digest")
+            .select(F.col("digest").alias("_seen_digest"))
+            .distinct()
+            .withColumn("_seen", F.lit(True))
+        )
+        flags = (
+            flags.withColumn("_digest", normalized_digest(F.col(text_col)))
+            .join(seen, F.col("_digest") == F.col("_seen_digest"), "left")
+            .withColumn(
+                "_f_exact_dup",
+                F.col("_f_exact_dup")
+                | (
+                    F.coalesce(F.col("_seen"), F.lit(False))
+                    & ~F.col("_f_empty")
+                ),
             )
+            .drop("_seen_digest", "_seen", "_digest")
+        )
     # The dedup stages run over the SURVIVORS of every other gate, not
     # the raw corpus: clustering raw docs could elect a keeper (min-id
     # representative / containment superset) that another gate already
@@ -545,23 +532,13 @@ def curate_corpus(
                 near_dup_incremental,
             )
             from s3_access_logs_spark.sources.fsutil import (
-                check_no_swap_residue,
-                has_data_files,
+                read_prior_batches,
             )
 
-            sess = docs.sparkSession
-            check_no_swap_residue(sess, band_store)
-            if has_data_files(sess, band_store):
-                hist_bands = sess.read.parquet(band_store)
-                if store_batch_id is not None:
-                    hist_bands = hist_bands.filter(
-                        F.col("batch_id") != store_batch_id
-                    )
-                seen_bands = hist_bands.select("id", "band_idx", "band_key")
-            else:
-                seen_bands = sess.createDataFrame(
-                    [], "id long, band_idx int, band_key string"
-                )
+            seen_bands = read_prior_batches(
+                docs.sparkSession, band_store,
+                "id long, band_idx int, band_key string", store_batch_id,
+            ).select("id", "band_idx", "band_key")
             eligible0 = flags.filter(eligible_pred).select(id_col, text_col)
             hits, _bands_for_append = near_dup_incremental(
                 eligible0, seen_bands, id_col=id_col, text_col=text_col

@@ -106,6 +106,33 @@ def merges_fingerprint(merges) -> str:
     return h.hexdigest()
 
 
+def token_store_meta(
+    vocab_size: int,
+    unk_id: int,
+    eos_id: int,
+    pretokenizer: str,
+    merges,
+    has_source: bool,
+) -> dict:
+    """The :data:`TOKEN_STORE_META` sidecar of a token store — ONE
+    builder for the batch :func:`write_token_store` and the stream's
+    ``shard_store`` sink, so both record the same keys: the id space
+    (``repack_epoch`` validates pads against it), the tokenizer
+    provenance (pretokenizer + :func:`merges_fingerprint`; consumers
+    require only the id-space keys, so pre-round-12 stores stay valid)
+    and ``has_source`` — a store's curriculum capability is part of its
+    contract, so a stream resuming a sourceless store with
+    ``keep_source=True`` (or the reverse) fails the way a tokenizer
+    switch does, instead of letting ``temperature_mixture`` see
+    NULL-source rows that really mean "pre-switch history"."""
+    return {
+        "vocab_size": int(vocab_size), "unk_id": int(unk_id),
+        "eos_id": int(eos_id), "pretokenizer": pretokenizer,
+        "merges_md5": merges_fingerprint(merges),
+        "has_source": bool(has_source),
+    }
+
+
 def _resolve_special_ids(
     merges: list[tuple[str, str]] | None,
     vocab: list[str] | None,
@@ -629,13 +656,9 @@ def write_token_store(
 
         write_json_sidecar(
             docs.sparkSession, store, TOKEN_STORE_META,
-            {"vocab_size": len(vs), "unk_id": int(unk_id),
-             "eos_id": int(eos),
-             # provenance (round 12): WHICH tokenizer the ids are bound
-             # to — consumers only require the three id-space keys, so
-             # pre-round-12 stores stay valid
-             "pretokenizer": pretokenizer,
-             "merges_md5": merges_fingerprint(ms)},
+            token_store_meta(
+                len(vs), unk_id, eos, pretokenizer, ms, "source" in keep
+            ),
         )
     finally:
         if pre_mix is not None:

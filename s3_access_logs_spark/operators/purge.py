@@ -49,6 +49,7 @@ from s3_access_logs_spark.sources.fsutil import (  # noqa: F401 (re-export)
     MOVED_OK as _MOVED_OK,
     NULL_PART as _NULL_PART,
     PURGE_DIRS,
+    batch_leaves,
     hadoop_fs,
     has_data_files,
     recover_swaps,
@@ -265,19 +266,13 @@ def purge_documents(
         # a crash that moved every leaf aside would make the data-read
         # sniff see the batch layout and flatten a streaming store's
         # batch_id level on the re-run)
-        from s3_access_logs_spark.streaming.pipeline import (
-            _token_store_leaves,
-        )
-
         recover_swaps(spark, token_store)
         # ALL shard dirs, via the fold's own listing helper (review
         # r12, second pass: inspecting only the first dir misreads a
         # store whose first shard was fully purged — an empty shard
         # dir has no batch_id kids — and a flat rewrite would then
         # corrupt the two-level tree)
-        streaming_layout = any(
-            _token_store_leaves(spark, token_store).values()
-        )
+        streaming_layout = bool(batch_leaves(spark, token_store, 1))
         part_cols = (
             ["shard", "batch_id"] if streaming_layout else ["shard"]
         )

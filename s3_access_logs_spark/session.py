@@ -5,11 +5,15 @@ point (tests, bench, driver contract, streaming jobs) runs with the same
 tuned session:
 
 * AQE on (runtime coalescing / skew-join splitting),
-* dynamic partition overwrite (idempotent hourly reruns — replaces the
-  reference's tracking-file gate, reference: cmd/export.py:319-324),
 * UTC session timezone (the reference parses ``%z`` offsets and emits UTC
   epoch seconds, reference: s3access/normalize.py:53-55),
 * Arrow-batched Python<->JVM transfer for the few Pandas-UDF operators.
+
+Two settings are deliberately NOT session-wide: dynamic partition
+overwrite (the idempotent-rerun mechanism that replaces the reference's
+tracking-file gate, cmd/export.py:319-324) is set per writer by every
+sink that needs it, and S3A settings come from
+``config.JobConfig.s3a_conf`` through ``extra_conf``.
 """
 
 from __future__ import annotations

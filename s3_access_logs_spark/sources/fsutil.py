@@ -12,6 +12,7 @@ plumbing.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def hadoop_fs(spark: SparkSession, path_str: str):
@@ -372,3 +373,193 @@ def check_no_swap_residue(spark: SparkSession, path: str) -> None:
                     "compact_partitions: each first completes or rolls "
                     "back the crashed swap), then retry."
                 )
+
+
+# ---------------------------------------------------------------------------
+# The ``batch_id=<n>`` store layout: the replay-idempotent append-only stores
+# the streaming ingest, curate's incremental mode, the sketch streams and the
+# token shard sink grow. Every store append, history read, leaf listing and
+# fold goes through the four helpers below. Micro-batch ids count up from 0,
+# so a fold's base leaf ``batch_id=-1`` can never collide with a live batch.
+# ---------------------------------------------------------------------------
+
+FOLD_BASE_ID = -1
+
+
+def write_batch_partition(
+    df,
+    batch_id: int,
+    path: str,
+    allow_curate: bool = False,
+    extra_partition_cols: tuple[str, ...] = (),
+    sort_cols: tuple[str, ...] = (),
+) -> None:
+    """The ONE batch_id-partitioned store append every foreachBatch sink
+    (and curate_corpus's incremental appends, and the fold's staged base)
+    uses: the batch_id column is stamped here and dynamic overwrite is
+    scoped to THIS write, so an at-least-once replay rewrites exactly its
+    own partition and the shared session's overwrite mode is never
+    touched (ADVICE r4). One place owns the store-write contract —
+    compression, file-size bounds or commit options change here, not in
+    nine inline copies (review r5).
+
+    Ownership guard (review r5, both directions): ``curate_corpus``
+    stamps its partitions with a marker so a colliding streaming epoch
+    id cannot silently dynamic-overwrite curate-committed history — the
+    digests would vanish AND that batch's replay exclusion would hide
+    the loss, re-ingesting every curated document downstream. Stream
+    sinks therefore fail loudly here on a marked partition; curate's own
+    appends pass ``allow_curate=True`` (its entry check already
+    validated the id against foreign UNMARKED partitions). The check is
+    one driver-side ``exists`` per store write; markers are store-root
+    files stamped claim-first, so they survive the partition overwrite
+    itself and a writer's own replay always passes."""
+    if not allow_curate and partition_has_marker(
+        df.sparkSession, path, batch_id
+    ):
+        raise RuntimeError(
+            f"write_batch_partition: batch_id={batch_id} in {path!r} was "
+            "committed by curate_corpus (ownership marker present) — a "
+            "streaming epoch overwriting it would silently erase curated "
+            "history and re-ingest those documents as new. The stream's "
+            "checkpoint epoch has collided with a curate store_batch_id; "
+            "re-curate into a disjoint id range (e.g. far above the "
+            "stream's epoch counter), then fold the store "
+            "(compact_ingest_store retires the id's partition AND its "
+            f"store-root _curate_owned_{batch_id} marker) before "
+            "resuming the stream."
+        )
+    # extra_partition_cols nest OUTSIDE batch_id (round 10, the shard
+    # hand-off: shard=<s>/batch_id=<b> — consumers list shard dirs the
+    # way the batch export lays them out, and dynamic overwrite still
+    # rewrites exactly the replay's own (cols..., batch_id) leaves,
+    # which a deterministic replay reproduces bit-for-bit).
+    # sort_cols pin in-FILE row order: the sort must include the
+    # partition columns as its prefix, because the parquet writer
+    # REQUIRES (partition cols) ordering and inserts its own
+    # non-stable sort when the incoming order does not already satisfy
+    # it — a caller-side sort missing that prefix would be silently
+    # destroyed (found by the shard hand-off's permutation test).
+    out = df.withColumn("batch_id", F.lit(batch_id))
+    if sort_cols:
+        out = out.sortWithinPartitions(
+            *extra_partition_cols, "batch_id", *sort_cols
+        )
+    (
+        out.write.mode("overwrite")
+        .partitionBy(*extra_partition_cols, "batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
+def read_prior_batches(
+    spark: SparkSession, path: str, empty_schema: str,
+    batch_id: int | None = None,
+):
+    """The ONE copy of the replay-safe store read every batch_id store
+    gate uses: committed history, EXCLUDING ``batch_id`` when given.
+    foreachBatch is at-least-once — if an attempt wrote a store
+    partition and crashed before the checkpoint committed, the replay
+    would otherwise see the batch's OWN rows as history and self-collide
+    (for a dedup gate that silently drops the whole batch forever);
+    read-only gates pass no id. A store with no COMMITTED data files
+    means "no history" (an empty ``empty_schema`` frame); any other
+    read failure must surface — swallowing a transient error here would
+    re-ingest a batch as if nothing had been seen. The swap-residue
+    check runs FIRST: after a crashed maintenance op the trash may hold
+    the only copy of the history, and ``has_data_files`` cannot see it."""
+    check_no_swap_residue(spark, path)
+    if not has_data_files(spark, path):
+        return spark.createDataFrame([], empty_schema)
+    hist = spark.read.parquet(path)
+    if batch_id is None:
+        return hist
+    return hist.filter(F.col("batch_id") != batch_id)
+
+
+def batch_leaves(
+    spark: SparkSession, store: str, outer_levels: int = 0
+) -> dict[int, list[str]]:
+    """Batch id → its ``batch_id=<n>`` leaf dirs relative to ``store``,
+    found ``outer_levels`` hive levels down: 0 for the digest, band,
+    Bloom and sketch stores, 1 for the streaming token store's
+    ``shard=<s>/batch_id=<n>``. One listing per dir above the leaves, no
+    data read; staging/trash dirs, non-hive strays and non-numeric ids
+    are skipped."""
+    fs, root = hadoop_fs(spark, store)
+    dirs = [("", root)] if fs.exists(root) else []
+    for _ in range(outer_levels):
+        dirs = [
+            (f"{rel}{st.getPath().getName()}/", st.getPath())
+            for rel, p in dirs
+            for st in fs.listStatus(p)
+            if st.isDirectory()
+            and (
+                "=" in st.getPath().getName()
+                or st.getPath().getName() == NULL_PART
+            )
+        ]
+    out: dict[int, list[str]] = {}
+    for rel, p in dirs:
+        for st in fs.listStatus(p):
+            name = st.getPath().getName()
+            if not (st.isDirectory() and name.startswith("batch_id=")):
+                continue
+            try:
+                b = int(name[len("batch_id="):])
+            except ValueError:
+                continue
+            out.setdefault(b, []).append(rel + name)
+    return out
+
+
+def fold_batch_store(
+    spark: SparkSession,
+    store: str,
+    keep_recent: int,
+    outer_cols: tuple[str, ...] = (),
+    sort_cols: tuple[str, ...] = (),
+) -> tuple[dict[int, list[str]], list[int], list[int]]:
+    """The ONE fold of a batch_id store: converge any crashed swap, fold
+    every batch except the newest ``keep_recent`` (and any earlier base)
+    into the ``batch_id=-1`` base, staged under ``_fold_staging`` and
+    swapped in by :func:`swap_leaves`. ``outer_cols`` are the hive
+    levels above ``batch_id`` (``("shard",)`` for the token store): the
+    staged base is keyed one writer task per outer dir, so each folded
+    leaf becomes one file, in ``sort_cols`` order. Returns the leaves as
+    listed before the fold, the folded ids and the kept ids.
+
+    ``keep_recent`` (default 1 at every caller) is the replay rule: a
+    gate excludes the CURRENT batch_id from its reads so an
+    at-least-once replay never self-collides, and only the newest
+    micro-batch can be in that uncommitted state (foreachBatch runs
+    batches sequentially) — fold it and a replay would find its own rows
+    under the base id and silently drop the whole batch. ``0`` is legal
+    with the stream stopped."""
+    if keep_recent < 0:
+        raise ValueError("keep_recent must be >= 0")
+    recover_swaps(spark, store)
+    leaves = batch_leaves(spark, store, len(outer_cols))
+    live = sorted(b for b in leaves if b != FOLD_BASE_ID)
+    # max(0, ...): keep_recent larger than the live count folds NOTHING
+    folded = live[: max(0, len(live) - keep_recent)]
+    if folded:
+        ids = [FOLD_BASE_ID, *folded]
+        rels = [rel for b in ids for rel in leaves.get(b, ())]
+        history = (
+            spark.read.parquet(store)
+            .filter(F.col("batch_id").isin(ids))
+            .drop("batch_id")
+        )
+        if outer_cols:
+            history = history.repartition(
+                len({rel.rsplit("/", 1)[0] for rel in rels}), *outer_cols
+            )
+        write_batch_partition(
+            history, FOLD_BASE_ID, f"{store.rstrip('/')}/{FOLD_DIRS[0]}",
+            allow_curate=True, extra_partition_cols=outer_cols,
+            sort_cols=sort_cols,
+        )
+        swap_leaves(spark, store, rels, FOLD_DIRS)
+    return leaves, folded, live[len(folded):]

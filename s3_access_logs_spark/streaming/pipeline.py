@@ -32,9 +32,62 @@ from pyspark.sql.streaming import StreamingQuery
 from s3_access_logs_spark.operators.etl import write_logs
 from s3_access_logs_spark.operators.parse import parse_logs
 from s3_access_logs_spark.sources.fsutil import (  # noqa: F401 (re-export)
+    FOLD_BASE_ID,
     MOVED_OK as _MOVED_OK,
-    check_no_swap_residue,
+    batch_leaves,
+    fold_batch_store,
+    has_data_files,
+    read_prior_batches,
+    read_prior_batches as _read_prior_batches,
+    write_batch_partition,
 )
+
+# the document feed every text stream reads (JSONL rows)
+_DOC_SCHEMA = "doc_id long, text string"
+# count-min store rows (functions.cms.cms_build)
+_CMS_SCHEMA = "row bigint, col bigint, cnt bigint"
+
+
+def _read_files(
+    spark: SparkSession,
+    fmt: str,
+    src: str,
+    schema: str | None = None,
+    max_files_per_trigger: int | None = None,
+    **options: str,
+) -> DataFrame:
+    """The ONE file-stream reader: ``max_files_per_trigger`` bounds each
+    micro-batch to that many input files, so a backlogged directory (a
+    stream restarted after days down) drains in bounded batches instead
+    of one giant one whose shuffles must fit executor memory at once."""
+    reader = spark.readStream.format(fmt).options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.load(src)
+
+
+def _run_batches(
+    df: DataFrame, checkpoint: str, available_now: bool, sink
+) -> StreamingQuery:
+    """The ONE foreachBatch runner: ``sink(batch_df, batch_id)`` sees
+    only non-empty micro-batches; ``checkpoint`` holds the file index
+    (exactly-once per input file) and ``available_now`` drains what is
+    there and stops."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            sink(batch_df, batch_id)
+
+    writer = (
+        df.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(run)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_log_stream(
@@ -42,11 +95,9 @@ def read_log_stream(
 ) -> DataFrame:
     """Continuous ingestion of the raw log-line directory (streaming twin of
     sources.logs.read_logs; no hour glob — time comes from the data)."""
-    return (
-        spark.readStream.format("text")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(src)
+    return _read_files(
+        spark, "text", src, max_files_per_trigger=max_files_per_trigger,
+        recursiveFileLookup="true",
     )
 
 
@@ -150,8 +201,6 @@ def write_partitioned_stream(
     ``read_parsed`` drops the internal batch_id column on read."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # write_logs carries the write-scoped dynamic-overwrite option
         # itself (ADVICE r1/r4): under static session mode a bare
         # overwrite would wipe the entire dst tree per micro-batch, and
@@ -164,14 +213,7 @@ def write_partitioned_stream(
             extra_part_cols=("batch_id",),
         )
 
-    writer = (
-        parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_batches(parsed, checkpoint, available_now, write_batch)
 
 
 def run_export_stream(
@@ -420,8 +462,6 @@ def ingest_documents_stream(
     (NULLs lose) — deterministic, so replays and reruns store
     identical bytes.
     """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from s3_access_logs_spark.functions.text import pii_redact, quality_score
     from s3_access_logs_spark.operators.dedup import (
         dedup_incremental,
@@ -429,19 +469,11 @@ def ingest_documents_stream(
         normalized_digest,
     )
 
-    fields = [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ]
-    if keep_source:
-        # optional feed field: JSON rows without it read as NULL; rows
-        # carrying it under keep_source=False are simply not projected
-        # (the reader schema IS the projection)
-        fields.append(StructField("source", StringType()))
-    schema = StructType(fields)
-    from s3_access_logs_spark.sources.fsutil import has_data_files as _hdf
-
-    if _hdf(spark, store):
+    # optional feed field: JSON rows without it read as NULL; rows
+    # carrying it under keep_source=False are simply not projected (the
+    # reader schema IS the projection)
+    schema = _DOC_SCHEMA + (", source string" if keep_source else "")
+    if has_data_files(spark, store):
         # the doc store has no sidecar, so its source-mode contract is
         # enforced by a one-time schema sniff (underscore dirs —
         # staging/trash — are hidden from the parquet reader, so a
@@ -507,10 +539,7 @@ def ingest_documents_stream(
         )
     if shard_store is not None and n_shards is None:
         n_shards = 8
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(src)
+    docs = _read_files(spark, "json", src, schema, max_files_per_trigger)
     if lm_model is not None:
         # materialize ONCE, outside the batch loop: the model is
         # broadcast-sized by construction (train_bigram_lm caps both
@@ -591,24 +620,16 @@ def ingest_documents_stream(
         # config, so a restart re-stamps the identical bytes.
         from s3_access_logs_spark.operators.export import (
             TOKEN_STORE_META,
-            merges_fingerprint,
+            token_store_meta,
         )
         from s3_access_logs_spark.sources.fsutil import (
             read_json_sidecar,
             write_json_sidecar,
         )
 
-        _meta = {
-            "vocab_size": len(_vs), "unk_id": -1, "eos_id": len(_vs),
-            "pretokenizer": shard_pretokenizer,
-            "merges_md5": merges_fingerprint(_ms),
-            # round 13: a store's curriculum capability is part of its
-            # contract — resuming a sourceless store with
-            # keep_source=True (or the reverse) must fail the same way
-            # a tokenizer switch does, or temperature_mixture would see
-            # NULL-source rows that really mean "pre-switch history"
-            "has_source": bool(keep_source),
-        }
+        _meta = token_store_meta(
+            len(_vs), -1, len(_vs), shard_pretokenizer, _ms, keep_source
+        )
         _prev = read_json_sidecar(spark, shard_store, TOKEN_STORE_META)
         if _prev is not None:
             # a restart under the SAME tokenizer re-stamps identical
@@ -649,8 +670,6 @@ def ingest_documents_stream(
         )
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
         if verify_unique_ids:
             # OPT-IN id-uniqueness gate (VERDICT r8 item 6): the
@@ -674,7 +693,13 @@ def ingest_documents_stream(
                     "way)"
                 )
         cleaned = batch_df
+        # every scoped persist of the batch, released at batch end
         _gate_persisted: list[DataFrame] = []
+
+        def scoped(df: DataFrame) -> DataFrame:
+            _gate_persisted.append(df.persist())
+            return _gate_persisted[-1]
+
         if html:
             # BEFORE everything: markup differences between two crawls
             # of one page (ad ids, nonce attributes) would defeat every
@@ -706,8 +731,7 @@ def ingest_documents_stream(
             # lineage) -> scoped persist, released at batch end.
             from s3_access_logs_spark.functions.lm import perplexity_score
 
-            cleaned = cleaned.persist()
-            _gate_persisted.append(cleaned)
+            cleaned = scoped(cleaned)
             keyed = cleaned.withColumn(
                 "_lmk", F.xxhash64("doc_id", "text")
             )
@@ -723,11 +747,11 @@ def ingest_documents_stream(
             # scrub BEFORE digesting: two crawls of the same page with
             # different session tokens in the text dedup to one document.
             cleaned = cleaned.withColumn("text", pii_redact("text"))
-        # Replay safety: see _read_prior_batches — every store read
+        # Replay safety: see read_prior_batches — every store read
         # excludes the current batch_id so an at-least-once replay never
         # self-collides with its own crashed attempt's rows.
         def read_prior(path: str, empty_schema: str):
-            return _read_prior_batches(sess, path, empty_schema, batch_id)
+            return read_prior_batches(sess, path, empty_schema, batch_id)
 
         seen = read_prior(store, "digest string").select("digest")
         # Survivors carry the (scrubbed) TEXT, not just digests: the store
@@ -797,8 +821,8 @@ def ingest_documents_stream(
             # probe an under-approximating filter -> false negatives ->
             # silent duplicates.
             cover_max = meta.get(_COVER_MAX_BATCH, -1)
-            doc_batches = _hive_batch_ids(sess, store)
-            bloom_batches = _hive_batch_ids(sess, bloom_store)
+            doc_batches = batch_leaves(sess, store)
+            bloom_batches = batch_leaves(sess, bloom_store)
             bloom_live = {b for b in bloom_batches if b >= 0}
             has_base = any(b < 0 for b in bloom_batches)
             min_live = min(bloom_live) if bloom_live else None
@@ -853,8 +877,7 @@ def ingest_documents_stream(
             # tokenize/shard write) on the otherwise single-consumer
             # plain path; the band/semantic paths already persist the
             # frame the shard block reads
-            survivors = survivors.persist()
-            _gate_persisted.append(survivors)
+            survivors = scoped(survivors)
         if band_store is not None:
             # Bands are computed from the SURVIVING (digest, keep_id,
             # text) rows — the exact texts that land in the store. The
@@ -867,8 +890,7 @@ def ingest_documents_stream(
             # the doc write, its multiplication below) plus an expensive
             # lineage (digest shuffle + full digest-store anti-join that
             # grows with store age) -> scoped persist
-            survivors = survivors.persist()
-            _gate_persisted.append(survivors)
+            survivors = scoped(survivors)
             kept_docs = survivors.select(
                 F.col("keep_id").alias("doc_id"), "text"
             )
@@ -884,17 +906,16 @@ def ingest_documents_stream(
             # fragment into hits' plan by logical-plan matching
             # (round 7: measured ~3.2 s/micro-batch on the band gate,
             # the dominant per-batch cost)
-            bands = bands.persist()
-            _gate_persisted.append(bands)
+            bands = scoped(bands)
             near_dup_ids = hits.select(
                 F.col("new_id").alias("doc_id")
             ).distinct()
             # DISTINCT: a batch repeating one doc_id would otherwise
             # carry join multiplicity through kept_ids into both store
             # writes, breaking store uniqueness with duplicate rows
-            kept_ids = kept_docs.select("doc_id").distinct().join(
+            kept_ids = scoped(kept_docs.select("doc_id").distinct().join(
                 near_dup_ids, "doc_id", "left_anti"
-            ).persist()
+            ))
             survivors = survivors.join(
                 kept_ids.select(F.col("doc_id").alias("keep_id")), "keep_id"
             )
@@ -911,14 +932,12 @@ def ingest_documents_stream(
                 l2_norm,
                 well_formed_vector,
             )
-            from s3_access_logs_spark.sources.fsutil import has_data_files
 
             # survivors gains consumers (vector lookup + the final
             # write, and the anti-join below re-reads it) — scoped
             # persist; its lineage at this point is the digest shuffle
             # plus every prior gate's joins
-            survivors = survivors.persist()
-            _gate_persisted.append(survivors)
+            survivors = scoped(survivors)
             batch_ids = survivors.select(
                 F.col("keep_id").alias("doc_id")
             ).distinct()
@@ -942,10 +961,9 @@ def ingest_documents_stream(
                 # posting-list partitions — plan-time literal isin, so
                 # partition pruning keeps the rest of the index out of
                 # the read entirely (the probe_ivf_index shape)
-                assigned = _assign_clusters(
+                assigned = scoped(_assign_clusters(
                     sem_vecs, semantic_centroids, "q_vec", 1
-                ).persist()
-                _gate_persisted.append(assigned)
+                ))
                 touched = sorted(
                     r["cluster"]
                     for r in assigned.select("cluster").distinct().collect()
@@ -976,21 +994,20 @@ def ingest_documents_stream(
                     .select(F.col("query_id").alias("keep_id"))
                     .distinct()
                 )
-                survivors = survivors.join(
-                    sem_hits, "keep_id", "left_anti"
-                ).persist()
                 # the FINAL survivors now has 2+ consumers (the store
                 # write plus every action the index append runs over
                 # sem_kept_vecs below) and its lineage re-reads the
                 # probed posting lists — scoped persist
-                _gate_persisted.append(survivors)
+                survivors = scoped(
+                    survivors.join(sem_hits, "keep_id", "left_anti")
+                )
             # vectors to index post-commit: only documents that actually
             # land in the store (re-derived from the FINAL survivors so
             # every later gate's drops are reflected). Persisted because
             # append_to_ivf_index runs several actions over it
             # (isEmpty, touched-cluster collect, anti-join stats, write)
             # and its lineage re-scans the embeddings side table.
-            sem_kept_vecs = sem_vecs.join(
+            sem_kept_vecs = scoped(sem_vecs.join(
                 broadcast(
                     survivors.select(
                         F.col("keep_id").alias("query_id")
@@ -1000,8 +1017,7 @@ def ingest_documents_stream(
             ).select(
                 F.col("query_id").alias("vec_id"),
                 F.col("q_vec").alias("embedding"),
-            ).persist()
-            _gate_persisted.append(sem_kept_vecs)
+            ))
         try:
             # Write order is the exactness argument: bloom partition
             # FIRST (a crash after it leaves the filter covering digests
@@ -1014,7 +1030,7 @@ def ingest_documents_stream(
             if bloom_store is not None:
                 # two consumers (filter write + doc write) -> persist;
                 # on the plain path the doc write is the only consumer
-                survivors = survivors.persist()
+                survivors = scoped(survivors)
                 from s3_access_logs_spark.functions.bloom import (
                     DEFAULT_NUM_BITS,
                     DEFAULT_NUM_HASHES,
@@ -1039,9 +1055,6 @@ def ingest_documents_stream(
                 from s3_access_logs_spark.operators.similarity import (
                     append_to_ivf_index,
                     build_ivf_index,
-                )
-                from s3_access_logs_spark.sources.fsutil import (
-                    has_data_files,
                 )
 
                 if has_data_files(sess, semantic_index):
@@ -1105,41 +1118,10 @@ def ingest_documents_stream(
                     sort_cols=("shard_order",),
                 )
         finally:
-            if bloom_store is not None:
-                survivors.unpersist()
-            if band_store is not None:
-                kept_ids.unpersist()
             for df_ in _gate_persisted:
                 df_.unpersist()
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(ingest_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _hive_batch_ids(spark: SparkSession, path: str) -> set[int]:
-    """The ``batch_id=<n>`` partition ids present under a store — one
-    directory listing, no data read (the grain compact_ingest_store
-    already walks)."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
-
-    fs, root = hadoop_fs(spark, path)
-    if not fs.exists(root):
-        return set()
-    out: set[int] = set()
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id="):
-            try:
-                out.add(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return out
+    return _run_batches(docs, checkpoint, available_now, ingest_batch)
 
 
 def backfill_bloom_store(
@@ -1148,11 +1130,10 @@ def backfill_bloom_store(
     bloom_store: str,
     num_bits: int | None = None,
     num_hashes: int | None = None,
-    base_batch_id: int = -1,
 ) -> None:
     """One-time filter backfill for a digest store that predates
     ``bloom_store``: build ONE Bloom filter over every digest already
-    committed and write it under ``batch_id=<base_batch_id>`` (negative,
+    committed and write it under the fold base ``batch_id=-1`` (negative,
     so it can never collide with a live micro-batch's replay exclusion —
     the same convention as ``compact_ingest_store``). After this,
     ``ingest_documents_stream(..., bloom_store=...)`` accepts the store
@@ -1167,14 +1148,10 @@ def backfill_bloom_store(
         bloom_build,
     )
 
-    if base_batch_id >= 0:
-        raise ValueError(
-            f"backfill_bloom_store: base_batch_id must be negative "
-            f"(streaming epochs count up from 0), got {base_batch_id}"
-        )
-    check_no_swap_residue(spark, store)
-    digests = spark.read.parquet(store).select("digest")
-    covered = [b for b in _hive_batch_ids(spark, store) if b >= 0]
+    digests = read_prior_batches(spark, store, "digest string").select(
+        "digest"
+    )
+    covered = [b for b in batch_leaves(spark, store) if b >= 0]
     base = bloom_build(
         digests,
         "digest",
@@ -1187,17 +1164,8 @@ def backfill_bloom_store(
         [(_COVER_MAX_BATCH, max(covered) if covered else -1)],
         "word bigint, bits bigint",
     )
-    # writer-scoped dynamic overwrite (the convention everywhere else):
-    # only the base partition is replaced, and shared session semantics
-    # are never flipped for later writes the user performs
-    (
-        base.unionByName(marker)
-        .withColumn("batch_id", F.lit(base_batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(bloom_store)
-    )
+    # only the base partition is replaced
+    write_batch_partition(base.unionByName(marker), FOLD_BASE_ID, bloom_store)
 
 
 def _sweep_orphan_markers(spark: SparkSession, store: str) -> None:
@@ -1218,7 +1186,7 @@ def _sweep_orphan_markers(spark: SparkSession, store: str) -> None:
         remove_partition_marker,
     )
 
-    live = _hive_batch_ids(spark, store)
+    live = set(batch_leaves(spark, store))
     for b in list_partition_markers(spark, store) - live:
         remove_partition_marker(spark, store, b)
 
@@ -1227,29 +1195,21 @@ def compact_ingest_store(
     spark: SparkSession,
     store: str,
     keep_recent: int = 1,
-    base_batch_id: int = -1,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Maintenance for the append-only stores ``ingest_documents_stream``
     grows (digest store, MinHash band store): every micro-batch appends
     one ``batch_id=<n>`` hive partition forever, so after N batches a
     probe join lists N directories of small files. This entry point FOLDS
-    committed history into a single ``batch_id=<base_batch_id>`` base
-    partition, deletes the folded partitions, then runs
+    committed history into a single ``batch_id=-1`` base partition,
+    deletes the folded partitions, then runs
     ``operators.etl.compact_partitions`` over the store so everything
     remaining obeys the target file size.
 
-    Replay-safety interaction (the reason ``keep_recent`` exists and
-    defaults to 1): ``ingest_batch`` excludes the CURRENT batch_id from
-    its store reads so an at-least-once replay never self-collides. Only
-    the single most recent micro-batch can be in that uncommitted state
-    (foreachBatch runs batches sequentially), so folding is safe for
-    every batch EXCEPT the newest — fold it and a replay would find its
-    own rows under the base id and silently drop the whole batch. With
-    the stream STOPPED (all batches committed) ``keep_recent=0`` is
-    legal. ``base_batch_id`` must be negative: streaming epoch ids count
-    up from 0, so a negative base can never collide with a live batch's
-    replay exclusion.
+    Replay safety: ``keep_recent`` (default 1) keeps the newest batches
+    out of the fold — the only ones a replay can still rewrite; ``0`` is
+    legal with the stream stopped (see ``sources.fsutil.fold_batch_store``,
+    the fold both this and :func:`compact_token_store` run).
 
     Crash posture (summing-store safe, object-store safe): the fold
     STAGES the combined base under ``_fold_staging`` and swaps it in by
@@ -1263,156 +1223,19 @@ def compact_ingest_store(
     partition (ADVICE r4). Returns
     ``{"folded": [...], "kept": [...], "compacted": [...]}``."""
     from s3_access_logs_spark.operators.etl import compact_partitions
-    from s3_access_logs_spark.sources.fsutil import (
-        FOLD_DIRS,
-        has_data_files,
-        recover_swaps,
-        swap_leaves,
-    )
 
-    if base_batch_id >= 0:
-        raise ValueError(
-            "base_batch_id must be negative (streaming batch ids count up "
-            "from 0; a non-negative base could collide with a live batch)"
-        )
-    if keep_recent < 0:
-        raise ValueError("keep_recent must be >= 0")
-    recover_swaps(spark, store)
-    # sweep BEFORE the empty-store return too: a crashed fold's rerun
-    # (or a claim that never wrote data) must not leak markers
-    _sweep_orphan_markers(spark, store)
-    if not has_data_files(spark, store):
-        return {"folded": [], "kept": [], "compacted": []}
-    # the shared listing helper, not a re-implementation: it skips
-    # non-numeric batch_id dirs (__HIVE_DEFAULT_PARTITION__, strays)
-    # instead of crashing the maintenance job on them
-    batch_ids = _hive_batch_ids(spark, store)
-    live = sorted(b for b in batch_ids if b != base_batch_id)
-    # max(0, ...): keep_recent larger than the live count must fold
-    # NOTHING, not wrap around a negative slice bound
-    folded = live[: max(0, len(live) - keep_recent)] if keep_recent else live
-    if not folded:
-        return {
-            "folded": [],
-            "kept": live,
-            "compacted": [c["partition"] for c in compact_partitions(
-                spark, store, target_file_bytes=target_file_bytes
-            )],
-        }
-    # STAGE the combined base outside the hive tree: readers (and a
-    # crashed run's rerun) never see a partial or duplicated fold.
-    history = spark.read.parquet(store).filter(
-        F.col("batch_id").isin([base_batch_id] + folded)
-    )
-    (
-        history.withColumn("batch_id", F.lit(base_batch_id))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{store.rstrip('/')}/{FOLD_DIRS[0]}")
-    )
-    swap_leaves(
-        spark, store,
-        [f"batch_id={b}" for b in [base_batch_id] + folded], FOLD_DIRS,
-    )
+    _, folded, kept = fold_batch_store(spark, store, keep_recent)
+    # after the fold, and on an empty store too: a fold retires ids, and
+    # a claim that never wrote data must not leak its marker
     _sweep_orphan_markers(spark, store)
     compacted = compact_partitions(
         spark, store, target_file_bytes=target_file_bytes
     )
     return {
         "folded": folded,
-        "kept": [b for b in live if b not in folded],
+        "kept": kept,
         "compacted": [c["partition"] for c in compacted],
     }
-
-
-def write_batch_partition(
-    df: DataFrame,
-    batch_id: int,
-    path: str,
-    allow_curate: bool = False,
-    extra_partition_cols: tuple[str, ...] = (),
-    sort_cols: tuple[str, ...] = (),
-) -> None:
-    """The ONE batch_id-partitioned store append every foreachBatch sink
-    (and curate_corpus's incremental appends) uses: the batch_id column
-    is stamped here and dynamic overwrite is scoped to THIS write, so an
-    at-least-once replay rewrites exactly its own partition and the
-    shared session's overwrite mode is never touched (ADVICE r4). One
-    place owns the store-write contract — compression, file-size bounds
-    or commit options change here, not in nine inline copies (review r5).
-
-    Ownership guard (review r5, both directions): ``curate_corpus``
-    stamps its partitions with a marker so a colliding streaming epoch
-    id cannot silently dynamic-overwrite curate-committed history — the
-    digests would vanish AND that batch's replay exclusion would hide
-    the loss, re-ingesting every curated document downstream. Stream
-    sinks therefore fail loudly here on a marked partition; curate's own
-    appends pass ``allow_curate=True`` (its entry check already
-    validated the id against foreign UNMARKED partitions). The check is
-    one driver-side ``exists`` per store write; markers are store-root
-    files stamped claim-first, so they survive the partition overwrite
-    itself and a writer's own replay always passes."""
-    from s3_access_logs_spark.sources.fsutil import partition_has_marker
-
-    if not allow_curate and partition_has_marker(
-        df.sparkSession, path, batch_id
-    ):
-        raise RuntimeError(
-            f"write_batch_partition: batch_id={batch_id} in {path!r} was "
-            "committed by curate_corpus (ownership marker present) — a "
-            "streaming epoch overwriting it would silently erase curated "
-            "history and re-ingest those documents as new. The stream's "
-            "checkpoint epoch has collided with a curate store_batch_id; "
-            "re-curate into a disjoint id range (e.g. far above the "
-            "stream's epoch counter), then fold the store "
-            "(compact_ingest_store retires the id's partition AND its "
-            f"store-root _curate_owned_{batch_id} marker) before "
-            "resuming the stream."
-        )
-    # extra_partition_cols nest OUTSIDE batch_id (round 10, the shard
-    # hand-off: shard=<s>/batch_id=<b> — consumers list shard dirs the
-    # way the batch export lays them out, and dynamic overwrite still
-    # rewrites exactly the replay's own (cols..., batch_id) leaves,
-    # which a deterministic replay reproduces bit-for-bit).
-    # sort_cols pin in-FILE row order: the sort must include the
-    # partition columns as its prefix, because the parquet writer
-    # REQUIRES (partition cols) ordering and inserts its own
-    # non-stable sort when the incoming order does not already satisfy
-    # it — a caller-side sort missing that prefix would be silently
-    # destroyed (found by the shard hand-off's permutation test).
-    out = df.withColumn("batch_id", F.lit(batch_id))
-    if sort_cols:
-        out = out.sortWithinPartitions(
-            *extra_partition_cols, "batch_id", *sort_cols
-        )
-    (
-        out.write.mode("overwrite")
-        .partitionBy(*extra_partition_cols, "batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
-
-
-def _read_prior_batches(
-    sess: SparkSession, path: str, empty_schema: str, batch_id: int
-) -> DataFrame:
-    """The ONE copy of the replay-safe store read every batch_id store
-    gate uses: committed history EXCLUDING the current batch_id.
-    foreachBatch is at-least-once — if an attempt wrote a store
-    partition and crashed before the checkpoint committed, the replay
-    would otherwise see the batch's OWN rows as history and self-collide
-    (for a dedup gate that silently drops the whole batch forever). A
-    store with no COMMITTED data files means "no history"; any other
-    read failure must surface — swallowing a transient error here would
-    re-ingest a batch as if nothing had been seen. The swap-residue
-    check runs FIRST: after a crashed maintenance op the trash may hold
-    the only copy of the history, and ``has_data_files`` cannot see it."""
-    from s3_access_logs_spark.sources.fsutil import has_data_files
-
-    check_no_swap_residue(sess, path)
-    if not has_data_files(sess, path):
-        return sess.createDataFrame([], empty_schema)
-    return sess.read.parquet(path).filter(F.col("batch_id") != batch_id)
 
 
 def ingest_assets_stream(
@@ -1465,18 +1288,16 @@ def ingest_assets_stream(
 
         fingerprint_fn = image_dhash
 
-    reader = spark.readStream.schema("asset_id long, payload binary")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    assets = reader.parquet(src)
+    assets = _read_files(
+        spark, "parquet", src, "asset_id long, payload binary",
+        max_files_per_trigger,
+    )
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
 
         def read_prior(path: str, empty_schema: str):
-            return _read_prior_batches(sess, path, empty_schema, batch_id)
+            return read_prior_batches(sess, path, empty_schema, batch_id)
 
         # NULL payloads out FIRST: md5(NULL) is NULL, NULL never equals
         # NULL in the anti-join, so such rows would re-ingest forever —
@@ -1549,14 +1370,7 @@ def ingest_assets_stream(
         else:
             write_batch_partition(survivors, batch_id, store)
 
-    writer = (
-        assets.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(ingest_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_batches(assets, checkpoint, available_now, ingest_batch)
 
 
 def track_frequencies_stream(
@@ -1611,8 +1425,6 @@ def track_frequencies_stream(
     different values fails loudly instead of silently mixing
     incompatible counter grids.
     """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from s3_access_logs_spark.functions.cms import (
         DEFAULT_DEPTH,
         DEFAULT_WIDTH,
@@ -1620,45 +1432,31 @@ def track_frequencies_stream(
         cms_build,
     )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(src)
+    docs = _read_files(spark, "json", src, _DOC_SCHEMA, max_files_per_trigger)
 
     def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
-        from s3_access_logs_spark.sources.fsutil import has_data_files
-
         w, d = width or DEFAULT_WIDTH, depth or DEFAULT_DEPTH
-        if has_data_files(sess, sketch_store):
-            meta = (
-                sess.read.parquet(sketch_store)
-                .filter(F.col("row") < 0)
-                .select("row", "col", "cnt")
-                .distinct()
-                .collect()
-            )
-            if meta:
-                ew, ed, _ = _read_meta(meta)
-                if (width is not None and width != ew) or (
-                    depth is not None and depth != ed
-                ):
-                    raise ValueError(
-                        f"track_frequencies_stream: store at "
-                        f"{sketch_store!r} was built with (width={ew}, "
-                        f"depth={ed}) but caller asked for ({width}, "
-                        f"{depth}) — sketches with different grids can "
-                        "never merge; drop the override or rebuild"
-                    )
-                w, d = ew, ed
+        meta = (
+            read_prior_batches(sess, sketch_store, _CMS_SCHEMA, batch_id)
+            .filter(F.col("row") < 0)
+            .select("row", "col", "cnt")
+            .distinct()
+            .collect()
+        )
+        if meta:
+            ew, ed, _ = _read_meta(meta)
+            if (width is not None and width != ew) or (
+                depth is not None and depth != ed
+            ):
+                raise ValueError(
+                    f"track_frequencies_stream: store at "
+                    f"{sketch_store!r} was built with (width={ew}, "
+                    f"depth={ed}) but caller asked for ({width}, "
+                    f"{depth}) — sketches with different grids can "
+                    "never merge; drop the override or rebuild"
+                )
+            w, d = ew, ed
         tokens = batch_df.select(
             F.explode(F.split(F.col("text"), r"\s+")).alias("token")
         ).filter(F.col("token") != "")
@@ -1674,14 +1472,7 @@ def track_frequencies_stream(
             )
             write_batch_partition(top, batch_id, candidates_store)
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sketch_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_batches(docs, checkpoint, available_now, sketch_batch)
 
 
 def track_profile_stream(
@@ -1706,26 +1497,13 @@ def track_profile_stream(
     the corpus). Dynamic-overwrite partitioning gives the same replay
     idempotency as the other stores; mismatched ``k`` against existing
     partitions fails loudly at read time (quantile_sketch_merge)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from s3_access_logs_spark.functions.quantile import (
         quantile_sketch_build,
     )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(src)
+    docs = _read_files(spark, "json", src, _DOC_SCHEMA, max_files_per_trigger)
 
     def profile_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         sk = quantile_sketch_build(
             batch_df.withColumn("_len", F.length("text")),
             "_len",
@@ -1734,14 +1512,7 @@ def track_profile_stream(
         )
         write_batch_partition(sk, batch_id, profile_store)
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(profile_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_batches(docs, checkpoint, available_now, profile_batch)
 
 
 def profile_quantiles(
@@ -1756,8 +1527,9 @@ def profile_quantiles(
         quantile_values,
     )
 
-    check_no_swap_residue(spark, profile_store)
-    store = spark.read.parquet(profile_store).select("h", "v")
+    store = read_prior_batches(
+        spark, profile_store, "h bigint, v double"
+    ).select("h", "v")
     return quantile_values(quantile_sketch_merge(store), qs)
 
 
@@ -1780,9 +1552,10 @@ def frequency_estimates(
     # stream age (327k rows x batches at default size) while the merged
     # sketch is one bounded grid forever — cms_merge's per-counter SUM
     # is exactly the fold, and linearity makes the estimates identical
-    check_no_swap_residue(spark, sketch_store)
     rows = cms_merge(
-        spark.read.parquet(sketch_store).select("row", "col", "cnt")
+        read_prior_batches(spark, sketch_store, _CMS_SCHEMA).select(
+            "row", "col", "cnt"
+        )
     ).collect()
     return cms_estimate(df, col, rows, result_col)
 
@@ -1798,9 +1571,8 @@ def heavy_hitters(
     against the merged sketch, ordered by estimated count. Exactness
     caveats inherit from :func:`track_frequencies_stream`: estimates are
     overestimates, and a key never locally-top in any batch is absent."""
-    check_no_swap_residue(spark, candidates_store)
     cands = (
-        spark.read.parquet(candidates_store)
+        read_prior_batches(spark, candidates_store, "token string")
         .select("token")
         .distinct()
     )
@@ -1824,43 +1596,10 @@ def dedup_request_stream(parsed: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def _token_store_leaves(
-    spark: SparkSession, store: str
-) -> dict[str, set[int]]:
-    """The ``shard=<s>/batch_id=<b>`` leaves of a streaming token
-    store: shard dir name → batch ids under it. One two-level listing,
-    no data read; non-hive strays and non-numeric batch dirs are
-    skipped (the ``_hive_batch_ids`` rule, one level down)."""
-    from s3_access_logs_spark.sources.fsutil import hadoop_fs
-
-    fs, root = hadoop_fs(spark, store)
-    if not fs.exists(root):
-        return {}
-    out: dict[str, set[int]] = {}
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not st.isDirectory() or not (
-            name.startswith("shard=")
-            or name == "__HIVE_DEFAULT_PARTITION__"
-        ):
-            continue
-        ids: set[int] = set()
-        for kid in fs.listStatus(st.getPath()):
-            kname = kid.getPath().getName()
-            if kid.isDirectory() and kname.startswith("batch_id="):
-                try:
-                    ids.add(int(kname.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        out[name] = ids
-    return out
-
-
 def compact_token_store(
     spark: SparkSession,
     store: str,
     keep_recent: int = 1,
-    base_batch_id: int = -1,
 ) -> dict:
     """Maintenance for the STREAMING token shard store (round 12,
     VERDICT r11 item 3): ``ingest_documents_stream(shard_store=...)``
@@ -1868,7 +1607,7 @@ def compact_token_store(
     micro-batch forever, so months of streaming list N_batches dirs of
     small files under every shard — the small-files blowup the batch
     store (one ``shard=<s>`` dir, one file) never has. This folds
-    committed batches into a single ``batch_id=<base_batch_id>`` base
+    committed batches into a single ``batch_id=-1`` base
     leaf per shard — ONE file per shard, rows in ``shard_order`` like
     the stream's own files — leaving the store bit-equivalent for
     every consumer: ``repack_epoch`` ignores ``batch_id`` and the
@@ -1878,37 +1617,16 @@ def compact_token_store(
     capability survives compaction). The root
     ``_token_store_meta.json`` sidecar is never touched.
 
-    Replay safety is :func:`compact_ingest_store`'s rule verbatim:
-    only the newest batch can be in the uncommitted-replay window, so
-    ``keep_recent`` defaults to 1 (0 is legal with the stream
-    stopped); ``base_batch_id`` must be negative so it can never
-    collide with a live epoch's dynamic-overwrite leaves. Crash
-    posture is the stage-and-swap protocol of ``sources.fsutil``
-    (``recover_swaps`` first, then ``swap_leaves`` over the two-level
-    ``shard=<s>/batch_id=<b>`` leaves). Token-store rows are
+    Replay safety and crash posture are :func:`compact_ingest_store`'s:
+    the same fold (``sources.fsutil.fold_batch_store``), here over the
+    two-level ``shard=<s>/batch_id=<b>`` leaves. Token-store rows are
     set-semantics (one row per (doc_id, digest-gated ingest)), so
     even the linear-store concern does not arise. Returns
     ``{"folded": [...], "kept": [...]}`` (global batch ids)."""
-    from s3_access_logs_spark.sources.fsutil import (
-        FOLD_DIRS,
-        has_data_files,
-        recover_swaps,
-        swap_leaves,
+    leaves, folded, kept = fold_batch_store(
+        spark, store, keep_recent, ("shard",), ("shard_order", "doc_id")
     )
-
-    if base_batch_id >= 0:
-        raise ValueError(
-            "base_batch_id must be negative (streaming batch ids count "
-            "up from 0; a non-negative base could collide with a live "
-            "batch)"
-        )
-    if keep_recent < 0:
-        raise ValueError("keep_recent must be >= 0")
-    recover_swaps(spark, store)
-    if not has_data_files(spark, store):
-        return {"folded": [], "kept": []}
-    leaves = _token_store_leaves(spark, store)
-    if not leaves or not any(leaves.values()):
+    if not leaves and has_data_files(spark, store):
         # shard dirs holding plain files (no batch_id children) ARE the
         # already-compact batch layout; no shard dirs at all means this
         # is not a token store
@@ -1918,40 +1636,4 @@ def compact_token_store(
             "write_token_store layout (already one dir per shard, "
             "nothing to fold) or not a token store at all"
         )
-    all_ids = sorted(set().union(*leaves.values()))
-    live = [b for b in all_ids if b != base_batch_id]
-    folded = (
-        live[: max(0, len(live) - keep_recent)] if keep_recent else live
-    )
-    if not folded:
-        return {"folded": [], "kept": live}
-    # STAGE the combined per-shard base outside the hive tree. One job
-    # over only the folded batches' bytes; repartition keys each shard
-    # to one writer task -> exactly one file per shard leaf, in-file
-    # rows in the stream's own (shard_order, doc_id) order.
-    history = spark.read.parquet(store).filter(
-        F.col("batch_id").isin([base_batch_id] + folded)
-    )
-    n_shards = max(1, len(leaves))
-    (
-        history.withColumn("batch_id", F.lit(base_batch_id))
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions(
-            "shard", "batch_id", "shard_order", "doc_id"
-        )
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .partitionBy("shard", "batch_id")
-        .parquet(f"{store.rstrip('/')}/{FOLD_DIRS[0]}")
-    )
-    swap_leaves(
-        spark, store,
-        [
-            f"{sh}/batch_id={b}"
-            for sh, ids in leaves.items()
-            for b in [base_batch_id] + folded
-            if b in ids
-        ],
-        FOLD_DIRS,
-    )
-    return {"folded": folded, "kept": [b for b in live if b not in folded]}
+    return {"folded": folded, "kept": kept}

@@ -2146,10 +2146,16 @@ class TestTokenStoreEpochs:
         assert m1["merges_md5"] == merges_fingerprint(
             list(B.default_merges())
         )
+        # batch-built stores record their curriculum capability like
+        # stream-built ones (a missing key reads as "sourceless")
+        assert m1["has_source"] is True
         s2 = str(tmp_path / "s2")
-        write_token_store(docs, s2, n_shards=2, merges=_fit_merges())
+        write_token_store(
+            docs.drop("source"), s2, n_shards=2, merges=_fit_merges()
+        )
         m2 = read_json_sidecar(spark, s2, TOKEN_STORE_META)
         assert m2["merges_md5"] != m1["merges_md5"]
+        assert m2["has_source"] is False
         # the fingerprint hashes the TABLE, not the concatenations
         assert merges_fingerprint([("a", "b"), ("ab", "c")]) != (
             merges_fingerprint([("a", "bc")])

@@ -955,8 +955,6 @@ class TestIngestStoreMaintenance:
 
         from s3_access_logs_spark.streaming import compact_ingest_store
 
-        with pytest.raises(ValueError, match="negative"):
-            compact_ingest_store(spark, str(tmp_path / "s"), base_batch_id=0)
         with pytest.raises(ValueError, match="keep_recent"):
             compact_ingest_store(spark, str(tmp_path / "s"), keep_recent=-1)
         # empty / never-written store is a no-op, not a crash
@@ -1495,8 +1493,6 @@ class TestTokenStoreCompaction:
         )
 
         shards = self._stream_store(spark, tmp_path)
-        with pytest.raises(ValueError, match="negative"):
-            compact_token_store(spark, shards, base_batch_id=0)
         with pytest.raises(ValueError, match=">= 0"):
             compact_token_store(spark, shards, keep_recent=-1)
         # keep_recent=1 (the live-stream default) folds all but the
@@ -2741,6 +2737,12 @@ class TestSwapResidueGuard:
         shutil.move(f"{store}/batch_id=0", f"{store}/{trash}/batch_id=0")
         with pytest.raises(RuntimeError, match=f"residue \\({trash}\\)"):
             _read_prior_batches(spark, store, "digest string", 99)
+        # curate's digest gate reads history through the same helper
+        from s3_access_logs_spark.operators.curate import curate_corpus
+
+        docs = spark.createDataFrame([(1, "alpha")], "doc_id long, text string")
+        with pytest.raises(RuntimeError, match=f"residue \\({trash}\\)"):
+            curate_corpus(docs, digest_store=store)[0].collect()
 
 
 class TestShardStoreTokenizerSwitch:
