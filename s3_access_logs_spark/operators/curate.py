@@ -6,8 +6,10 @@ and the survivor write costs one more pass — never one job per stage.
 
 Every stage reuses the tested single-purpose operators (operators.dedup,
 functions.text, functions.lm, operators.quality_classifier); this module
-adds only the sequencing, the waterfall accounting, and the persist that
-keeps the two consumers (report + output) from recomputing the lineage.
+adds only the sequencing, the waterfall accounting, and the scoped cache
+that keeps the two consumers (report + output) from recomputing the
+lineage. The sequencing (``_stage_flags``) is the package's one gate
+stack: every streaming ingest micro-batch runs it too.
 
 Waterfall semantics: a document counts against the FIRST stage that
 rejects it, in the fixed order above — the numbers answer "what did each
@@ -17,16 +19,22 @@ the survivors equals the input row count exactly.
 
 from __future__ import annotations
 
+import inspect
+from collections.abc import Callable
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from s3_access_logs_spark.functions.text import lang_id, quality_score
 from s3_access_logs_spark.operators.dedup import (
+    bloom_maybe_seen,
     dedup_clusters,
     first_duplicate_id,
     ngram_overlap,
     normalized_digest,
 )
+from s3_access_logs_spark.session import scoped_cache
 
 STAGES = (
     "empty",
@@ -154,7 +162,8 @@ def curate_corpus(
     score gate), ``langs`` (allow-list), ``scripts`` (dominant-Unicode-
     script allow-list, functions.text.dominant_script — the wordlist-
     free multilingual gate), ``lm_model`` + ``max_xent``
-    (bigram-LM cross-entropy gate, functions.lm), ``classifier`` +
+    (bigram-LM cross-entropy gate, functions.lm; documents are scored
+    per ``(id, text)`` pair), ``classifier`` +
     ``min_prob`` (trained quality model, operators.quality_classifier),
     ``near_dup`` (MinHash+LSH cluster keep-first), ``drop_contained`` +
     ``containment_threshold`` (asymmetric subset-dup removal,
@@ -193,9 +202,9 @@ def curate_corpus(
     handling is the documented per-consumer contract). Pass False on
     perf-critical reruns where the key is enforced upstream.
 
-    TRANSFORM options rewrite the text before any gate (same order as
-    the streaming ingest): ``html`` (strip_html), ``normalize``
-    (NFKC + mojibake repair), ``line_clean`` (line-furniture removal)
+    TRANSFORM options rewrite the text before any gate: ``html``
+    (strip_html), ``normalize`` (NFKC + mojibake repair),
+    ``line_clean`` (line-furniture removal)
     with ``min_line_ratio`` dropping documents whose kept-line fraction
     fell below the bar — measured before the rewrite — and
     ``boilerplate_min_docs`` cutting lines shared by that many distinct
@@ -204,7 +213,8 @@ def curate_corpus(
 
     INCREMENTAL mode (VERDICT r4 item 5): ``digest_store`` /
     ``band_store`` point the exact-dup and near-dup stages at the same
-    append-only hive stores the streaming ingest maintains
+    append-only hive stores the streaming ingest maintains — each
+    stream micro-batch runs this very stage list
     (streaming/pipeline.py:ingest_documents_stream), so a daily crawl
     batch curates against corpus HISTORY, not just itself. A document
     whose normalized digest is already committed drops as ``exact_dup``
@@ -250,6 +260,12 @@ def curate_corpus(
     # materializes survivors (``dst``/``store_batch_id``): those paths
     # already reuse the scoped flags cache, and deferring would ADD an
     # execution rather than remove one.
+    # every parameter but these four is an option of the stage list
+    stage_options = {
+        k: v
+        for k, v in locals().items()
+        if k not in ("docs", "dst", "verify_unique_ids", "_observe_report")
+    }
     if _observe_report and (dst is not None or store_batch_id is not None):
         _observe_report = False
     # cheap (driver-only / metadata-only) argument validation FIRST
@@ -305,396 +321,12 @@ def curate_corpus(
                 "verify_unique_ids=False if the key is enforced "
                 "upstream"
             )
-    # TRANSFORM stages (same order as the streaming ingest: markup off,
-    # then byte canonicalization, then line furniture) — every gate
-    # below, the stored digest included, sees the cleaned text, and
-    # survivors carry it. ``min_line_ratio`` turns line-cleaning loss
-    # into a drop gate: a page that was mostly furniture is not made
-    # good by deleting its furniture.
-    if html:
-        from s3_access_logs_spark.functions.text import strip_html
-
-        docs = docs.withColumn(text_col, strip_html(text_col))
-    if normalize:
-        from s3_access_logs_spark.functions.text import normalize_unicode
-
-        docs = normalize_unicode(docs, text_col=text_col)
-    _line_ratio = None
-    if line_clean:
-        from s3_access_logs_spark.functions.text import (
-            clean_lines,
-            line_kept_ratio,
-        )
-
-        # ratio measured BEFORE the rewrite (afterwards every doc keeps
-        # 100% of its remaining lines by construction)
-        _line_ratio = line_kept_ratio(text_col)
-        docs = docs.withColumn("_line_ratio", _line_ratio).withColumn(
-            text_col, clean_lines(text_col)
-        )
-    if boilerplate_min_docs is not None:
-        from s3_access_logs_spark.operators.dedup import (
-            drop_boilerplate_lines,
-        )
-
-        # the one transform that is corpus-wide rather than in-row (its
-        # line-hash count is a shuffle — cost stated in its docstring);
-        # runs LAST so per-document cleaners have already removed local
-        # noise before lines are compared across documents
-        docs = drop_boilerplate_lines(
-            docs,
-            id_col=id_col,
-            text_col=text_col,
-            min_docs=boilerplate_min_docs,
-        )
-    flags = docs
-    # NULL/blank text first and explicitly: every later gate compares
-    # against NULL (quality_score(NULL) < t is NULL, which the waterfall
-    # reads as "passed"), so without this stage empty documents would
-    # slip through the whole stack and land in the output
-    flags = flags.withColumn(
-        "_f_empty",
-        F.col(text_col).isNull() | (F.trim(F.col(text_col)) == ""),
-    )
-    flags = flags.withColumn(
-        "_f_line_ratio",
-        (
-            (F.col("_line_ratio") < min_line_ratio)
-            & ~F.col("_f_empty")
-        )
-        if min_line_ratio is not None
-        else F.lit(False),
-    )
-    flags = flags.withColumn(
-        "_f_quality",
-        (quality_score(text_col) < min_quality)
-        if min_quality is not None
-        else F.lit(False),
-    )
-    flags = flags.withColumn(
-        "_f_language",
-        (~lang_id(text_col).isin(*langs))
-        if langs is not None
-        else F.lit(False),
-    )
-    if scripts is not None:
-        from s3_access_logs_spark.functions.text import dominant_script
-
-        flags = flags.withColumn(
-            "_f_script", ~dominant_script(text_col).isin(*scripts)
-        )
-    else:
-        flags = flags.withColumn("_f_script", F.lit(False))
-    if lm_model is not None and max_xent is not None:
-        from s3_access_logs_spark.functions.lm import perplexity_score
-
-        ppl = perplexity_score(
-            docs, lm_model, text_col=text_col, id_col=id_col
-        ).select(id_col, "xent")
-        flags = flags.join(ppl, id_col, "left").withColumn(
-            # no bigram evidence (NULL xent) passes — don't reject on
-            # absence of signal
-            "_f_perplexity",
-            F.coalesce(F.col("xent") > max_xent, F.lit(False)),
-        ).drop("xent")
-    else:
-        flags = flags.withColumn("_f_perplexity", F.lit(False))
-    if classifier is not None:
-        from s3_access_logs_spark.operators.quality_classifier import (
-            score_quality,
-        )
-
-        flags = score_quality(
-            flags, classifier, text_col=text_col
-        ).withColumn(
-            "_f_classifier", F.col("quality_prob") < min_prob
-        ).drop("quality_prob")
-    else:
-        flags = flags.withColumn("_f_classifier", F.lit(False))
-    # Contamination is COMPUTED before the dedup stages (attribution
-    # order in STAGES is unchanged): it is a per-document property, and
-    # a contaminated document must not elect itself keeper/superset —
-    # the benchmark-bearing superset would otherwise drop its clean
-    # subset and then be dropped itself, erasing the content entirely.
-    if benchmark is not None:
-        dirty = ngram_overlap(
-            docs, benchmark, id_col=id_col, text_col=text_col
-        ).filter(F.col("overlap") >= max_overlap).select(
-            F.col("id").alias(id_col), F.lit(True).alias("_hit")
-        )
-        flags = flags.join(dirty, id_col, "left").withColumn(
-            "_f_contaminated", F.coalesce(F.col("_hit"), F.lit(False))
-        ).drop("_hit")
-    else:
-        flags = flags.withColumn("_f_contaminated", F.lit(False))
-    # Exact-dup keeper election — among rows passing the per-document
-    # gates, not blindly by min id: normalized_digest collapses case and
-    # whitespace, so digest-sharing rows are NOT byte-identical and can
-    # get different verdicts from the case/line-sensitive gates
-    # (line_ratio's kept-line measure, uppercase-sensitive quality/
-    # script checks). A blind min-id keeper could fail such a gate while
-    # its passing variant was dropped as exact_dup — erasing the content
-    # entirely, the exact failure mode the near_dup/contained stages are
-    # structured to avoid (ADVICE r4). Ordering each digest group by
-    # "fails any per-document gate" first and id second makes the keeper
-    # the min-id PASSING row; when the whole group fails, min id wins
-    # and attribution lands on the real gate.
-    _doc_gates = [
-        s
-        for s in STAGES
-        if s not in ("exact_dup", "near_dup", "contained", "semantic")
-    ]
-    gate_fail = F.lit(False)
-    for s in _doc_gates:
-        gate_fail = gate_fail | F.col(f"_f_{s}")
-    flags = flags.withColumn("_gate_fail", gate_fail.cast("int"))
-    w = Window.partitionBy(normalized_digest(F.col(text_col))).orderBy(
-        "_gate_fail", id_col
-    )
-    flags = flags.withColumn(
-        "_f_exact_dup",
-        (F.row_number().over(w) > 1) & ~F.col("_f_empty"),
-    ).drop("_gate_fail")
-    if digest_store is not None:
-        # history gate: a digest already committed to the store drops the
-        # WHOLE batch group (keeper included — history holds the keeper).
-        # Replay safety mirrors the streaming read: the current batch's
-        # own partition is excluded so a rerun never self-collides.
-        from s3_access_logs_spark.sources.fsutil import read_prior_batches
-
-        seen = (
-            read_prior_batches(
-                docs.sparkSession, digest_store, "digest string",
-                store_batch_id,
-            )
-            .select(F.col("digest").alias("_seen_digest"))
-            .distinct()
-            .withColumn("_seen", F.lit(True))
-        )
-        flags = (
-            flags.withColumn("_digest", normalized_digest(F.col(text_col)))
-            .join(seen, F.col("_digest") == F.col("_seen_digest"), "left")
-            .withColumn(
-                "_f_exact_dup",
-                F.col("_f_exact_dup")
-                | (
-                    F.coalesce(F.col("_seen"), F.lit(False))
-                    & ~F.col("_f_empty")
-                ),
-            )
-            .drop("_seen_digest", "_seen", "_digest")
-        )
-    # The dedup stages run over the SURVIVORS of every other gate, not
-    # the raw corpus: clustering raw docs could elect a keeper (min-id
-    # representative / containment superset) that another gate already
-    # rejected, dropping every member of the group and erasing the
-    # content entirely.
-    _pre_dedup = [
-        s for s in STAGES if s not in ("near_dup", "contained", "semantic")
-    ]
-    eligible_pred = F.lit(True)
-    for s in _pre_dedup:
-        eligible_pred = eligible_pred & ~F.col(f"_f_{s}")
-    # ONE scoped persist of the pre-dedup flags frame covers everything
-    # downstream: the dedup stages filter it (their several input scans
-    # hit the cache), the report aggregates it, and the dst write reads
-    # it — the whole gate stack (LM join included) executes once per
-    # call. Both dedup RESULTS are lineage-truncated (CC checkpoints
-    # internally; the contained-id set localCheckpoints eagerly below),
-    # so the cache can release before returning and the survivors frame
-    # never re-enters the expensive stages.
-    _scoped: list[DataFrame] = []
-    # ONE try/finally covers the whole stage + report + write sequence:
-    # every scoped persist is released on ANY exit — a failing stage
+    # ONE scoped cache covers the whole stage + report + write
+    # sequence: every persist is released on ANY exit — a failing stage
     # (ragged vector, store error) must not pin the cached gate stack
     # in executor storage for the session lifetime (review r5).
-    # localCheckpointed intermediates (store_hits/contained/dropped_sem)
-    # are NOT in _scoped: on success the survivors' lineage references
-    # them (the whole point of the truncation), and on failure the
-    # ContextCleaner reclaims them when the frames go unreferenced —
-    # explicit release here would corrupt the success path.
-    try:
-        if (
-            near_dup
-            or drop_contained
-            or band_store is not None
-            or embeddings is not None
-        ):
-            flags = flags.persist()
-            _scoped.append(flags)
-        _bands_for_append = None
-        if band_store is not None:
-            # history near-dup gate BEFORE within-batch clustering: a doc
-            # colliding with the stored bands must drop, and excluding it
-            # from the clustering below keeps it from being elected a
-            # keeper whose batch-mates vanish with it.
-            from s3_access_logs_spark.operators.dedup import (
-                near_dup_incremental,
-            )
-            from s3_access_logs_spark.sources.fsutil import (
-                read_prior_batches,
-            )
-
-            seen_bands = read_prior_batches(
-                docs.sparkSession, band_store,
-                "id long, band_idx int, band_key string", store_batch_id,
-            ).select("id", "band_idx", "band_key")
-            eligible0 = flags.filter(eligible_pred).select(id_col, text_col)
-            hits, _bands_for_append = near_dup_incremental(
-                eligible0, seen_bands, id_col=id_col, text_col=text_col
-            )
-            store_hits = (
-                hits.select(F.col("new_id").alias(id_col))
-                .distinct()
-                .withColumn("_bhit", F.lit(True))
-                .localCheckpoint()
-            )
-            flags = flags.join(store_hits, id_col, "left").withColumn(
-                "_f_near_dup_store",
-                F.coalesce(F.col("_bhit"), F.lit(False)),
-            ).drop("_bhit")
-        else:
-            flags = flags.withColumn("_f_near_dup_store", F.lit(False))
-        if near_dup:
-            eligible = flags.filter(
-                eligible_pred & ~F.col("_f_near_dup_store")
-            ).select(id_col, text_col)
-            clusters = dedup_clusters(
-                eligible, id_col=id_col, text_col=text_col
-            )
-            flags = flags.join(clusters, id_col, "left").withColumn(
-                "_f_near_dup",
-                F.coalesce(
-                    F.col("cluster_id") != F.col(id_col), F.lit(False)
-                ),
-            ).drop("cluster_id")
-        else:
-            flags = flags.withColumn("_f_near_dup", F.lit(False))
-        flags = flags.withColumn(
-            "_f_near_dup", F.col("_f_near_dup") | F.col("_f_near_dup_store")
-        ).drop("_f_near_dup_store")
-        if drop_contained:
-            from s3_access_logs_spark.operators.dedup import containment_pairs
-
-            eligible2 = flags.filter(
-                eligible_pred & ~F.col("_f_near_dup")
-            ).select(id_col, text_col)
-            contained = (
-                containment_pairs(
-                    eligible2,
-                    id_col=id_col,
-                    text_col=text_col,
-                    threshold=containment_threshold,
-                )
-                .select(F.col("contained_id").alias(id_col))
-                .distinct()
-                .withColumn("_sub", F.lit(True))
-                .localCheckpoint()
-            )
-            flags = flags.join(contained, id_col, "left").withColumn(
-                "_f_contained", F.coalesce(F.col("_sub"), F.lit(False))
-            ).drop("_sub")
-        else:
-            flags = flags.withColumn("_f_contained", F.lit(False))
-        if embeddings is not None:
-            from s3_access_logs_spark.operators.similarity import (
-                kmeans_fit,
-                semantic_dedup,
-            )
-
-            # keeper election among GATE-PASSING docs only (the shared
-            # dedup-stage pattern): a doc may only be dominated by a doc
-            # that itself survives every earlier stage, so dropping it
-            # never erases content whose canonical copy was rejected
-            eligible3 = flags.filter(
-                eligible_pred
-                & ~F.col("_f_near_dup")
-                & ~F.col("_f_contained")
-            ).select(id_col)
-            # persisted: the frame below is read by the nlist sizing job,
-            # every kmeans iteration, and three references inside the dedup
-            # self-join plan — without the cache each would re-scan the
-            # embeddings source and re-run the join (review r5). NULL
-            # and zero-length vectors are out here, not downstream: a
-            # doc whose embedding row carries no usable vector has no
-            # signal — it passes, same as a doc with no row at all (and
-            # a frame with none must skip the fit, not crash it —
-            # review r5)
-            cand = eligible3.join(
-                embeddings.filter(
-                    F.col(emb_col).isNotNull()
-                    & (F.size(F.col(emb_col)) > 0)
-                ).select(
-                    F.col(emb_id_col).alias(id_col),
-                    F.col(emb_col).alias("_emb"),
-                ),
-                id_col,
-            ).persist()
-            _scoped.append(cand)
-            cents = semantic_centroids
-            if cents is None:
-                # ~sqrt(n) clusters (standard IVF sizing) keeps every
-                # within-cluster pair block sub-quadratic. The auto-sized
-                # fit passes allow_fewer: kmeans clamps k to the distinct
-                # seeds its own seed collect finds, so duplicate-heavy
-                # embeddings (SemDeDup's primary target) size the quantizer
-                # down — no crash, and no extra distinct pass (review r5).
-                # An EXPLICIT semantic_nlist keeps kmeans' loud too-few-
-                # distinct-vectors error: silently coarsening a user-chosen
-                # quantizer would hide a misconfiguration.
-                n_emb = cand.count()
-                if n_emb > 0:
-                    k = semantic_nlist or max(1, int(n_emb**0.5))
-                    cents = kmeans_fit(
-                        cand,
-                        k,
-                        vec_col="_emb",
-                        allow_fewer=semantic_nlist is None,
-                    )
-                # empty cand skips the stage SILENTLY even with an
-                # explicit nlist: emptiness has benign causes a raise
-                # would misfire on — an empty batch, every doc dropped
-                # by an earlier gate (routine in incremental mode), or
-                # eligible docs simply having no embedding rows (the
-                # documented pass condition). Distinguishing those from
-                # an all-NULL embeddings frame would cost extra jobs;
-                # the loud misconfiguration error stays where kmeans
-                # can actually detect it — usable vectors exist but
-                # fewer distinct than the explicitly requested k
-                # (review r5, twice).
-            if cents is None:  # no eligible embeddings: nothing to judge
-                flags = flags.withColumn("_f_semantic", F.lit(False))
-            else:
-                # distinct BEFORE the join back (the contained/store_hits
-                # pattern): duplicate embedding rows for one id would fan
-                # the flags join out and inflate the waterfall past the
-                # "dropped + survivors == input" invariant (review r5)
-                dropped_sem = (
-                    semantic_dedup(
-                        cand,
-                        threshold=semantic_threshold,
-                        id_col=id_col,
-                        vec_col="_emb",
-                        centroids=cents,
-                    )
-                    .filter(~F.col("keep"))
-                    .select(F.col("id").alias(id_col))
-                    .distinct()
-                    .withColumn("_sem", F.lit(True))
-                    .localCheckpoint()
-                )
-                flags = flags.join(dropped_sem, id_col, "left").withColumn(
-                    "_f_semantic", F.coalesce(F.col("_sem"), F.lit(False))
-                ).drop("_sem")
-        else:
-            flags = flags.withColumn("_f_semantic", F.lit(False))
-        # waterfall attribution: first failing stage wins
-        verdict = F.lit("kept")
-        for stage in reversed(STAGES):
-            verdict = F.when(F.col(f"_f_{stage}"), F.lit(stage)).otherwise(
-                verdict
-            )
-        flags = flags.withColumn("_verdict", verdict)
+    with scoped_cache() as cache:
+        flags, batch_bands = _stage_flags(docs, cache, **stage_options)
         stage_counts = None
         if _observe_report:
             # per-stage counts observed below the survivor filter: the
@@ -729,7 +361,7 @@ def curate_corpus(
             # lineage-truncated internally, so the survivor pass that
             # follows re-derives only the cheap column flags either way.
             if dst is not None or store_batch_id is not None:
-                flags = flags.persist()
+                flags = cache(flags)
             rows = (
                 flags.groupBy(F.col("_verdict").alias("stage"))
                 .agg(F.count("*").alias("dropped"))
@@ -756,7 +388,7 @@ def curate_corpus(
                 )
             if band_store is not None:
                 _claimed_append(
-                    _bands_for_append.join(
+                    batch_bands.join(
                         survivors.select(F.col(id_col).alias("id")), "id"
                     ),
                     store_batch_id,
@@ -770,13 +402,445 @@ def curate_corpus(
             # corpus lands where a 100 TB run wants it anyway
             survivors.write.mode("overwrite").parquet(dst)
             survivors = docs.sparkSession.read.parquet(dst)
-    finally:
-        flags.unpersist()  # no-op in the _observe_report path
-        for df_ in _scoped:
-            df_.unpersist()
     if stage_counts is not None:
         return survivors, stage_counts
     report = docs.sparkSession.createDataFrame(
         rows or [], "stage string, dropped bigint"
     )
     return survivors, report
+
+
+def _stage_flags(
+    docs: DataFrame,
+    cache: Callable[[DataFrame], DataFrame],
+    scrub_pii: bool = False,
+    digest_bloom: list | None = None,
+    **options,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The one gate stack, shared by :func:`curate_corpus` and every
+    streaming ingest micro-batch (streaming/pipeline.py). Returns
+    ``(flags, batch_bands)``: ``docs`` (text transformed) with one
+    ``_f_<stage>`` column per STAGES entry and the first-failing-stage
+    ``_verdict`` (``'kept'`` for survivors), plus the batch's MinHash
+    band rows when ``band_store`` is given (append only the survivors'
+    — None otherwise). ``options`` are :func:`curate_corpus`'s keyword
+    arguments, with its defaults; ``cache`` is the caller's
+    :func:`session.scoped_cache`, so the caller decides when the
+    persists taken here are released. Reads of the stores
+    exclude ``store_batch_id`` (replay safety); appends are the
+    caller's.
+
+    Two inputs only the stream sets: ``scrub_pii`` redacts emails/IPs/
+    digit-runs AFTER the per-document gates and BEFORE the digest (two
+    crawls of one page differing only in session tokens dedup as one
+    document; the gates score the unredacted text), and
+    ``digest_bloom`` (collected rows of a functions.bloom filter over
+    the digest store) changes only how the digest-history stage finds
+    its seen digests: the store is semi-joined to the broadcast
+    maybe-seen set, scanned but never shuffled."""
+    bound = inspect.signature(curate_corpus).bind_partial(**options)
+    bound.apply_defaults()
+    o = SimpleNamespace(**bound.arguments)
+    id_col, text_col = o.id_col, o.text_col
+    # TRANSFORM stages (markup off, then byte canonicalization, then
+    # line furniture) — every gate below, the stored digest included,
+    # sees the cleaned text, and survivors carry it. ``min_line_ratio``
+    # turns line-cleaning loss into a drop gate: a page that was mostly
+    # furniture is not made good by deleting its furniture.
+    if o.html:
+        from s3_access_logs_spark.functions.text import strip_html
+
+        docs = docs.withColumn(text_col, strip_html(text_col))
+    if o.normalize:
+        from s3_access_logs_spark.functions.text import normalize_unicode
+
+        docs = normalize_unicode(docs, text_col=text_col)
+    _line_ratio = None
+    if o.line_clean:
+        from s3_access_logs_spark.functions.text import (
+            clean_lines,
+            line_kept_ratio,
+        )
+
+        # ratio measured BEFORE the rewrite (afterwards every doc keeps
+        # 100% of its remaining lines by construction)
+        _line_ratio = line_kept_ratio(text_col)
+        docs = docs.withColumn("_line_ratio", _line_ratio).withColumn(
+            text_col, clean_lines(text_col)
+        )
+    if o.boilerplate_min_docs is not None:
+        from s3_access_logs_spark.operators.dedup import (
+            drop_boilerplate_lines,
+        )
+
+        # the one transform that is corpus-wide rather than in-row (its
+        # line-hash count is a shuffle — cost stated in its docstring);
+        # runs LAST so per-document cleaners have already removed local
+        # noise before lines are compared across documents
+        docs = drop_boilerplate_lines(
+            docs,
+            id_col=id_col,
+            text_col=text_col,
+            min_docs=o.boilerplate_min_docs,
+        )
+    flags = docs
+    # NULL/blank text first and explicitly: every later gate compares
+    # against NULL (quality_score(NULL) < t is NULL, which the waterfall
+    # reads as "passed"), so without this stage empty documents would
+    # slip through the whole stack and land in the output
+    flags = flags.withColumn(
+        "_f_empty",
+        F.col(text_col).isNull() | (F.trim(F.col(text_col)) == ""),
+    )
+    flags = flags.withColumn(
+        "_f_line_ratio",
+        (
+            (F.col("_line_ratio") < o.min_line_ratio)
+            & ~F.col("_f_empty")
+        )
+        if o.min_line_ratio is not None
+        else F.lit(False),
+    )
+    flags = flags.withColumn(
+        "_f_quality",
+        (quality_score(text_col) < o.min_quality)
+        if o.min_quality is not None
+        else F.lit(False),
+    )
+    flags = flags.withColumn(
+        "_f_language",
+        (~lang_id(text_col).isin(*o.langs))
+        if o.langs is not None
+        else F.lit(False),
+    )
+    if o.scripts is not None:
+        from s3_access_logs_spark.functions.text import dominant_script
+
+        flags = flags.withColumn(
+            "_f_script", ~dominant_script(text_col).isin(*o.scripts)
+        )
+    else:
+        flags = flags.withColumn("_f_script", F.lit(False))
+    if o.lm_model is not None and o.max_xent is not None:
+        from s3_access_logs_spark.functions.lm import perplexity_score
+
+        # scored per (id, text) pair, not per id: a stream batch may
+        # carry one doc_id with two texts, and pooling their bigrams
+        # would issue one verdict for both (for unique ids the key is
+        # just the id)
+        lm_key = F.xxhash64(F.col(id_col), F.col(text_col))
+        ppl = perplexity_score(
+            docs.select(lm_key.alias("_lmk"), text_col), o.lm_model,
+            text_col=text_col, id_col="_lmk",
+        ).select("_lmk", "xent")
+        flags = flags.withColumn("_lmk", lm_key).join(
+            ppl, "_lmk", "left"
+        ).withColumn(
+            # no bigram evidence (NULL xent) passes — don't reject on
+            # absence of signal
+            "_f_perplexity",
+            F.coalesce(F.col("xent") > o.max_xent, F.lit(False)),
+        ).drop("xent", "_lmk")
+    else:
+        flags = flags.withColumn("_f_perplexity", F.lit(False))
+    if o.classifier is not None:
+        from s3_access_logs_spark.operators.quality_classifier import (
+            score_quality,
+        )
+
+        flags = score_quality(
+            flags, o.classifier, text_col=text_col
+        ).withColumn(
+            "_f_classifier", F.col("quality_prob") < o.min_prob
+        ).drop("quality_prob")
+    else:
+        flags = flags.withColumn("_f_classifier", F.lit(False))
+    # Contamination is COMPUTED before the dedup stages (attribution
+    # order in STAGES is unchanged): it is a per-document property, and
+    # a contaminated document must not elect itself keeper/superset —
+    # the benchmark-bearing superset would otherwise drop its clean
+    # subset and then be dropped itself, erasing the content entirely.
+    if o.benchmark is not None:
+        dirty = ngram_overlap(
+            docs, o.benchmark, id_col=id_col, text_col=text_col
+        ).filter(F.col("overlap") >= o.max_overlap).select(
+            F.col("id").alias(id_col), F.lit(True).alias("_hit")
+        )
+        flags = flags.join(dirty, id_col, "left").withColumn(
+            "_f_contaminated", F.coalesce(F.col("_hit"), F.lit(False))
+        ).drop("_hit")
+    else:
+        flags = flags.withColumn("_f_contaminated", F.lit(False))
+    if scrub_pii:
+        from s3_access_logs_spark.functions.text import pii_redact
+
+        # the flags above keep the verdicts on the unredacted text;
+        # the digest, the bands and the stored text see the scrubbed one
+        flags = flags.withColumn(text_col, pii_redact(text_col))
+    # Exact-dup keeper election — among rows passing the per-document
+    # gates, not blindly by min id: normalized_digest collapses case and
+    # whitespace, so digest-sharing rows are NOT byte-identical and can
+    # get different verdicts from the case/line-sensitive gates
+    # (line_ratio's kept-line measure, uppercase-sensitive quality/
+    # script checks). A blind min-id keeper could fail such a gate while
+    # its passing variant was dropped as exact_dup — erasing the content
+    # entirely, the exact failure mode the near_dup/contained stages are
+    # structured to avoid (ADVICE r4). Ordering each digest group by
+    # "fails any per-document gate" first and id second makes the keeper
+    # the min-id PASSING row; when the whole group fails, min id wins
+    # and attribution lands on the real gate.
+    _doc_gates = [
+        s
+        for s in STAGES
+        if s not in ("exact_dup", "near_dup", "contained", "semantic")
+    ]
+    gate_fail = F.lit(False)
+    for s in _doc_gates:
+        gate_fail = gate_fail | F.col(f"_f_{s}")
+    flags = flags.withColumn("_gate_fail", gate_fail.cast("int"))
+    w = Window.partitionBy(normalized_digest(F.col(text_col))).orderBy(
+        "_gate_fail", id_col
+    )
+    flags = flags.withColumn(
+        "_f_exact_dup",
+        (F.row_number().over(w) > 1) & ~F.col("_f_empty"),
+    ).drop("_gate_fail")
+    if o.digest_store is not None:
+        # history gate: a digest already committed to the store drops the
+        # WHOLE batch group (keeper included — history holds the keeper).
+        # Replay safety: the current batch's own partition is excluded
+        # so a rerun never self-collides.
+        from s3_access_logs_spark.sources.fsutil import read_prior_batches
+
+        flags = flags.withColumn("_digest", normalized_digest(F.col(text_col)))
+        seen = read_prior_batches(
+            docs.sparkSession, o.digest_store, "digest string",
+            o.store_batch_id,
+        ).select("digest")
+        if digest_bloom is not None:
+            seen = bloom_maybe_seen(
+                flags.select(F.col("_digest").alias("digest")).distinct(),
+                seen,
+                digest_bloom,
+            )
+        seen = (
+            seen.select(F.col("digest").alias("_seen_digest"))
+            .distinct()
+            .withColumn("_seen", F.lit(True))
+        )
+        flags = (
+            flags.join(
+                F.broadcast(seen) if digest_bloom is not None else seen,
+                F.col("_digest") == F.col("_seen_digest"),
+                "left",
+            )
+            .withColumn(
+                "_f_exact_dup",
+                F.col("_f_exact_dup")
+                | (
+                    F.coalesce(F.col("_seen"), F.lit(False))
+                    & ~F.col("_f_empty")
+                ),
+            )
+            .drop("_seen_digest", "_seen", "_digest")
+        )
+    # The dedup stages run over the SURVIVORS of every other gate, not
+    # the raw corpus: clustering raw docs could elect a keeper (min-id
+    # representative / containment superset) that another gate already
+    # rejected, dropping every member of the group and erasing the
+    # content entirely.
+    _pre_dedup = [
+        s for s in STAGES if s not in ("near_dup", "contained", "semantic")
+    ]
+    eligible_pred = F.lit(True)
+    for s in _pre_dedup:
+        eligible_pred = eligible_pred & ~F.col(f"_f_{s}")
+    # ONE cached pre-dedup flags frame covers everything downstream:
+    # the dedup stages filter it (their several input scans hit the
+    # cache), the report aggregates it, and the dst write reads it —
+    # the whole gate stack (LM join included) executes once per call.
+    # Both dedup RESULTS are lineage-truncated (CC checkpoints
+    # internally; the contained-id set localCheckpoints eagerly below),
+    # so the cache can release before the caller returns and the
+    # survivors frame never re-enters the expensive stages.
+    # localCheckpointed intermediates (store_hits/contained/dropped_sem)
+    # are NOT cached: on success the survivors' lineage references them
+    # (the whole point of the truncation), and on failure the
+    # ContextCleaner reclaims them when the frames go unreferenced.
+    if o.near_dup or o.drop_contained or o.band_store is not None or (
+        o.embeddings is not None
+    ):
+        flags = cache(flags)
+    batch_bands = None
+    if o.band_store is not None:
+        # history near-dup gate BEFORE within-batch clustering: a doc
+        # colliding with the stored bands must drop, and excluding it
+        # from the clustering below keeps it from being elected a
+        # keeper whose batch-mates vanish with it.
+        from s3_access_logs_spark.operators.dedup import near_dup_incremental
+        from s3_access_logs_spark.sources.fsutil import read_prior_batches
+
+        seen_bands = read_prior_batches(
+            docs.sparkSession, o.band_store,
+            "id long, band_idx int, band_key string", o.store_batch_id,
+        ).select("id", "band_idx", "band_key")
+        eligible0 = flags.filter(eligible_pred).select(id_col, text_col)
+        hits, batch_bands = near_dup_incremental(
+            eligible0, seen_bands, id_col=id_col, text_col=text_col
+        )
+        if o.store_batch_id is not None:
+            # two consumers (the probe below and the caller's band
+            # append), and MinHash signatures are the expensive part of
+            # the gate (k hashes per shingle): compute them once
+            batch_bands = cache(batch_bands)
+        store_hits = (
+            hits.select(F.col("new_id").alias(id_col))
+            .distinct()
+            .withColumn("_bhit", F.lit(True))
+            .localCheckpoint()
+        )
+        flags = flags.join(store_hits, id_col, "left").withColumn(
+            "_f_near_dup_store",
+            F.coalesce(F.col("_bhit"), F.lit(False)),
+        ).drop("_bhit")
+    else:
+        flags = flags.withColumn("_f_near_dup_store", F.lit(False))
+    if o.near_dup:
+        eligible = flags.filter(
+            eligible_pred & ~F.col("_f_near_dup_store")
+        ).select(id_col, text_col)
+        clusters = dedup_clusters(
+            eligible, id_col=id_col, text_col=text_col
+        )
+        flags = flags.join(clusters, id_col, "left").withColumn(
+            "_f_near_dup",
+            F.coalesce(
+                F.col("cluster_id") != F.col(id_col), F.lit(False)
+            ),
+        ).drop("cluster_id")
+    else:
+        flags = flags.withColumn("_f_near_dup", F.lit(False))
+    flags = flags.withColumn(
+        "_f_near_dup", F.col("_f_near_dup") | F.col("_f_near_dup_store")
+    ).drop("_f_near_dup_store")
+    if o.drop_contained:
+        from s3_access_logs_spark.operators.dedup import containment_pairs
+
+        eligible2 = flags.filter(
+            eligible_pred & ~F.col("_f_near_dup")
+        ).select(id_col, text_col)
+        contained = (
+            containment_pairs(
+                eligible2,
+                id_col=id_col,
+                text_col=text_col,
+                threshold=o.containment_threshold,
+            )
+            .select(F.col("contained_id").alias(id_col))
+            .distinct()
+            .withColumn("_sub", F.lit(True))
+            .localCheckpoint()
+        )
+        flags = flags.join(contained, id_col, "left").withColumn(
+            "_f_contained", F.coalesce(F.col("_sub"), F.lit(False))
+        ).drop("_sub")
+    else:
+        flags = flags.withColumn("_f_contained", F.lit(False))
+    if o.embeddings is not None:
+        from s3_access_logs_spark.operators.similarity import (
+            kmeans_fit,
+            semantic_dedup,
+        )
+
+        # keeper election among GATE-PASSING docs only (the shared
+        # dedup-stage pattern): a doc may only be dominated by a doc
+        # that itself survives every earlier stage, so dropping it
+        # never erases content whose canonical copy was rejected
+        eligible3 = flags.filter(
+            eligible_pred
+            & ~F.col("_f_near_dup")
+            & ~F.col("_f_contained")
+        ).select(id_col)
+        # cached: the frame below is read by the nlist sizing job,
+        # every kmeans iteration, and three references inside the dedup
+        # self-join plan — without the cache each would re-scan the
+        # embeddings source and re-run the join (review r5). NULL
+        # and zero-length vectors are out here, not downstream: a
+        # doc whose embedding row carries no usable vector has no
+        # signal — it passes, same as a doc with no row at all (and
+        # a frame with none must skip the fit, not crash it —
+        # review r5)
+        cand = cache(eligible3.join(
+            o.embeddings.filter(
+                F.col(o.emb_col).isNotNull()
+                & (F.size(F.col(o.emb_col)) > 0)
+            ).select(
+                F.col(o.emb_id_col).alias(id_col),
+                F.col(o.emb_col).alias("_emb"),
+            ),
+            id_col,
+        ))
+        cents = o.semantic_centroids
+        if cents is None:
+            # ~sqrt(n) clusters (standard IVF sizing) keeps every
+            # within-cluster pair block sub-quadratic. The auto-sized
+            # fit passes allow_fewer: kmeans clamps k to the distinct
+            # seeds its own seed collect finds, so duplicate-heavy
+            # embeddings (SemDeDup's primary target) size the quantizer
+            # down — no crash, and no extra distinct pass (review r5).
+            # An EXPLICIT semantic_nlist keeps kmeans' loud too-few-
+            # distinct-vectors error: silently coarsening a user-chosen
+            # quantizer would hide a misconfiguration.
+            n_emb = cand.count()
+            if n_emb > 0:
+                k = o.semantic_nlist or max(1, int(n_emb**0.5))
+                cents = kmeans_fit(
+                    cand,
+                    k,
+                    vec_col="_emb",
+                    allow_fewer=o.semantic_nlist is None,
+                )
+            # empty cand skips the stage SILENTLY even with an
+            # explicit nlist: emptiness has benign causes a raise
+            # would misfire on — an empty batch, every doc dropped
+            # by an earlier gate (routine in incremental mode), or
+            # eligible docs simply having no embedding rows (the
+            # documented pass condition). Distinguishing those from
+            # an all-NULL embeddings frame would cost extra jobs;
+            # the loud misconfiguration error stays where kmeans
+            # can actually detect it — usable vectors exist but
+            # fewer distinct than the explicitly requested k
+            # (review r5, twice).
+        if cents is None:  # no eligible embeddings: nothing to judge
+            flags = flags.withColumn("_f_semantic", F.lit(False))
+        else:
+            # distinct BEFORE the join back (the contained/store_hits
+            # pattern): duplicate embedding rows for one id would fan
+            # the flags join out and inflate the waterfall past the
+            # "dropped + survivors == input" invariant (review r5)
+            dropped_sem = (
+                semantic_dedup(
+                    cand,
+                    threshold=o.semantic_threshold,
+                    id_col=id_col,
+                    vec_col="_emb",
+                    centroids=cents,
+                )
+                .filter(~F.col("keep"))
+                .select(F.col("id").alias(id_col))
+                .distinct()
+                .withColumn("_sem", F.lit(True))
+                .localCheckpoint()
+            )
+            flags = flags.join(dropped_sem, id_col, "left").withColumn(
+                "_f_semantic", F.coalesce(F.col("_sem"), F.lit(False))
+            ).drop("_sem")
+    else:
+        flags = flags.withColumn("_f_semantic", F.lit(False))
+    # waterfall attribution: first failing stage wins
+    verdict = F.lit("kept")
+    for stage in reversed(STAGES):
+        verdict = F.when(F.col(f"_f_{stage}"), F.lit(stage)).otherwise(
+            verdict
+        )
+    return flags.withColumn("_verdict", verdict), batch_bands

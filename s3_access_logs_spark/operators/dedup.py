@@ -155,8 +155,6 @@ def dedup_incremental_bloom(
     same (digest, keep_id) contract — append survivors to the store AND
     fold their bloom (``bloom_build`` of the survivors, ``bloom_merge``)
     after the batch commits."""
-    from s3_access_logs_spark.functions.bloom import bloom_probe
-
     # same NULL-text exclusion as dedup_incremental (bit-for-bit parity
     # is the contract)
     batch = (
@@ -168,25 +166,36 @@ def dedup_incremental_bloom(
         .groupBy(digest_col)
         .agg(F.min(id_col).alias("keep_id"))
     )
-    flagged = bloom_probe(batch, digest_col, digest_bloom, "_maybe")
-    sure_new = flagged.filter(
-        ~F.coalesce(F.col("_maybe"), F.lit(False))
-    ).drop("_maybe")
-    maybes = flagged.filter(F.col("_maybe")).drop("_maybe")
-    # Join-direction matters: `maybes LEFT ANTI store` must build a hash
-    # table from the RIGHT side — the store — so it can never broadcast
-    # and the whole store would SHUFFLE every batch. Flipped into (a)
-    # store INNER JOIN broadcast(maybes): the store is scanned, probed
-    # against the tiny maybe set, never exchanged; then (b) a broadcast
-    # anti-join of maybes against the found digests (small vs small).
-    present = seen_digests.select(digest_col).join(
-        F.broadcast(maybes.select(digest_col)), digest_col
+    # rows the filter rejects are definitely new and never meet the
+    # store; the maybe-seen slice is checked against it exactly
+    present = bloom_maybe_seen(batch, seen_digests, digest_bloom, digest_col)
+    return batch.join(F.broadcast(present), digest_col, "left_anti")
+
+
+def bloom_maybe_seen(
+    digests: DataFrame,
+    seen_digests: DataFrame,
+    digest_bloom: DataFrame | list,
+    digest_col: str = "digest",
+) -> DataFrame:
+    """The ``seen_digests`` rows whose digest is in ``digests`` AND
+    maybe-seen by ``digest_bloom`` — exactly the store digests a batch
+    can collide with, found without shuffling the store. Join direction
+    matters: ``maybes LEFT ANTI store`` must build its hash table from
+    the store side, so it can never broadcast and the whole store would
+    SHUFFLE every batch; ``store INNER JOIN broadcast(maybes)`` instead
+    scans the store, probes each row against the tiny maybe set and
+    never exchanges it."""
+    from s3_access_logs_spark.functions.bloom import bloom_probe
+
+    maybes = (
+        bloom_probe(digests, digest_col, digest_bloom, "_maybe")
+        .filter(F.col("_maybe"))
+        .select(digest_col)
     )
-    survivors = maybes.join(F.broadcast(present), digest_col, "left_anti")
-    # the two branches re-evaluate the batch agg + probe (both cheap and
-    # narrow past the one batch-sized shuffle); at scale persist `batch`
-    # upstream if the batch itself is expensive to produce
-    return sure_new.unionByName(survivors)
+    return seen_digests.select(digest_col).join(
+        F.broadcast(maybes), digest_col
+    )
 
 
 def minhash_signatures(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from s3_access_logs_spark.operators.observed import observe
+from s3_access_logs_spark.session import scoped_cache
 
 
 def _write_windows(windows: DataFrame, dst: str, n_shards: int) -> None:
@@ -182,17 +183,18 @@ def _curated_id_streams(
     curate: dict | None,
     mixture: dict | None,
     source_col: str,
+    cache: Callable[[DataFrame], DataFrame],
     pretokenizer: str = "default",
     keep_source: bool = False,
-) -> tuple[DataFrame, Callable[[], dict], DataFrame | None]:
+) -> tuple[DataFrame, Callable[[], dict]]:
     """The shared front half of the batch export paths: curate ``docs``,
     optionally re-balance sources, and encode survivors to
     ``(id, ids)`` EOS-terminated token-id streams. Returns
-    ``(streams, curate_counts, pre_mix_handle)`` — the caller MUST
-    unpersist ``pre_mix_handle`` (when not None) after its first action
-    over ``streams`` (temperature_mixture's count collect plus the
-    caller's own scan would otherwise execute the gate stack twice).
-    ``keep_source`` additionally carries ``source_col`` through (as
+    ``(streams, curate_counts)``. With ``mixture`` the survivors go
+    through ``cache`` (the caller's :func:`session.scoped_cache`, which
+    must stay open over its first action on ``streams``):
+    temperature_mixture's count collect plus the caller's own scan
+    would otherwise execute the gate stack twice. ``keep_source`` additionally carries ``source_col`` through (as
     ``source``) when the input has it — the token store persists it so
     mixture can be applied per EPOCH at repack time (round 12).
 
@@ -207,15 +209,13 @@ def _curated_id_streams(
         docs, id_col=id_col, text_col=text_col, **(curate or {}),
         _observe_report=True,
     )
-    pre_mix = None
     if mixture is not None:
         from s3_access_logs_spark.operators.sampling import (
             temperature_mixture,
         )
 
-        pre_mix = survivors.persist()
         survivors = temperature_mixture(
-            pre_mix, source_col, id_col, **mixture
+            cache(survivors), source_col, id_col, **mixture
         ).drop("_keep_rate")
     cols = [
         F.col(id_col).alias("id"),
@@ -232,7 +232,7 @@ def _curated_id_streams(
     ]
     if keep_source and source_col in survivors.columns:
         cols.append(F.col(source_col).alias("source"))
-    return survivors.select(*cols), curate_counts, pre_mix
+    return survivors.select(*cols), curate_counts
 
 
 def _report(
@@ -344,47 +344,44 @@ def export_training_set(
     ms, _vs, eos, pad = _resolve_special_ids(
         merges, vocab, unk_id, eos_id, pad_id
     )
-    t, curate_counts, _pre_mix = _curated_id_streams(
-        docs, ms, vocab, unk_id, eos,
-        id_col, text_col, curate, mixture, source_col,
-        pretokenizer=pretokenizer,
-    )
-    sharded = training_shards(
-        t, n_shards, id_col="id", salt=salt, order_salt=order_salt
-    )
-    # emit_spans: windows additionally carry per-document
-    # (start, len) segment offsets for attention/loss masking —
-    # see pack_id_windows
-    windows = pack_id_windows(
-        sharded,
-        window_ids,
-        ["shard"],
-        [F.col("shard_order"), F.col("id").asc_nulls_first(), F.col("ids")],
-        emit_spans=emit_spans,
-        pad_id=pad,
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("nw"),
-        F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
-        F.coalesce(
-            F.sum(F.size(F.filter("ids", lambda x: x == eos))), F.lit(0)
-        ).alias("neos"),
-        F.size(F.collect_set("shard")).alias("ns"),
-    ]
-    if pad is not None:
-        # pads are layout, not content: subtracted from tokens_kept
-        # below (pad != eos is guaranteed, so the counts are disjoint)
-        aggs.append(
-            F.coalesce(
-                F.sum(F.size(F.filter("ids", lambda x: x == pad))), F.lit(0)
-            ).alias("npad")
+    with scoped_cache() as cache:
+        t, curate_counts = _curated_id_streams(
+            docs, ms, vocab, unk_id, eos,
+            id_col, text_col, curate, mixture, source_col, cache,
+            pretokenizer=pretokenizer,
         )
-    observed, written = observe(windows, *aggs)
-    try:
+        sharded = training_shards(
+            t, n_shards, id_col="id", salt=salt, order_salt=order_salt
+        )
+        # emit_spans: windows additionally carry per-document
+        # (start, len) segment offsets for attention/loss masking —
+        # see pack_id_windows
+        windows = pack_id_windows(
+            sharded,
+            window_ids,
+            ["shard"],
+            [F.col("shard_order"), F.col("id").asc_nulls_first(), F.col("ids")],
+            emit_spans=emit_spans,
+            pad_id=pad,
+        )
+        aggs = [
+            F.count(F.lit(1)).alias("nw"),
+            F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
+            F.coalesce(
+                F.sum(F.size(F.filter("ids", lambda x: x == eos))), F.lit(0)
+            ).alias("neos"),
+            F.size(F.collect_set("shard")).alias("ns"),
+        ]
+        if pad is not None:
+            # pads are layout, not content: subtracted from tokens_kept
+            # below (pad != eos is guaranteed, so the counts are disjoint)
+            aggs.append(
+                F.coalesce(
+                    F.sum(F.size(F.filter("ids", lambda x: x == pad))), F.lit(0)
+                ).alias("npad")
+            )
+        observed, written = observe(windows, *aggs)
         _write_windows(observed, dst, n_shards)
-    finally:
-        if _pre_mix is not None:
-            _pre_mix.unpersist()
     m = written()
     npad = int(m["npad"]) if pad is not None else 0
     return _read_windows_or_empty(docs.sparkSession, dst, windows), _report(
@@ -626,22 +623,22 @@ def write_token_store(
     ms, vs, eos, _pad = _resolve_special_ids(
         merges, vocab, unk_id, eos_id, None, caller="write_token_store"
     )
-    t, curate_counts, pre_mix = _curated_id_streams(
-        docs, ms, vocab, unk_id, eos,
-        id_col, text_col, curate, mixture, source_col,
-        pretokenizer=pretokenizer, keep_source=True,
-    )
-    keep = ["ids", "shard"] + (["source"] if "source" in t.columns else [])
-    rows = training_shards(
-        t, n_shards, id_col="id", salt=salt
-    ).select(F.col("id").alias("doc_id"), *keep)
-    rows, written = observe(
-        rows,
-        F.count(F.lit(1)).alias("nd"),
-        F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
-        F.size(F.collect_set("shard")).alias("ns"),
-    )
-    try:
+    with scoped_cache() as cache:
+        t, curate_counts = _curated_id_streams(
+            docs, ms, vocab, unk_id, eos,
+            id_col, text_col, curate, mixture, source_col, cache,
+            pretokenizer=pretokenizer, keep_source=True,
+        )
+        keep = ["ids", "shard"] + (["source"] if "source" in t.columns else [])
+        rows = training_shards(
+            t, n_shards, id_col="id", salt=salt
+        ).select(F.col("id").alias("doc_id"), *keep)
+        rows, written = observe(
+            rows,
+            F.count(F.lit(1)).alias("nd"),
+            F.coalesce(F.sum(F.size("ids")), F.lit(0)).alias("total"),
+            F.size(F.collect_set("shard")).alias("ns"),
+        )
         (
             rows.repartition(max(int(n_shards), 1), "shard")
             .sortWithinPartitions("shard", "doc_id")
@@ -650,19 +647,16 @@ def write_token_store(
             .partitionBy("shard")
             .parquet(store)
         )
-        # stamp the store's id-space contract so repack_epoch can
-        # fail-loud on a colliding pad id (review r11)
-        from s3_access_logs_spark.sources.fsutil import write_json_sidecar
+    # stamp the store's id-space contract so repack_epoch can
+    # fail-loud on a colliding pad id (review r11)
+    from s3_access_logs_spark.sources.fsutil import write_json_sidecar
 
-        write_json_sidecar(
-            docs.sparkSession, store, TOKEN_STORE_META,
-            token_store_meta(
-                len(vs), unk_id, eos, pretokenizer, ms, "source" in keep
-            ),
-        )
-    finally:
-        if pre_mix is not None:
-            pre_mix.unpersist()
+    write_json_sidecar(
+        docs.sparkSession, store, TOKEN_STORE_META,
+        token_store_meta(
+            len(vs), unk_id, eos, pretokenizer, ms, "source" in keep
+        ),
+    )
     m = written()
     return _report(docs, curate_counts, mixture, m["nd"], [
         ("docs_stored", int(m["nd"])),

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from s3_access_logs_spark.session import scoped_cache
+
 
 def asof_join(
     left: DataFrame,
@@ -146,8 +148,8 @@ def key_skew_stats(
     # expensive part is the input scan + count shuffle, and without the
     # persist the second action recomputes both — doubling the cost of
     # the diagnostic on exactly the giant inputs it exists for.
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n")).persist()
-    try:
+    with scoped_cache() as cache:
+        counts = cache(df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n")))
         summary = counts.agg(
             F.sum("_n").alias("rows"),
             F.count(F.lit(1)).alias("n_keys"),
@@ -170,8 +172,6 @@ def key_skew_stats(
             .limit(top_n)
             .collect()
         )
-    finally:
-        counts.unpersist()
     mean = summary["rows"] / summary["n_keys"]
     return {
         "rows": summary["rows"],

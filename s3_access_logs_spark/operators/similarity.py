@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from s3_access_logs_spark.operators.observed import observe
+from s3_access_logs_spark.session import scoped_cache
 
 from s3_access_logs_spark.functions.vectors import (
     cosine_from_norms,
@@ -351,8 +352,8 @@ def kmeans_fit(
             F.pmod(F.xxhash64("_v"), F.lit(1_000_000))
             < int(sample_fraction * 1_000_000)
         )
-    train = train.persist()
-    try:
+    with scoped_cache() as cache:
+        train = cache(train)
         if init is not None:
             if len(init) != k:
                 raise ValueError(
@@ -477,8 +478,6 @@ def kmeans_fit(
             cents = nxt
             if shift <= tol:
                 break
-    finally:
-        train.unpersist()
     return spark.createDataFrame(list(enumerate(cents)), schema)
 
 

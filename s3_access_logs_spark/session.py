@@ -19,8 +19,10 @@ sink that needs it, and S3A settings come from
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -100,3 +102,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_cache() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """The one way an op caches a frame: ``with scoped_cache() as cache:``
+    yields ``cache(df)``, which persists ``df`` and returns the persisted
+    frame. Every frame cached in the block is unpersisted when the block
+    exits, by return or by raise, so a failing stage never pins its
+    inputs in executor storage for the session lifetime."""
+    held: list[DataFrame] = []
+
+    def cache(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return held[-1]
+
+    try:
+        yield cache
+    finally:
+        for df in held:
+            df.unpersist()

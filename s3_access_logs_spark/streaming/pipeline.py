@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from s3_access_logs_spark.operators.etl import write_logs
 from s3_access_logs_spark.operators.parse import parse_logs
+from s3_access_logs_spark.session import scoped_cache
 from s3_access_logs_spark.sources.fsutil import (  # noqa: F401 (re-export)
     FOLD_BASE_ID,
     MOVED_OK as _MOVED_OK,
@@ -313,161 +314,83 @@ def ingest_documents_stream(
     shard_pretokenizer: str = "default",
 ) -> StreamingQuery:
     """Streaming incremental corpus ingestion: JSONL document files land in
-    ``src``; each micro-batch is exact-deduped within itself AND against the
-    append-only digest store at ``store``, and only unseen survivors are
-    appended — the crawl-ingestion loop as one streaming pipeline.
+    ``src``; each micro-batch runs :func:`operators.curate.curate_corpus`'s
+    stage list — the same gates, in the same order, with the same
+    waterfall verdicts — against the append-only digest store at
+    ``store`` (and ``band_store``), and only the kept documents are
+    appended. See ``curate_corpus`` for the gates and their order:
+    ``html``/``normalize_text`` are its ``html``/``normalize``
+    transforms, ``min_quality`` and ``lm_model`` + ``max_xent`` its
+    quality and LM gates, then blank-text, exact-dup (within the batch
+    and against the digest history) and band-store near-dup. Two
+    differences are the stream's own: ``scrub_pii`` redacts emails/IPs/
+    digit-runs after the per-document gates and before the digest (two
+    crawls of one page differing only in session tokens dedup as one
+    document), and near-dups are judged against HISTORY only — two
+    near-dups arriving in the same micro-batch both pass.
 
-    ``min_quality`` drops documents scoring below the threshold
-    (functions.text.quality_score) BEFORE digesting; ``lm_model`` +
-    ``max_xent`` add the bigram-LM cross-entropy gate (functions.lm —
-    the same contract as ``curate_corpus``'s, including no-bigram docs
-    passing); and ``scrub_pii``
-    redacts emails/IPs/digit-runs in the stored text — the same narrow
-    column expressions as the batch cleaning pipeline, composed into the
-    stream at zero extra shuffle cost (filters and projections ride the
-    micro-batch scan). ``normalize_text`` runs
-    :func:`functions.text.normalize_unicode` (NFKC + mojibake repair)
-    FIRST: the digest and band gates are byte-sensitive, so NFC/NFD/
-    mojibake variants of one re-crawled page must canonicalize before
-    any gate sees them. ``html`` runs :func:`functions.text.strip_html`
-    before even that — two crawls of one page differing only in markup
-    (ad ids, nonce attributes) must dedup as one document, and the
-    quality/PII stages should score prose, not tag soup.
+    Stream-only parts:
 
-    ``band_store`` additionally gates NEAR-dups: survivors of the exact
-    gate probe the append-only MinHash band store
-    (operators.dedup.near_dup_incremental) and documents colliding with
-    any already-ingested document are dropped; the kept documents' bands
-    are appended under the same ``batch_id`` partitioning. A re-crawled
-    page with a few edited sentences — different digest, same bands — is
-    caught here, not by the digest gate. Scope: the gate guards against
-    HISTORY; two near-dups arriving in the same micro-batch both pass
-    (within-batch near-dup is the batch pipeline's
-    ``minhash_candidates`` job, pointless to re-run per micro-batch).
+    * ``bloom_store`` keeps a per-batch Bloom filter of the digest store
+      (functions.bloom): each micro-batch probes the concatenation of
+      all PRIOR batches' filters, so definitely-new documents never
+      touch the digest store and the maybe-seen slice checks it with
+      broadcast joins (the store is scanned, never shuffled). The
+      batch's filter partition is written BEFORE its documents, so a
+      crash between the writes can only leave the filter
+      OVER-approximating the store. Enabling it on a store whose
+      history has no filter fails loudly — run
+      :func:`backfill_bloom_store` once first.
+      ``bloom_num_bits``/``bloom_num_hashes`` size NEW filter stores;
+      an existing store's parameters always win.
+    * ``semantic_index`` + ``semantic_centroids`` +
+      ``semantic_embeddings`` (+ ``semantic_threshold``/
+      ``semantic_dims``) gate SEMANTIC dups against HISTORY — a
+      different stage kind from curate's within-batch ``embeddings``
+      stage. Each kept document looks up its vector in the static
+      ``(doc_id, embedding)`` side table, assigns to its nearest saved
+      centroid and scans only that cluster's posting list of the
+      persisted IVF index (``operators.similarity.build_ivf_index``
+      layout); cosine similarity above the threshold to any indexed
+      vector drops it. Kept vectors are appended AFTER the doc-store
+      commit (``skip_existing`` makes a replayed append a no-op), and
+      the probe ignores entries of the current batch, so a replay
+      reproduces its first attempt's decisions. Documents with no
+      well-formed embedding pass un-probed and are not indexed. A
+      missing index bootstraps from the first batch; the quantizer is
+      REQUIRED, since retraining per batch would orphan every posting
+      list.
+    * ``shard_store`` lands each batch's kept documents in the
+      TRAINING-SHARD layout the batch export writes (operators/
+      export.py): rows ``(doc_id, ids[, source])`` — the exact BPE id
+      stream under ``shard_merges``/``shard_vocab`` (default demo
+      vocabulary; ``shard_pretokenizer='gpt2'`` for the byte-level
+      pipeline) with EOS appended — under hive ``shard=<s>/
+      batch_id=<b>`` dirs in ``n_shards`` shards, rows ordered by the
+      epoch permutation, written AFTER the doc-store commit. A
+      sidecar stamps the tokenizer; resuming under a different one
+      fails loud.
+    * ``keep_source=True`` reads an optional ``source`` field from the
+      feed (absent → NULL) into both the doc store and the shard store,
+      so ``pack_shard_windows(mixture=)`` works over stream-built
+      stores. One ``(digest, doc_id)`` pair arriving with several
+      labels stores ``min(source)`` (NULLs lose) and ``max(text)``.
+      Resuming a store in the other source mode fails loud.
 
-    ``bloom_store`` keeps a per-batch Bloom filter of the digest store
-    (functions.bloom): each micro-batch probes the concatenation of all
-    PRIOR batches' filters — a broadcast-sized bitmap — so
-    definitely-new documents never touch the digest store, and the
-    maybe-seen slice checks it with broadcast joins (the store is
-    scanned, never shuffled). Crash ordering makes this exact: the
-    batch's filter partition is written BEFORE its documents, so a crash
-    between the writes can only leave the filter OVER-approximating the
-    store (false positives = wasted probes, never false negatives =
-    duplicates). Enabling it on a store that already has history without
-    a filter fails loudly — run :func:`backfill_bloom_store` once first.
-    ``bloom_num_bits``/``bloom_num_hashes`` size NEW filter stores
-    (defaults: functions.bloom); an existing store's parameters always
-    win, so every partition stays mergeable.
-
-    Idempotency: survivors (and bands, and the bloom partition) are
-    written under a ``batch_id=<n>`` hive partition with dynamic
-    partition overwrite, so an at-least-once replay of a micro-batch
-    rewrites exactly its own partitions instead of double-appending.
-    State lives entirely in the stores (no streaming state store), so
-    the watermark-vs-state-size tradeoff never arises and the stores
-    double as the batch pipeline's inputs.
-
-    ``verify_unique_ids`` (default False — OPT-IN here, unlike
-    ``curate_corpus``'s default-on gate) fails the stream loudly on a
-    micro-batch carrying duplicate non-null ``doc_id``s. The stream
-    itself is duplicate-id SAFE by design — every store and gate keys
-    on ``(id, digest)``, so id reuse within or across batches is
-    well-defined (pinned by the per-(id, digest) LM-scoring and
-    band-store tests) — which is why the gate is off by default; turn
-    it on for feeds whose ids are SUPPOSED to be unique, where a
-    collision signals an upstream producer bug worth stopping on. One
-    batch-sized aggregation when enabled.
-
-    ``max_files_per_trigger`` bounds each micro-batch to that many input
-    files. Without it, ``availableNow`` drains a BACKLOGGED directory
-    (a stream restarted after days down) as one giant micro-batch whose
-    digest shuffle and store joins must fit executor memory all at
-    once; with it the catch-up proceeds in bounded batches, each with
-    its own ``batch_id`` partition and replay safety — identical final
-    store state, bounded peak footprint (VERDICT r4 item 8).
-
-    ``semantic_index`` (round 8 — the batch/stream parity close for
-    ``curate_corpus``'s SemDeDup stage) gates SEMANTIC near-dups: a
-    paraphrased re-crawl — different digest, different shingles, same
-    meaning — is caught by neither the digest nor the band gate.
-    Survivors of both probe a persisted IVF index
-    (``operators.similarity.build_ivf_index`` layout) of already-
-    ingested documents' embeddings: each batch document looks up its
-    vector in ``semantic_embeddings`` (a static ``(doc_id, embedding)``
-    side table — embedding inference is an external model, the same
-    contract as ``curate_corpus(embeddings=...)``), assigns to its
-    nearest saved centroid (zero-exchange broadcast argmin), and scans
-    ONLY that cluster's posting-list partition; cosine similarity above
-    ``semantic_threshold`` to ANY indexed vector drops the document as
-    a semantic dup (``semantic_dedup``'s epsilon-ball predicate against
-    history instead of lower ids). Kept documents' vectors are appended
-    to the index AFTER the doc-store commit (``append_to_ivf_index``
-    with ``skip_existing`` — replayed appends are no-ops), the same
-    crash-ordering argument as the band store: a crash between the two
-    writes leaves documents unindexed (missed future semantic dups,
-    healed by the replay) rather than index entries for uncommitted
-    documents. The probe ignores index entries whose id is in the
-    CURRENT batch, so an at-least-once replay that already appended
-    reproduces the first attempt's decisions instead of self-colliding
-    (within-batch semantic dups both pass, the same scope rule as the
-    band gate; the caveat is that a doc_id re-ingested in a later batch
-    is never compared against its own earlier vector). Documents with
-    no (well-formed) embedding in the side table pass un-probed and are
-    not indexed — absence of signal is not rejection, the LM-gate rule.
-    A missing index bootstraps from the first batch's kept vectors, so
-    no separate build step is needed. ``semantic_centroids`` is the
-    saved quantizer and is REQUIRED with the index: retraining per
-    batch would orphan every existing posting list.
-
-    ``shard_store`` (round 10, VERDICT r9 item 8) lands each batch's
-    survivors in the TRAINING-SHARD layout the batch export writes
-    (operators/export.py): rows ``(doc_id, ids)`` — the exact BPE
-    token-id stream under ``shard_merges``/``shard_vocab`` (default
-    demo vocabulary) with the EOS id appended — under hive
-    ``shard=<s>/batch_id=<b>`` dirs, shard = the same salted-hash
-    projection as ``operators/layout.training_shards`` (zero shuffle),
-    rows file-ordered by the epoch permutation. The streaming ingest
-    story then ends at the same artifact the batch export does: a
-    trainer-side ``pack_id_windows`` over a shard dir is the only step
-    between this store and fixed-length context windows. Written AFTER
-    the doc-store commit (the band-store ordering rule — a crash
-    leaves documents unsharded, healed by the replay, never shard rows
-    for uncommitted documents) with dynamic overwrite on the
-    ``(shard, batch_id)`` leaves, so an at-least-once replay — whose
-    shard assignment is deterministic — rewrites exactly its own files
-    (append-idempotency pinned in tests/test_streaming.py).
-    ``shard_pretokenizer='gpt2'`` runs the byte-level pipeline
-    (functions.bpe.gpt2_pretokens_py) so stream-stored id streams match
-    the shipped tokenizer the vocab files came from — capability parity
-    with ``export_training_set(pretokenizer=)``/``write_token_store``.
-
-    ``keep_source=True`` (round 13, VERDICT r12 item 2) reads an
-    optional ``source`` field from the JSONL feed (absent → NULL,
-    NULL-safe everywhere — the gates never look at it) and persists it
-    through BOTH sinks: the doc store rows gain a ``source`` column and
-    the shard store writes ``(doc_id, ids, source)`` — the batch
-    ``write_token_store`` layout — so ``pack_shard_windows(mixture=)``
-    can apply the per-epoch ``temperature_mixture`` curriculum over
-    stream-built stores exactly as over batch-built ones (before this,
-    every stream store was sourceless by construction and the
-    curriculum path had API parity with no producer). The shard-store
-    sidecar records ``has_source``; resuming a sourceless store with
-    ``keep_source=True`` (or the reverse) fails loud at setup — a
-    mixed store would hand ``temperature_mixture`` a population where
-    NULL means "pre-switch rows", silently mis-weighting every source.
-    The doc store gets the same schema guard (column sniff, no
-    sidecar). When one ``(digest, doc_id)`` pair arrives with several
-    source labels in a batch, the stored row takes ``min(source)``
-    (NULLs lose) — deterministic, so replays and reruns store
-    identical bytes.
+    Replay: every store is written under a ``batch_id=<n>`` hive
+    partition with dynamic partition overwrite, and every history read
+    excludes the current ``batch_id``, so an at-least-once replay of a
+    micro-batch rewrites exactly its own partitions. State lives
+    entirely in the stores, which double as the batch pipeline's
+    inputs. ``max_files_per_trigger`` bounds each micro-batch to that
+    many input files (a backlog drains in bounded batches).
+    ``verify_unique_ids`` (default False, unlike ``curate_corpus``) fails
+    the stream on a micro-batch with duplicate non-null ``doc_id``s;
+    the stream itself is duplicate-id safe, since LM scoring and the
+    stores key on ``(id, text)`` and ``(digest, id)``.
     """
-    from s3_access_logs_spark.functions.text import pii_redact, quality_score
-    from s3_access_logs_spark.operators.dedup import (
-        dedup_incremental,
-        near_dup_incremental,
-        normalized_digest,
-    )
+    from s3_access_logs_spark.operators.curate import STAGES, _stage_flags
+    from s3_access_logs_spark.operators.dedup import normalized_digest
 
     # optional feed field: JSON rows without it read as NULL; rows
     # carrying it under keep_source=False are simply not projected (the
@@ -670,7 +593,6 @@ def ingest_documents_stream(
         )
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         if verify_unique_ids:
             # OPT-IN id-uniqueness gate (VERDICT r8 item 6): the
             # pipeline itself handles id reuse via (id, digest) keys,
@@ -692,333 +614,150 @@ def ingest_documents_stream(
                     "pipeline's own (id, digest) keys stay safe either "
                     "way)"
                 )
-        cleaned = batch_df
-        # every scoped persist of the batch, released at batch end
-        _gate_persisted: list[DataFrame] = []
-
-        def scoped(df: DataFrame) -> DataFrame:
-            _gate_persisted.append(df.persist())
-            return _gate_persisted[-1]
-
-        if html:
-            # BEFORE everything: markup differences between two crawls
-            # of one page (ad ids, nonce attributes) would defeat every
-            # byte-sensitive gate downstream, and quality/PII scoring
-            # should see prose, not tag soup
-            from s3_access_logs_spark.functions.text import strip_html
-
-            cleaned = cleaned.withColumn("text", strip_html("text"))
-        if normalize_text:
-            # FIRST: digests/bands are byte-sensitive, so NFC/NFD/
-            # mojibake variants of one page must canonicalize before
-            # any gate sees them
-            from s3_access_logs_spark.functions.text import (
-                normalize_unicode,
-            )
-
-            cleaned = normalize_unicode(cleaned)
-        if min_quality is not None:
-            cleaned = cleaned.filter(quality_score("text") >= min_quality)
-        if lm_model is not None and max_xent is not None:
-            # batch parity with curate_corpus's LM gate: score the
-            # micro-batch against the broadcast bigram model, keep docs
-            # under the cross-entropy bar; no-bigram docs (NULL xent)
-            # pass — absence of signal is not rejection. Scoring keys on
-            # hash(doc_id, text), NOT doc_id alone: a batch may carry
-            # one doc_id with two texts (the dropDuplicates note below),
-            # and pooling their bigrams would issue one verdict for
-            # both. The gate joins back (second consumer of the cleaned
-            # lineage) -> scoped persist, released at batch end.
-            from s3_access_logs_spark.functions.lm import perplexity_score
-
-            cleaned = scoped(cleaned)
-            keyed = cleaned.withColumn(
-                "_lmk", F.xxhash64("doc_id", "text")
-            )
-            scored = perplexity_score(
-                keyed, lm_model, id_col="_lmk"
-            ).select("_lmk", "xent")
-            cleaned = keyed.join(
-                scored.dropDuplicates(["_lmk"]), "_lmk", "left"
-            ).filter(
-                F.coalesce(F.col("xent") <= max_xent, F.lit(True))
-            ).drop("xent", "_lmk")
-        if scrub_pii:
-            # scrub BEFORE digesting: two crawls of the same page with
-            # different session tokens in the text dedup to one document.
-            cleaned = cleaned.withColumn("text", pii_redact("text"))
-        # Replay safety: see read_prior_batches — every store read
-        # excludes the current batch_id so an at-least-once replay never
-        # self-collides with its own crashed attempt's rows.
-        def read_prior(path: str, empty_schema: str):
-            return read_prior_batches(sess, path, empty_schema, batch_id)
-
-        seen = read_prior(store, "digest string").select("digest")
-        # Survivors carry the (scrubbed) TEXT, not just digests: the store
-        # doubles as the batch pipeline's corpus input, so the document
-        # body must actually land in it. The text attaches on
-        # (digest, keep_id), not keep_id alone — a batch carrying the same
-        # doc_id with two different texts would otherwise cross-product
-        # into rows whose stored digest is not the digest of the stored
-        # text.
-        if keep_source:
-            # same one-row-per-(digest, keep_id) contract, but with a
-            # DETERMINISTIC resolution: min(source) (NULLs lose) and
-            # max(text) — dropDuplicates picks arbitrarily, and source
-            # is NOT functionally determined by the digest the way text
-            # effectively is, so an arbitrary pick would let replays
-            # store different bytes for the same feed
-            texts = (
-                cleaned.select(
-                    normalized_digest(F.col("text")).alias("digest"),
-                    F.col("doc_id").alias("keep_id"),
-                    "text",
-                    "source",
-                )
-                .groupBy("digest", "keep_id")
-                .agg(
-                    F.max("text").alias("text"),
-                    F.min("source").alias("source"),
-                )
-            )
-        else:
-            texts = cleaned.select(
-                normalized_digest(F.col("text")).alias("digest"),
-                F.col("doc_id").alias("keep_id"),
-                "text",
-            ).dropDuplicates(["digest", "keep_id"])
-        prior_rows = None
-        bloom_params = (bloom_num_bits, bloom_num_hashes)
+        sess = batch_df.sparkSession
+        digest_bloom = None
         if bloom_store is not None:
-            from s3_access_logs_spark.functions.bloom import (
-                _COVER_MAX_BATCH,
-                _read_meta,
+            digest_bloom = _bloom_history(sess, store, bloom_store, batch_id)
+        with scoped_cache() as cache:
+            # curate's stage list over the micro-batch; store reads
+            # exclude this batch_id, so an at-least-once replay never
+            # self-collides with its own crashed attempt's rows
+            flags, batch_bands = _stage_flags(
+                batch_df, cache, min_quality=min_quality,
+                lm_model=lm_model, max_xent=max_xent, html=html,
+                normalize=normalize_text, digest_store=store,
+                band_store=band_store, store_batch_id=batch_id,
+                scrub_pii=scrub_pii, digest_bloom=digest_bloom,
             )
-            from s3_access_logs_spark.operators.dedup import (
-                dedup_incremental_bloom,
+            # Doc-store rows carry the (scrubbed) TEXT, not just digests:
+            # the store doubles as the batch pipeline's corpus input.
+            rows = flags.withColumn(
+                "digest", normalized_digest(F.col("text"))
+            ).withColumnRenamed("doc_id", "keep_id")
+            survivors = rows.filter(F.col("_verdict") == "kept").select(
+                "digest", "keep_id", "text"
             )
-
-            # ONE read of the filter store per batch: the collected rows
-            # feed the meta/coverage checks AND the probe (bloom_probe
-            # accepts pre-collected rows)
-            rows = read_prior(
-                bloom_store, "word bigint, bits bigint"
-            ).select("word", "bits").collect()
-            meta = {r["word"]: r["bits"] for r in rows if r["word"] < 0}
-            # several backfills leave several markers; the dict above
-            # keeps an arbitrary one — coverage is the MAX claim
-            cover_rows = [
-                r["bits"] for r in rows if r["word"] == _COVER_MAX_BATCH
-            ]
-            if cover_rows:
-                meta[_COVER_MAX_BATCH] = max(cover_rows)
-            # COVERAGE, not mere existence: every committed doc-store
-            # batch must have its filter partition, or predate the last
-            # backfill's coverage marker, or be a fold of covered batches
-            # (negative ids — compact_ingest_store folds rows, and the
-            # folded batches' own filter partitions remain). A stream
-            # that ran with the gate OFF for some batches would otherwise
-            # probe an under-approximating filter -> false negatives ->
-            # silent duplicates.
-            cover_max = meta.get(_COVER_MAX_BATCH, -1)
-            doc_batches = batch_leaves(sess, store)
-            bloom_batches = batch_leaves(sess, bloom_store)
-            bloom_live = {b for b in bloom_batches if b >= 0}
-            has_base = any(b < 0 for b in bloom_batches)
-            min_live = min(bloom_live) if bloom_live else None
-            # a doc batch with no filter partition is still covered when
-            # (a) a backfill marker claims it, or (b) the filter store
-            # has a base partition, SOME live partition exists, and the
-            # batch predates every live one — compact_ingest_store
-            # folded its filter ROWS into the base (union-idempotent).
-            # When NO live partition exists the base arm must NOT apply:
-            # a backfill marker at X followed by gate-off batches X+1..
-            # X+n leaves has_base true and bloom_live empty, and
-            # accepting those batches vacuously would re-open the exact
-            # silent-duplicate hole this check closes. The fold-all case
-            # (stream stopped, keep_recent=0) therefore raises too —
-            # loud, recoverable with one backfill, never silent.
-            def covered(b: int) -> bool:
-                if b in bloom_live or b <= cover_max:
-                    return True
-                return has_base and min_live is not None and b < min_live
-
-            uncovered = [
-                b
-                for b in doc_batches
-                if b >= 0 and b != batch_id and not covered(b)
-            ]
-            if uncovered:
-                raise ValueError(
-                    "ingest_documents_stream: digest-store batches "
-                    f"{uncovered} have no filter partition in "
-                    f"{bloom_store!r} (gate enabled after unfiltered "
-                    "history?) — a probe would miss those digests "
-                    "(false negatives = duplicate documents). Run "
-                    "backfill_bloom_store once, then restart the stream."
-                )
-            # a replayed FIRST batch sees only its own (excluded)
-            # filter partition -> no prior filter, plain path
-            if meta:
-                prior_rows = rows
-                nb, nh, _ = _read_meta(rows)
-                bloom_params = (nb, nh)  # existing store's params win
-        if prior_rows is not None:
-            deduped = dedup_incremental_bloom(cleaned, seen, prior_rows)
-        else:
-            deduped = dedup_incremental(cleaned, seen)
-        survivors = deduped.join(texts, ["digest", "keep_id"])
-        if (
-            shard_store is not None
-            and band_store is None
-            and semantic_index is None
-        ):
-            # the shard sink adds a second consumer (doc write + the
-            # tokenize/shard write) on the otherwise single-consumer
-            # plain path; the band/semantic paths already persist the
-            # frame the shard block reads
-            survivors = scoped(survivors)
-        if band_store is not None:
-            # Bands are computed from the SURVIVING (digest, keep_id,
-            # text) rows — the exact texts that land in the store. The
-            # previous shape re-joined `cleaned` on doc_id alone, so a
-            # batch carrying one doc_id with two distinct texts banded
-            # BOTH and appended bands for the non-surviving text — a
-            # store hit could then point at an id whose stored text
-            # never matched (ADVICE r4).
-            # survivors has several consumers on this path (band input,
-            # the doc write, its multiplication below) plus an expensive
-            # lineage (digest shuffle + full digest-store anti-join that
-            # grows with store age) -> scoped persist
-            survivors = scoped(survivors)
-            kept_docs = survivors.select(
-                F.col("keep_id").alias("doc_id"), "text"
-            )
-            seen_bands = read_prior(
-                band_store, "id long, band_idx int, band_key string"
-            ).select("id", "band_idx", "band_key")
-            hits, bands = near_dup_incremental(kept_docs, seen_bands)
-            # TWO consumers of the banding pass (the probe-hits lineage
-            # below and the kept_bands store write), and MinHash
-            # signatures are the expensive part of the gate (k hashes
-            # per shingle) — scoped persist so the batch bands compute
-            # once; Spark's cache manager substitutes the cached
-            # fragment into hits' plan by logical-plan matching
-            # (round 7: measured ~3.2 s/micro-batch on the band gate,
-            # the dominant per-batch cost)
-            bands = scoped(bands)
-            near_dup_ids = hits.select(
-                F.col("new_id").alias("doc_id")
-            ).distinct()
-            # DISTINCT: a batch repeating one doc_id would otherwise
-            # carry join multiplicity through kept_ids into both store
-            # writes, breaking store uniqueness with duplicate rows
-            kept_ids = scoped(kept_docs.select("doc_id").distinct().join(
-                near_dup_ids, "doc_id", "left_anti"
-            ))
-            survivors = survivors.join(
-                kept_ids.select(F.col("doc_id").alias("keep_id")), "keep_id"
-            )
-            kept_bands = bands.join(
-                kept_ids.select(F.col("doc_id").alias("id")), "id"
-            )
-        sem_kept_vecs = None
-        if semantic_index is not None:
-            from pyspark.sql.functions import broadcast
-
-            from s3_access_logs_spark.operators.similarity import (
-                _assign_clusters,
-                cosine_from_norms,
-                l2_norm,
-                well_formed_vector,
-            )
-
-            # survivors gains consumers (vector lookup + the final
-            # write, and the anti-join below re-reads it) — scoped
-            # persist; its lineage at this point is the digest shuffle
-            # plus every prior gate's joins
-            survivors = scoped(survivors)
-            batch_ids = survivors.select(
-                F.col("keep_id").alias("doc_id")
-            ).distinct()
-            # vector lookup: the side table is corpus-scale, the batch
-            # is small — broadcast the batch ids so the embeddings scan
-            # joins without shuffling; malformed vectors are treated as
-            # ABSENT (pass un-probed, never indexed), the same
-            # disposition as every other vector consumer
-            sem_vecs = (
-                semantic_embeddings.join(broadcast(batch_ids), "doc_id")
-                .filter(well_formed_vector("embedding", semantic_dims))
-                .select(
-                    F.col("doc_id").alias("query_id"),
-                    F.col("embedding").alias("q_vec"),
-                    l2_norm("embedding").alias("q_norm"),
-                )
-            )
-            if has_data_files(sess, semantic_index):
-                # nearest saved centroid per batch vector (broadcast
-                # argmin, zero exchange), then scan ONLY the touched
-                # posting-list partitions — plan-time literal isin, so
-                # partition pruning keeps the rest of the index out of
-                # the read entirely (the probe_ivf_index shape)
-                assigned = scoped(_assign_clusters(
-                    sem_vecs, semantic_centroids, "q_vec", 1
-                ))
-                touched = sorted(
-                    r["cluster"]
-                    for r in assigned.select("cluster").distinct().collect()
-                )
-                posting = (
-                    sess.read.parquet(semantic_index)
-                    .filter(F.col("cluster").isin(touched))
-                    # ignore entries from the CURRENT batch: a replayed
-                    # batch that already appended must reproduce its
-                    # first attempt's decisions, not self-collide
-                    # (within-batch semantic dups pass by scope rule)
+            if keep_source:
+                # one row per kept (digest, keep_id) with a DETERMINISTIC
+                # resolution over every gate-passing row sharing it:
+                # min(source) (NULLs lose) and max(text) — source is NOT
+                # functionally determined by the digest the way text
+                # effectively is, so an arbitrary pick would let replays
+                # store different bytes for the same feed
+                rows = cache(rows)
+                survivors = (
+                    rows.filter(~F.greatest(*[
+                        F.col(f"_f_{s}") for s in STAGES if s != "exact_dup"
+                    ]))
+                    .groupBy("digest", "keep_id")
+                    .agg(
+                        F.max("text").alias("text"),
+                        F.min("source").alias("source"),
+                    )
                     .join(
-                        broadcast(
-                            batch_ids.select(
-                                F.col("doc_id").alias("neighbor_id")
+                        survivors.select("digest", "keep_id"),
+                        ["digest", "keep_id"],
+                    )
+                )
+            if any(
+                sink is not None
+                for sink in (bloom_store, band_store, semantic_index,
+                             shard_store)
+            ):
+                # a second sink reads the survivors -> compute them once
+                survivors = cache(survivors)
+            sem_kept_vecs = None
+            if semantic_index is not None:
+                from s3_access_logs_spark.operators.similarity import (
+                    _assign_clusters,
+                    cosine_from_norms,
+                    l2_norm,
+                    well_formed_vector,
+                )
+
+                batch_ids = survivors.select(
+                    F.col("keep_id").alias("doc_id")
+                ).distinct()
+                # vector lookup: the side table is corpus-scale, the
+                # batch is small — broadcast the batch ids so the
+                # embeddings scan joins without shuffling; malformed
+                # vectors are treated as ABSENT (pass un-probed, never
+                # indexed), the same disposition as every other vector
+                # consumer
+                sem_vecs = (
+                    semantic_embeddings.join(F.broadcast(batch_ids), "doc_id")
+                    .filter(well_formed_vector("embedding", semantic_dims))
+                    .select(
+                        F.col("doc_id").alias("query_id"),
+                        F.col("embedding").alias("q_vec"),
+                        l2_norm("embedding").alias("q_norm"),
+                    )
+                )
+                if has_data_files(sess, semantic_index):
+                    # nearest saved centroid per batch vector (broadcast
+                    # argmin, zero exchange), then scan ONLY the touched
+                    # posting-list partitions — plan-time literal isin,
+                    # so partition pruning keeps the rest of the index
+                    # out of the read entirely (the probe_ivf_index shape)
+                    assigned = cache(_assign_clusters(
+                        sem_vecs, semantic_centroids, "q_vec", 1
+                    ))
+                    touched = sorted(
+                        r["cluster"]
+                        for r in assigned.select("cluster")
+                        .distinct()
+                        .collect()
+                    )
+                    posting = (
+                        sess.read.parquet(semantic_index)
+                        .filter(F.col("cluster").isin(touched))
+                        # ignore entries from the CURRENT batch: a
+                        # replayed batch that already appended must
+                        # reproduce its first attempt's decisions, not
+                        # self-collide (within-batch semantic dups pass
+                        # by scope rule)
+                        .join(
+                            F.broadcast(
+                                batch_ids.select(
+                                    F.col("doc_id").alias("neighbor_id")
+                                )
+                            ),
+                            "neighbor_id",
+                            "left_anti",
+                        )
+                    )
+                    sem_hits = (
+                        posting.join(F.broadcast(assigned), "cluster")
+                        .filter(
+                            cosine_from_norms(
+                                "q_vec", "c_vec", "q_norm", "c_norm"
                             )
-                        ),
-                        "neighbor_id",
-                        "left_anti",
+                            > F.lit(semantic_threshold)
+                        )
+                        .select(F.col("query_id").alias("keep_id"))
+                        .distinct()
                     )
-                )
-                sem_hits = (
-                    posting.join(broadcast(assigned), "cluster")
-                    .filter(
-                        cosine_from_norms("q_vec", "c_vec", "q_norm", "c_norm")
-                        > F.lit(semantic_threshold)
+                    # every sink below reads the FINAL survivors, whose
+                    # lineage re-reads the probed posting lists
+                    survivors = cache(
+                        survivors.join(sem_hits, "keep_id", "left_anti")
                     )
-                    .select(F.col("query_id").alias("keep_id"))
-                    .distinct()
-                )
-                # the FINAL survivors now has 2+ consumers (the store
-                # write plus every action the index append runs over
-                # sem_kept_vecs below) and its lineage re-reads the
-                # probed posting lists — scoped persist
-                survivors = scoped(
-                    survivors.join(sem_hits, "keep_id", "left_anti")
-                )
-            # vectors to index post-commit: only documents that actually
-            # land in the store (re-derived from the FINAL survivors so
-            # every later gate's drops are reflected). Persisted because
-            # append_to_ivf_index runs several actions over it
-            # (isEmpty, touched-cluster collect, anti-join stats, write)
-            # and its lineage re-scans the embeddings side table.
-            sem_kept_vecs = scoped(sem_vecs.join(
-                broadcast(
-                    survivors.select(
-                        F.col("keep_id").alias("query_id")
-                    ).distinct()
-                ),
-                "query_id",
-            ).select(
-                F.col("query_id").alias("vec_id"),
-                F.col("q_vec").alias("embedding"),
-            ))
-        try:
+                # vectors to index post-commit: only documents that
+                # actually land in the store. Cached because
+                # append_to_ivf_index runs several actions over it
+                # (isEmpty, touched-cluster collect, anti-join stats,
+                # write) and its lineage re-scans the embeddings table.
+                sem_kept_vecs = cache(sem_vecs.join(
+                    F.broadcast(
+                        survivors.select(
+                            F.col("keep_id").alias("query_id")
+                        ).distinct()
+                    ),
+                    "query_id",
+                ).select(
+                    F.col("query_id").alias("vec_id"),
+                    F.col("q_vec").alias("embedding"),
+                ))
             # Write order is the exactness argument: bloom partition
             # FIRST (a crash after it leaves the filter covering digests
             # the store never committed — over-approximation, safe),
@@ -1028,17 +767,21 @@ def ingest_documents_stream(
             # without bands (missed future near-dups, recoverable)
             # rather than bands without documents.
             if bloom_store is not None:
-                # two consumers (filter write + doc write) -> persist;
-                # on the plain path the doc write is the only consumer
-                survivors = scoped(survivors)
                 from s3_access_logs_spark.functions.bloom import (
                     DEFAULT_NUM_BITS,
                     DEFAULT_NUM_HASHES,
+                    _read_meta,
                     bloom_build,
                 )
 
-                nb = bloom_params[0] or DEFAULT_NUM_BITS
-                nh = bloom_params[1] or DEFAULT_NUM_HASHES
+                # an existing filter store's parameters win, so every
+                # partition stays mergeable
+                nb, nh = (
+                    _read_meta(digest_bloom)[:2] if digest_bloom else (
+                        bloom_num_bits or DEFAULT_NUM_BITS,
+                        bloom_num_hashes or DEFAULT_NUM_HASHES,
+                    )
+                )
                 write_batch_partition(
                     bloom_build(survivors.select("digest"), "digest", nb, nh),
                     batch_id,
@@ -1046,7 +789,18 @@ def ingest_documents_stream(
                 )
             write_batch_partition(survivors, batch_id, store)
             if band_store is not None:
-                write_batch_partition(kept_bands, batch_id, band_store)
+                # DISTINCT ids: a batch repeating one doc_id must not
+                # carry join multiplicity into the band store
+                write_batch_partition(
+                    batch_bands.join(
+                        survivors.select(
+                            F.col("keep_id").alias("id")
+                        ).distinct(),
+                        "id",
+                    ),
+                    batch_id,
+                    band_store,
+                )
             if sem_kept_vecs is not None:
                 # AFTER the doc commit (the band-store ordering rule): a
                 # crash here leaves committed docs unindexed — healed by
@@ -1117,11 +871,74 @@ def ingest_documents_stream(
                     extra_partition_cols=("shard",),
                     sort_cols=("shard_order",),
                 )
-        finally:
-            for df_ in _gate_persisted:
-                df_.unpersist()
 
     return _run_batches(docs, checkpoint, available_now, ingest_batch)
+
+
+def _bloom_history(
+    sess: SparkSession, store: str, bloom_store: str, batch_id: int
+) -> list | None:
+    """The Bloom filter over the digest store's PRIOR batches, for the
+    digest-history stage: the collected filter rows, or None when no
+    prior filter exists (a replayed FIRST batch sees only its own
+    excluded partition: plain history read). Fails loud when a committed
+    doc-store batch is not covered by the filter."""
+    from s3_access_logs_spark.functions.bloom import _COVER_MAX_BATCH
+
+    # ONE read of the filter store per batch: the collected rows feed
+    # the meta/coverage checks AND the probe (bloom_probe accepts
+    # pre-collected rows)
+    rows = read_prior_batches(
+        sess, bloom_store, "word bigint, bits bigint", batch_id
+    ).select("word", "bits").collect()
+    # COVERAGE, not mere existence: every committed doc-store batch must
+    # have its filter partition, or predate the last backfill's coverage
+    # marker, or be a fold of covered batches (negative ids —
+    # compact_ingest_store folds rows, and the folded batches' own
+    # filter partitions remain). A stream that ran with the gate OFF for
+    # some batches would otherwise probe an under-approximating filter
+    # -> false negatives -> silent duplicates.
+    # several backfills leave several markers — coverage is the MAX claim
+    cover_max = max(
+        (r["bits"] for r in rows if r["word"] == _COVER_MAX_BATCH), default=-1
+    )
+    bloom_batches = batch_leaves(sess, bloom_store)
+    bloom_live = {b for b in bloom_batches if b >= 0}
+    has_base = any(b < 0 for b in bloom_batches)
+    min_live = min(bloom_live) if bloom_live else None
+
+    # a doc batch with no filter partition is still covered when (a) a
+    # backfill marker claims it, or (b) the filter store has a base
+    # partition, SOME live partition exists, and the batch predates
+    # every live one — compact_ingest_store folded its filter ROWS into
+    # the base (union-idempotent). When NO live partition exists the
+    # base arm must NOT apply: a backfill marker at X followed by
+    # gate-off batches X+1..X+n leaves has_base true and bloom_live
+    # empty, and accepting those batches vacuously would re-open the
+    # exact silent-duplicate hole this check closes. The fold-all case
+    # (stream stopped, keep_recent=0) therefore raises too — loud,
+    # recoverable with one backfill, never silent.
+    def covered(b: int) -> bool:
+        if b in bloom_live or b <= cover_max:
+            return True
+        return has_base and min_live is not None and b < min_live
+
+    uncovered = [
+        b
+        for b in batch_leaves(sess, store)
+        if b >= 0 and b != batch_id and not covered(b)
+    ]
+    if uncovered:
+        raise ValueError(
+            "ingest_documents_stream: digest-store batches "
+            f"{uncovered} have no filter partition in "
+            f"{bloom_store!r} (gate enabled after unfiltered "
+            "history?) — a probe would miss those digests "
+            "(false negatives = duplicate documents). Run "
+            "backfill_bloom_store once, then restart the stream."
+        )
+    # meta rows (negative words) exist once any prior filter does
+    return rows if any(r["word"] < 0 for r in rows) else None
 
 
 def backfill_bloom_store(
@@ -1321,41 +1138,44 @@ def ingest_assets_stream(
                 hamming_near_pairs,
             )
 
-            survivors = survivors.persist()
-            # fp persists too: the Python-side payload decode+hash is
-            # the dominant per-batch cost and THREE consumers read it
-            # (within-batch pairs, the store probe, the band append)
-            fp = fingerprint_fn(
-                survivors.select(
-                    F.col("asset_id"), F.col("payload")
+            with scoped_cache() as cache:
+                survivors = cache(survivors)
+                # fp is cached too: the Python-side payload decode+hash
+                # is the dominant per-batch cost and THREE consumers read
+                # it (within-batch pairs, the store probe, the band
+                # append)
+                fp = cache(fingerprint_fn(
+                    survivors.select(F.col("asset_id"), F.col("payload"))
+                ))
+                # WITHIN-batch near-dups first: two re-encodes of one
+                # image arriving in the same micro-batch must not both
+                # pass just because neither is in the store yet. Keep the
+                # smaller id of every near pair (hamming_near_pairs emits
+                # id_a < id_b).
+                intra_drop = (
+                    hamming_near_pairs(
+                        fp, max_hamming=max_hamming, max_band_freq=None
+                    )
+                    .select(F.col("id_b").alias("id"))
+                    .distinct()
                 )
-            ).persist()
-            # WITHIN-batch near-dups first: two re-encodes of one image
-            # arriving in the same micro-batch must not both pass just
-            # because neither is in the store yet. Keep the smaller id
-            # of every near pair (hamming_near_pairs emits id_a < id_b).
-            intra_drop = (
-                hamming_near_pairs(
-                    fp, max_hamming=max_hamming, max_band_freq=None
+                fp_kept = fp.join(intra_drop, "id", "left_anti")
+                seen_bands = read_prior(
+                    fingerprint_store,
+                    "id long, w0 long, w1 long, chunk_idx int, "
+                    "chunk_val long",
+                ).select("id", "w0", "w1", "chunk_idx", "chunk_val")
+                hits, bands = hamming_incremental(
+                    fp_kept, seen_bands, max_hamming=max_hamming
                 )
-                .select(F.col("id_b").alias("id"))
-                .distinct()
-            )
-            fp_kept = fp.join(intra_drop, "id", "left_anti")
-            seen_bands = read_prior(
-                fingerprint_store,
-                "id long, w0 long, w1 long, chunk_idx int, chunk_val long",
-            ).select("id", "w0", "w1", "chunk_idx", "chunk_val")
-            hits, bands = hamming_incremental(
-                fp_kept, seen_bands, max_hamming=max_hamming
-            )
-            near_ids = hits.select(
-                F.col("new_id").alias("asset_id")
-            ).unionByName(
-                intra_drop.select(F.col("id").alias("asset_id"))
-            ).distinct()
-            kept = survivors.join(near_ids, "asset_id", "left_anti").persist()
-            try:
+                near_ids = hits.select(
+                    F.col("new_id").alias("asset_id")
+                ).unionByName(
+                    intra_drop.select(F.col("id").alias("asset_id"))
+                ).distinct()
+                kept = cache(
+                    survivors.join(near_ids, "asset_id", "left_anti")
+                )
                 write_batch_partition(kept, batch_id, store)
                 kept_bands = bands.join(
                     kept.select(F.col("asset_id").alias("id")), "id"
@@ -1363,10 +1183,6 @@ def ingest_assets_stream(
                 write_batch_partition(
                     kept_bands, batch_id, fingerprint_store
                 )
-            finally:
-                survivors.unpersist()
-                fp.unpersist()
-                kept.unpersist()
         else:
             write_batch_partition(survivors, batch_id, store)
 

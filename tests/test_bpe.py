@@ -1296,9 +1296,10 @@ class TestDistributedTrainer:
         flight; live checkpoint blocks must stay at that constant at
         EVERY iteration — a per-iteration bound proves non-accumulation
         for ANY merge count (1024 or 100k), without a production-length
-        run in the suite. The ≥1024-merge end-state run lives in
-        tools/bpe_scale.py evidence (OPTIMIZATION_r14.md); this pins
-        the invariant the evidence relies on."""
+        run in the suite. The ≥1024-merge end-state run is
+        ``tools/trainer_scale.py --equality`` (BASELINE.md, "Round 13:
+        incremental (delta) distributed trainer"); this pins the
+        invariant that run relies on."""
         import itertools
         import string
 

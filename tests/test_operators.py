@@ -22,6 +22,45 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
+@pytest.fixture(scope="module")
+def ivfpq_default(spark, tmp_path_factory):
+    """``build_ivfpq_index(emb, dst)`` over the sf0.001 embeddings, built
+    once per module; its users only read it. ``(emb, dst, cents, cb)``."""
+    from s3_access_logs_spark.operators.similarity import build_ivfpq_index
+    from s3_access_logs_spark.sources.tables import load_table
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    dst = str(tmp_path_factory.mktemp("ivfpq_default") / "ivfpq")
+    cents, cb = build_ivfpq_index(emb, dst)
+    return emb, dst, cents, cb
+
+
+@pytest.fixture(scope="module")
+def ivfpq_residual(spark, tmp_path_factory):
+    """A residual index over the well-formed sf0.001 embeddings with
+    ``label_centroids`` and the default (refined) codebook, built once
+    per module; its users only read it.
+    ``(emb, cents, dst, idx_cents, idx_cb)``."""
+    from s3_access_logs_spark.operators.similarity import (
+        build_ivfpq_index,
+        label_centroids,
+    )
+    from s3_access_logs_spark.plans.vector_queries import (
+        well_formed_embeddings,
+    )
+    from s3_access_logs_spark.sources.tables import load_table
+
+    emb = well_formed_embeddings(
+        load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    )
+    cents = label_centroids(emb, "label", dims=64)
+    dst = str(tmp_path_factory.mktemp("ivfpq_residual") / "ivfpq_res")
+    idx_cents, idx_cb = build_ivfpq_index(
+        emb, dst, centroids=cents, residual=True
+    )
+    return emb, cents, dst, idx_cents, idx_cb
+
+
 class TestDedupExact:
     def test_survivor_is_min_id(self, spark):
         df = _docs(
@@ -3343,19 +3382,15 @@ class TestSentiment:
 
 
 class TestIvfPq:
-    def test_build_probe_prunes_and_recalls(self, spark, tmp_path):
+    def test_build_probe_prunes_and_recalls(self, spark, ivfpq_default):
         from s3_access_logs_spark.functions.vectors import l2_distance
         from s3_access_logs_spark.operators.similarity import (
-            build_ivfpq_index,
             probe_ivfpq_index,
         )
-        from s3_access_logs_spark.sources.tables import load_table
         from pyspark.sql import Window
 
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+        emb, dst, cents, cb = ivfpq_default
         queries = emb.filter(F.col("vec_id") < 4)
-        dst = str(tmp_path / "ivfpq")
-        cents, cb = build_ivfpq_index(emb, dst)
         # index stores codes, not vectors: m bytes of codes per row
         stored = spark.read.parquet(dst)
         assert set(stored.columns) == {"neighbor_id", "pq_codes", "cluster"}
@@ -3714,29 +3749,23 @@ class TestReviewFixes:
             ids = {r[1] for r in got}
             assert ids and ids.isdisjoint({100, 101, 103, 104, 105}), name
 
-    def test_pq_residual_topk_matches_indexed_probe(self, spark, tmp_path):
+    def test_pq_residual_topk_matches_indexed_probe(
+        self, spark, tmp_path, ivfpq_residual
+    ):
         """The catalog's in-memory residual entry and the production
         build_ivfpq_index/probe_ivfpq_index residual path must rank
         identically — same assignment, residual, codebook, encode and
         ADC stages, the parquet hop being the only difference."""
         from s3_access_logs_spark.operators.similarity import (
             build_ivfpq_index,
-            label_centroids,
             pq_residual_topk,
             probe_ivfpq_index,
             train_pq_codebook,
             _assign_clusters,
             _residual_col,
         )
-        from s3_access_logs_spark.plans.vector_queries import (
-            well_formed_embeddings,
-        )
-        from s3_access_logs_spark.sources.tables import load_table
 
-        emb = well_formed_embeddings(
-            load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        )
-        cents = label_centroids(emb, "label", dims=64)
+        emb, cents, idx2, d_cents, d_cb = ivfpq_residual
         queries = emb.filter(F.col("vec_id") < 4)
         mem = sorted(
             map(
@@ -3781,11 +3810,8 @@ class TestReviewFixes:
         assert mem == probed
         # default-vs-default: a DEFAULT-built index (refined codebook)
         # is mirrored by the twin at codebook_refine_iters=4 — the
-        # documented way to validate a default build in memory
-        idx2 = str(tmp_path / "ivfpq_res_default")
-        d_cents, d_cb = build_ivfpq_index(
-            emb, idx2, centroids=cents, residual=True
-        )
+        # documented way to validate a default build in memory (the
+        # shared index is that default build)
         probed_default = sorted(
             map(
                 tuple,
@@ -3806,7 +3832,9 @@ class TestReviewFixes:
         )
         assert mem_refined == probed_default
 
-    def test_append_residual_matches_full_rebuild(self, spark, tmp_path):
+    def test_append_residual_matches_full_rebuild(
+        self, spark, tmp_path, ivfpq_residual
+    ):
         """append_to_ivfpq_index(residual=True) must leave the index in
         the same probe-visible state as building it from the full corpus
         in one shot — appending raw codes into a residual index would
@@ -3815,23 +3843,11 @@ class TestReviewFixes:
         from s3_access_logs_spark.operators.similarity import (
             append_to_ivfpq_index,
             build_ivfpq_index,
-            label_centroids,
             probe_ivfpq_index,
         )
-        from s3_access_logs_spark.plans.vector_queries import (
-            well_formed_embeddings,
-        )
-        from s3_access_logs_spark.sources.tables import load_table
 
-        emb = well_formed_embeddings(
-            load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        )
-        cents = label_centroids(emb, "label", dims=64)
+        emb, cents, full_idx, f_cents, f_cb = ivfpq_residual
         queries = emb.filter(F.col("vec_id") < 4)
-        full_idx = str(tmp_path / "full")
-        f_cents, f_cb = build_ivfpq_index(
-            emb, full_idx, centroids=cents, residual=True
-        )
         # incremental: build from the first half, append the rest with
         # the SAME artifacts (the codebook-compatibility contract)
         lo = emb.filter(F.col("vec_id") % 2 == 0)
@@ -6461,7 +6477,7 @@ class TestTemperatureMixtureGuard:
 
 
 class TestIvfPqRefine:
-    def test_refine_beats_adc_only_recall(self, spark, tmp_path):
+    def test_refine_beats_adc_only_recall(self, spark, ivfpq_default):
         """VERDICT r4 item 6: the two-stage refine (ADC top-k' -> exact
         re-rank over only those candidates' full vectors) must recover
         recall@k lost to PQ quantization, with the refine read id-pruned
@@ -6470,15 +6486,11 @@ class TestIvfPqRefine:
 
         from s3_access_logs_spark.functions.vectors import l2_distance
         from s3_access_logs_spark.operators.similarity import (
-            build_ivfpq_index,
             probe_ivfpq_index,
         )
-        from s3_access_logs_spark.sources.tables import load_table
 
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+        emb, dst, cents, cb = ivfpq_default
         queries = emb.filter(F.col("vec_id") < 4)
-        dst = str(tmp_path / "ivfpq")
-        cents, cb = build_ivfpq_index(emb, dst)
 
         k, nprobe = 10, 4
         adc = probe_ivfpq_index(

@@ -501,11 +501,13 @@ class TestMaintenanceComposition:
 
         victims = [3, 11, 19]
         # five identical stores: reference (purge only), the two op
-        # orders, and the two crashed-op-A-then-op-B sequences
-        stores = {
-            n: self._stream_store(spark, tmp_path, n)
-            for n in ("ref", "pc", "cp", "crashp", "crashc")
-        }
+        # orders, and the two crashed-op-A-then-op-B sequences — one
+        # streamed store, copied byte for byte
+        streamed = self._stream_store(spark, tmp_path, "streamed")
+        stores = {}
+        for n in ("ref", "pc", "cp", "crashp", "crashc"):
+            stores[n] = str(tmp_path / n / "shards")
+            shutil.copytree(streamed, stores[n])
         purge_documents(spark, victims, token_store=stores["ref"])
         ref = self._rk(spark, stores["ref"], tmp_path / "r_ref")
         assert ref  # non-vacuous

@@ -56,6 +56,22 @@ def exact_top10(clustered):
     return out
 
 
+@pytest.fixture(scope="module")
+def raw_ivfpq(clustered, tmp_path_factory):
+    """The raw (non-residual) PQ index over the clustered corpus with
+    ``label_centroids``, built once per module; its users only read it.
+    ``(cents, idx, idx_cents, idx_cb)``."""
+    from s3_access_logs_spark.operators.similarity import (
+        build_ivfpq_index,
+        label_centroids,
+    )
+
+    cents = label_centroids(clustered, "label", dims=64)
+    idx = str(tmp_path_factory.mktemp("raw_ivfpq") / "raw")
+    idx_cents, idx_cb = build_ivfpq_index(clustered, idx, centroids=cents)
+    return cents, idx, idx_cents, idx_cb
+
+
 class TestClusteredRecall:
     def test_generator_contract(self, clustered):
         from s3_access_logs_spark.operators.similarity import (
@@ -114,20 +130,14 @@ class TestClusteredRecall:
         assert r >= 0.5, f"LSH recall@10 {r} under the clustered floor"
 
     def test_pq_refine_improves_on_adc(
-        self, spark, clustered, exact_top10, tmp_path
+        self, spark, clustered, exact_top10, raw_ivfpq
     ):
         from s3_access_logs_spark.operators.similarity import (
-            build_ivfpq_index,
-            label_centroids,
             probe_ivfpq_index,
         )
 
-        cents = label_centroids(clustered, "label", dims=64)
+        _, idx, cb_cents, codebook = raw_ivfpq
         queries = clustered.filter(F.col("vec_id") < 8)
-        idx = str(tmp_path / "ivfpq")
-        cb_cents, codebook = build_ivfpq_index(
-            clustered, idx, centroids=cents
-        )
         adc = _recall(
             exact_top10,
             probe_ivfpq_index(
@@ -147,7 +157,7 @@ class TestClusteredRecall:
         assert refined >= 0.3, f"PQ refine recall@10 {refined} collapsed"
 
     def test_residual_encoding_beats_raw(
-        self, spark, clustered, exact_top10, tmp_path
+        self, spark, clustered, exact_top10, raw_ivfpq, tmp_path
     ):
         """Round-7 quality fix for the honest gap the clustered table
         exposed (commit 2ab28bd): raw PQ spends its whole code budget
@@ -163,17 +173,12 @@ class TestClusteredRecall:
         not just as a smaller printed number."""
         from s3_access_logs_spark.operators.similarity import (
             build_ivfpq_index,
-            label_centroids,
             probe_ivfpq_index,
         )
 
-        cents = label_centroids(clustered, "label", dims=64)
+        cents, raw_idx, raw_cents, raw_cb = raw_ivfpq
         queries = clustered.filter(F.col("vec_id") < 8)
-        raw_idx = str(tmp_path / "raw")
         res_idx = str(tmp_path / "res")
-        raw_cents, raw_cb = build_ivfpq_index(
-            clustered, raw_idx, centroids=cents
-        )
         res_cents, res_cb = build_ivfpq_index(
             clustered, res_idx, centroids=cents, residual=True
         )

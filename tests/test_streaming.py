@@ -2787,3 +2787,184 @@ class TestShardStoreTokenizerSwitch:
                 str(tmp_path / "ckpt2"), shard_store=shards,
                 n_shards=2, shard_merges=other,
             )
+
+
+def _drop_jsonl(src, name, rows):
+    import json
+
+    (src / name).write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+
+
+class TestScopedCacheRelease:
+    """A raising op releases every cache it took: no persisted RDD the
+    op created outlives the raise (the set-difference pattern of
+    TestCurateSemantic::test_failing_stage_releases_scoped_caches)."""
+
+    @staticmethod
+    def _stream_bloom_gap(spark, tmp_path):
+        # a digest store with one unfiltered batch; the LM + Bloom stream
+        # over it fails its coverage check
+        from s3_access_logs_spark.functions.lm import train_bigram_lm
+        from s3_access_logs_spark.streaming import ingest_documents_stream
+
+        src = tmp_path / "in"
+        src.mkdir()
+        store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+        _drop_jsonl(src, "b0.jsonl", [
+            {"doc_id": 0, "text": "unfiltered history document"}
+        ])
+        ingest_documents_stream(
+            spark, str(src), store, ckpt
+        ).awaitTermination(120)
+        model = train_bigram_lm(spark.createDataFrame(
+            [(i, "the quick brown fox jumps over the lazy dog")
+             for i in range(5)],
+            ["doc_id", "text"],
+        ))
+        _drop_jsonl(src, "b1.jsonl", [
+            {"doc_id": 10 + i, "text": f"the quick brown fox number {i}"}
+            for i in range(3)
+        ])
+        q = ingest_documents_stream(
+            spark, str(src), store, ckpt, lm_model=model, max_xent=3.0,
+            bloom_store=str(tmp_path / "bloom"),
+        )
+        with pytest.raises(Exception, match="no filter partition"):
+            q.awaitTermination(120)
+
+    @staticmethod
+    def _export_mixture(spark, tmp_path):
+        # two sources over a one-source bound: temperature_mixture
+        # raises after its count collect ran over the cached survivors
+        from s3_access_logs_spark.operators.export import (
+            export_training_set,
+        )
+
+        docs = spark.createDataFrame(
+            [(i, f"mixture corpus document {i} with words",
+              "web" if i % 2 else "books") for i in range(6)],
+            "doc_id long, text string, source string",
+        )
+        with pytest.raises(ValueError, match="max_sources"):
+            export_training_set(
+                docs, str(tmp_path / "w"), n_shards=2, window_ids=16,
+                mixture={"max_sources": 1},
+            )
+
+    @pytest.mark.parametrize("scenario", ["stream_bloom_gap", "export_mixture"])
+    def test_raise_leaves_no_persisted_rdd(
+        self, spark, tmp_path, monkeypatch, scenario
+    ):
+        def rdd_ids():
+            jmap = spark.sparkContext._jsc.getPersistentRDDs()
+            return {int(k) for k in jmap.keySet().toArray()}
+
+        # a persist the op never ran an action over registers a cached
+        # plan but no RDD yet, so the frames persisted during the op are
+        # recorded and their storage level checked too
+        cls = type(spark.range(1))
+        persisted = []
+        real_persist = cls.persist
+
+        def persist(df, *args, **kwargs):
+            persisted.append(df)
+            return real_persist(df, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "persist", persist)
+        before = rdd_ids()
+        getattr(self, f"_{scenario}")(spark, tmp_path)
+        assert not (rdd_ids() - before)
+        assert not [df for df in persisted if df.storageLevel.useMemory]
+
+
+class TestStreamCurateParity:
+    """One gate stack: the same documents fed as a stream micro-batch and
+    as an incremental curate_corpus call leave identical digest and band
+    stores — with a seeded history so the digest- and band-history gates
+    fire, plus case/whitespace exact dups, a low-quality doc and a blank
+    doc inside the batch."""
+
+    BASE = (
+        "the quick brown fox jumps over the lazy dog and then it runs "
+        "far away into the deep green forest to rest for a long while"
+    )
+    SEED = [
+        (1, BASE),
+        (2, "completely unrelated fresh content about cooking pasta with "
+            "garlic and olive oil for dinner again tonight with friends"),
+        (3, "a short history of the river valley towns and the people "
+            "who built the old stone bridges across the water long ago"),
+    ]
+    NEW_A = (
+        "entirely new material on growing tomatoes in small gardens with "
+        "plenty of afternoon sun and rich soil for the whole summer"
+    )
+    NEW_C = (
+        "notes on repairing an old bicycle chain with simple tools and a "
+        "little patience before the long ride to the coast next week"
+    )
+    BATCH = [
+        (10, BASE),                                  # exact dup of history
+        (11, BASE + " minor footer edit"),           # near dup of history
+        (12, NEW_A),
+        (13, "  " + NEW_A.upper().replace(" ", "   ")),  # case/space dup
+        (14, "a guide to baking bread at home with flour water salt and "
+             "yeast while the kitchen stays warm through the evening"),
+        (15, "zz zz zz zz"),                         # low quality
+        (16, "   "),                                 # blank
+        (17, NEW_C),
+        (18, NEW_C.replace(" ", "\n", 3)),           # whitespace dup
+        (19, "the museum opened a new wing for modern paintings and "
+             "sculpture from artists who worked in the northern cities"),
+        (20, "weather reports for the mountain passes warn of snow and "
+             "strong winds over the weekend so travel plans may change"),
+        (21, "ok ok ok ok ok"),                      # low quality
+    ]
+
+    def test_stream_batch_equals_incremental_curate(self, spark, tmp_path):
+        from s3_access_logs_spark.operators.curate import curate_corpus
+        from s3_access_logs_spark.streaming import ingest_documents_stream
+
+        src = tmp_path / "in"
+        src.mkdir()
+        s_docs, s_bands = str(tmp_path / "s_docs"), str(tmp_path / "s_bands")
+        c_docs, c_bands = str(tmp_path / "c_docs"), str(tmp_path / "c_bands")
+
+        def stream():
+            ingest_documents_stream(
+                spark, str(src), s_docs, str(tmp_path / "ckpt"),
+                min_quality=0.5, band_store=s_bands,
+            ).awaitTermination(120)
+
+        def curate(rows, batch_id):
+            curate_corpus(
+                spark.createDataFrame(rows, "doc_id long, text string"),
+                min_quality=0.5, digest_store=c_docs, band_store=c_bands,
+                store_batch_id=batch_id,
+            )
+
+        _drop_jsonl(src, "b0.jsonl", [
+            {"doc_id": i, "text": t} for i, t in self.SEED
+        ])
+        stream()
+        curate(self.SEED, 0)
+        _drop_jsonl(src, "b1.jsonl", [
+            {"doc_id": i, "text": t} for i, t in self.BATCH
+        ])
+        stream()
+        curate(self.BATCH, 1)
+
+        def rows(path, cols):
+            return sorted(
+                tuple(r) for r in spark.read.parquet(path).select(
+                    "batch_id", *cols
+                ).collect()
+            )
+
+        doc_cols = ("digest", "keep_id", "text")
+        band_cols = ("id", "band_idx", "band_key")
+        assert rows(s_docs, doc_cols) == rows(c_docs, doc_cols)
+        assert rows(s_bands, band_cols) == rows(c_bands, band_cols)
+        # the history gates fired: batch 1 keeps only the new documents
+        kept = {r[2] for r in rows(s_docs, doc_cols) if r[0] == 1}
+        assert kept == {12, 14, 17, 19, 20}
