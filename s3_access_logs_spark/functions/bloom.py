@@ -2,8 +2,9 @@
 bitmap mutation, codegen end-to-end.
 
 Why it exists: the incremental ingestion paths probe ever-growing
-append-only stores (exact-digest store `operators/dedup.py:dedup_incremental`,
-MinHash band store `near_dup_incremental`). Each batch pays an anti-join
+append-only stores (the exact-digest store of curate's digest-history
+gate, `operators/curate.py:_stage_flags`, and the MinHash band store of
+`near_dup_incremental`). Each batch pays an anti-join
 whose big side is the WHOLE store — correct, but at 100 TB the store scan
 dominates every batch even though almost all batch rows are brand new. A
 Bloom filter of the store's digests answers "definitely new" for the

@@ -85,93 +85,6 @@ def dedup_exact(
     )
 
 
-def dedup_incremental(
-    new_docs: DataFrame,
-    seen_digests: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    digest_col: str = "digest",
-) -> DataFrame:
-    """Incremental ingestion dedup: of a new batch, keep one survivor per
-    normalized digest (min id) that is NOT already in the corpus digest
-    store. Returns (digest, keep_id) — append these rows to the store after
-    the batch commits, making the pipeline idempotent across crawls.
-
-    Scale shape: within-batch dedup is one hash aggregation on the batch
-    (small side); the store probe is a left-anti join on the digest. The
-    batch is typically orders of magnitude smaller than the corpus, so at
-    100 TB the anti join should run with the STORE partitioned/bucketed on
-    digest and the batch shuffled to it — never the reverse; Spark's
-    planner does exactly that when the store is the big side. No full-store
-    rewrite: the store only ever appends.
-    """
-    # NULL-text docs are excluded, not deduped: their digest is NULL, so
-    # the groupBy would collapse every NULL-text doc in the batch into
-    # ONE group and silently drop all but the min id — they are not
-    # duplicates of each other, they are non-documents (route extraction
-    # failures to a retry queue upstream, not through dedup)
-    batch = (
-        new_docs.filter(F.col(text_col).isNotNull())
-        .select(
-            normalized_digest(F.col(text_col)).alias(digest_col),
-            F.col(id_col),
-        )
-        .groupBy(digest_col)
-        .agg(F.min(id_col).alias("keep_id"))
-    )
-    return batch.join(
-        seen_digests.select(digest_col), digest_col, "left_anti"
-    )
-
-
-def dedup_incremental_bloom(
-    new_docs: DataFrame,
-    seen_digests: DataFrame,
-    digest_bloom: DataFrame | list,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    digest_col: str = "digest",
-) -> DataFrame:
-    """:func:`dedup_incremental` with a Bloom pre-filter over the digest
-    store (``digest_bloom`` built by :func:`functions.bloom.bloom_build`
-    on the store's digest column, persisted and grown with
-    :func:`functions.bloom.bloom_merge` per committed batch).
-
-    Why: the plain anti-join's big side is the WHOLE append-only store —
-    every batch re-scans it even though almost every batch row is new. A
-    Bloom filter has NO false negatives, so rows it rejects are
-    definitely-new and skip the store entirely; only the maybe-seen slice
-    (true dups + the fp rate) checks the real store — and with the maybe
-    set broadcast, the store is SCANNED but never SHUFFLED (the plain
-    left-anti must build its hash table from the store side, so it
-    exchanges the whole store every batch). Join work tracks the
-    DUPLICATE volume, not the store size; the residual full-store scan
-    disappears too once the store is hive-partitioned by a digest prefix
-    (the broadcast probe set then prunes partitions).
-
-    Exactness preserved: maybe-rows still anti-join the real store, so the
-    output equals :func:`dedup_incremental` bit-for-bit (pinned by
-    ``TestBloomFilter::test_incremental_bloom_equals_plain``). Returns the
-    same (digest, keep_id) contract — append survivors to the store AND
-    fold their bloom (``bloom_build`` of the survivors, ``bloom_merge``)
-    after the batch commits."""
-    # same NULL-text exclusion as dedup_incremental (bit-for-bit parity
-    # is the contract)
-    batch = (
-        new_docs.filter(F.col(text_col).isNotNull())
-        .select(
-            normalized_digest(F.col(text_col)).alias(digest_col),
-            F.col(id_col),
-        )
-        .groupBy(digest_col)
-        .agg(F.min(id_col).alias("keep_id"))
-    )
-    # rows the filter rejects are definitely new and never meet the
-    # store; the maybe-seen slice is checked against it exactly
-    present = bloom_maybe_seen(batch, seen_digests, digest_bloom, digest_col)
-    return batch.join(F.broadcast(present), digest_col, "left_anti")
-
-
 def bloom_maybe_seen(
     digests: DataFrame,
     seen_digests: DataFrame,
@@ -1770,7 +1683,8 @@ def near_dup_incremental(
     bands: int = 4,
     shingle_n: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
-    """Incremental NEAR-dup (the fuzzy twin of ``dedup_incremental``):
+    """Incremental NEAR-dup (the fuzzy twin of curate's digest-history
+    gate):
     probe a new batch's MinHash band keys against the corpus's
     append-only band store.
 

@@ -17,6 +17,7 @@ Two tiers, same contract (query set -> top-k neighbors per query):
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -850,6 +851,8 @@ def ivf_topk(
     nearest centroids and scans only those posting lists: cost
     nprobe/nlist of the corpus per query instead of a full scan.
 
+    The in-memory twin of ``build_ivf_index`` + ``probe_ivf_index``: the
+    same assign, encode and score stages, minus the parquet hop.
     Deterministic end-to-end (centroid components rounded; every tie broken
     on an id), hence DuckDB-oracle-checkable — unusual for ANN and the
     reason this variant anchors the correctness suite while
@@ -857,20 +860,249 @@ def ivf_topk(
     cents = centroids if centroids is not None else label_centroids(
         corpus, label_col, vec_col
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
+    return _score(
+        _index_rows(corpus, cents, _FLAT, id_col, vec_col),
+        _query_probes(queries, cents, _FLAT, nprobe, id_col, vec_col),
+        _FLAT,
+        k,
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
+
+
+def _materialize_artifact(df: DataFrame) -> DataFrame:
+    """Collect a trained artifact (centroids / codebook — broadcast-sized
+    by definition) and rebuild it as a local-rows frame. Every index op
+    takes its artifacts through this once at entry, so the op broadcasts
+    DATA, not a lineage: a lazy artifact re-executes its entire training
+    (a full corpus pass for a codebook) inside EVERY action — measured as
+    a 986-task stage per probe at 100× (nlist=1000, 200k vectors), 9.7 s
+    vs 7.2 s per probe."""
+    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+
+
+# ---------------------------------------------------------------------------
+# The on-disk IVF index: one protocol for the flat and the IVF-PQ codec.
+# Every posting list is a ``cluster=<label>`` hive partition. Build, append
+# and probe run the same stages — assign, encode, write or pruned read,
+# score — behind one contract check; the codec decides only what a posting
+# row stores and how a probe scores it.
+# ---------------------------------------------------------------------------
+
+
+class _Codec(NamedTuple):
+    """What an index stores per posting row. Flat (``pq=False``): the
+    vector ``c_vec`` and its norm ``c_norm``, scored by exact cosine. PQ:
+    ``pq_codes`` of the raw vector — or, with ``residual``, of its
+    residual against the row's coarse centroid — scored by ADC over
+    ``codebook``; ``(dims, m, residual)`` is the encode contract the
+    index's ``IVFPQ_META_SIDECAR`` persists."""
+
+    pq: bool = False
+    dims: int = 0
+    m: int = 0
+    residual: bool = False
+    codebook: DataFrame | None = None
+
+    def materialized(self) -> _Codec:
+        if self.codebook is None:
+            return self
+        return self._replace(codebook=_materialize_artifact(self.codebook))
+
+
+_FLAT = _Codec()
+
+
+def _index_contract(
+    spark, index_path: str, codec: _Codec, op: str, existing: bool = True
+) -> None:
+    """The ONE contract check of the on-disk index, run by every index op
+    (build, append and probe; flat and PQ) before it reads or writes.
+
+    A PQ codec's subspace split must be exact (``m`` divides ``dims``).
+    An op on an ``existing`` index — every append and probe; a build
+    overwrites ``index_path`` — then needs committed data (appending into
+    a void would create an index that silently lacks the rest of the
+    corpus), and the index's stored contract must match the codec. The
+    PQ encode contract lives in ``IVFPQ_META_SIDECAR``; a flat index has
+    no sidecar, so flat indexes of every age stay usable.
+
+    * A flat op on an index carrying the sidecar is refused: an append
+      would write rows whose ``pq_codes`` read back NULL — invisible to
+      every PQ probe, and shadowing a later correct append of the same
+      ids from ``skip_existing`` — and a probe would look for vectors
+      the index does not store.
+    * A PQ op needs the sidecar, and its flags must match it. Missing is
+      loud (review r8): silently trusting the caller's flags is exactly
+      the garbage-distance footgun the sidecar closes, and a build that
+      crashed between its data write and its stamp would otherwise
+      degrade to that forever. Recovery is one explicit
+      :func:`stamp_ivfpq_meta` call (or a rebuild)."""
+    from s3_access_logs_spark.sources.fsutil import (
+        has_data_files,
+        read_json_sidecar,
     )
-    c_assigned = _assign_clusters(c, cents, "c_vec", 1)
-    q_probes = _assign_clusters(q, cents, "q_vec", nprobe)
+
+    if codec.pq and (codec.m < 1 or codec.dims % codec.m):
+        raise ValueError(f"{op}: dims={codec.dims} not divisible by m={codec.m}")
+    if not existing:
+        return
+    builder = "build_ivfpq_index" if codec.pq else "build_ivf_index"
+    if not has_data_files(spark, index_path):
+        raise ValueError(
+            f"{op}: no committed index at {index_path!r} — run {builder} "
+            "first"
+        )
+    meta = read_json_sidecar(spark, index_path, IVFPQ_META_SIDECAR)
+    if not codec.pq:
+        if meta is not None:
+            raise ValueError(
+                f"{op}: {index_path!r} is an IVF-PQ index (its "
+                f"{IVFPQ_META_SIDECAR} holds {meta}) — a flat op would "
+                "append rows without codes or probe for vectors the index "
+                "does not store; use the *_ivfpq_index ops"
+            )
+        return
+    if meta is None:
+        raise ValueError(
+            f"{op}: no {IVFPQ_META_SIDECAR} sidecar at {index_path!r} — "
+            "the index predates the sidecar scheme or its build crashed "
+            "before the stamp. Probing with unvalidated flags risks "
+            "garbage distances; if the build-time residual/dims/m are "
+            "known, stamp them once with stamp_ivfpq_meta(), else "
+            "rebuild with build_ivfpq_index()"
+        )
+    expected = _ivfpq_meta(codec.dims, codec.m, codec.residual)
+    if meta != expected:
+        raise ValueError(
+            f"{op}: flags {expected} do not match the index's persisted "
+            f"encode contract {meta} at {index_path!r} — a mismatched "
+            "residual/dims/m would score stored codes with the wrong "
+            "LUT and return garbage distances; pass the build-time "
+            "flags or rebuild the index"
+        )
+
+
+def _residual(
+    df: DataFrame, cents: DataFrame, vec: str, dims: int, out: str | None = None
+) -> DataFrame:
+    """``df`` (keyed by ``cluster``) with ``out`` (default: ``vec`` in
+    place) set to ``vec - centroid(cluster)``, the IVF-PQ residual
+    construction. The nlist-row centroid table is broadcast, so ``df``
+    never shuffles."""
+    cent_vecs = cents.select(
+        F.col("label").alias("cluster"), F.col("centroid").alias("_cent")
+    )
+    return (
+        df.join(broadcast(cent_vecs), "cluster")
+        .withColumn(out or vec, _residual_col(vec, "_cent", dims))
+        .drop("_cent")
+    )
+
+
+def _assign(
+    vectors: DataFrame, cents: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(neighbor_id, c_vec, cluster): every vector under its nearest
+    centroid — the zero-exchange broadcast argmin of ``_assign_clusters``."""
+    return _assign_clusters(
+        vectors.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        ),
+        cents,
+        "c_vec",
+        1,
+    )
+
+
+def _index_rows(
+    vectors: DataFrame,
+    cents: DataFrame,
+    codec: _Codec,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Assign + encode: one posting row per input vector, keyed by
+    ``neighbor_id`` and ``cluster``, carrying the codec's columns."""
+    rows = _assign(vectors, cents, id_col, vec_col)
+    if not codec.pq:
+        return rows.select(
+            "neighbor_id", "c_vec", l2_norm("c_vec").alias("c_norm"), "cluster"
+        )
+    enc = "c_vec"
+    if codec.residual:
+        rows, enc = _residual(rows, cents, "c_vec", codec.dims, "r_vec"), "r_vec"
+    # the encode impl is probed on the RAW input, not the assignment
+    # lineage (review r6 pass 11): pq_encode's impl=None limit-count
+    # would re-run the whole assignment for its first 50k rows just to
+    # pick a branch; counting the source scan costs a footer read
+    return pq_encode(
+        rows,
+        codec.codebook,
+        vec_col=enc,
+        dims=codec.dims,
+        m=codec.m,
+        impl=_bulk_encode_impl(vectors),
+    ).select("neighbor_id", "pq_codes", "cluster")
+
+
+def _train_codebook(
+    corpus: DataFrame,
+    cents: DataFrame,
+    codec: _Codec,
+    id_col: str,
+    vec_col: str,
+    refine_iters: int,
+) -> DataFrame:
+    """A codebook for ``codec``, trained on what :func:`_index_rows`
+    encodes: the residuals under ``cents``, or the raw vectors."""
+    if codec.residual:
+        corpus, vec_col = _residual(
+            _assign(corpus, cents, id_col, vec_col), cents, "c_vec",
+            codec.dims, "r_vec",
+        ), "r_vec"
+    return train_pq_codebook(
+        corpus, vec_col, dims=codec.dims, m=codec.m, refine_iters=refine_iters
+    )
+
+
+def _query_probes(
+    queries: DataFrame,
+    cents: DataFrame,
+    codec: _Codec,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """One row per (query, probed cell): each query's ``nprobe`` nearest
+    centroids as ``cluster``, with ``q_vec`` in the codec's space. Flat
+    carries ``q_norm``. PQ drops malformed queries (the ``pq_topk``
+    contract) and, for a residual index, replaces ``q_vec`` by its
+    residual against each probed cell's centroid, so the per-cluster LUT
+    is the residual LUT: ``||q - v||^2 == ||(q - c) - (v - c)||^2``, and
+    adist stays comparable across probed cells."""
+    if not codec.pq:
+        q = queries.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("q_vec"),
+            l2_norm(vec_col).alias("q_norm"),
+        )
+        return _assign_clusters(q, cents, "q_vec", nprobe)
+    q = queries.filter(well_formed_vector(vec_col, codec.dims)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+    probes = _assign_clusters(q, cents, "q_vec", nprobe)
+    if codec.residual:
+        return _residual(probes, cents, "q_vec", codec.dims)
+    return probes
+
+
+def _cosine_topk(
+    posting: DataFrame, probes: DataFrame, k: int, key: str = "cluster"
+) -> DataFrame:
+    """(query_id, neighbor_id, rank, sim): each query's top ``k`` cosine
+    neighbors among the ``posting`` rows sharing one of its ``key``
+    values; ``probes`` is the small side and is broadcast."""
     scored = (
-        c_assigned.join(broadcast(q_probes), "cluster")
+        posting.join(broadcast(probes), key)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "sim", cosine_from_norms("q_vec", "c_vec", "q_norm", "c_norm")
@@ -888,15 +1120,113 @@ def ivf_topk(
     )
 
 
-def _materialize_artifact(df: DataFrame) -> DataFrame:
-    """Collect a trained artifact (centroids / codebook — broadcast-sized
-    by definition) and rebuild it as a local-rows frame. The builders
-    return artifacts through this so a probe handed the build's return
-    value broadcasts DATA, not a lineage: a lazy artifact re-executes its
-    entire training (a full corpus pass for a codebook) inside EVERY
-    probe action — measured as a 986-task stage per probe at 100×
-    (nlist=1000, 200k vectors), 9.7 s vs 7.2 s per probe."""
-    return df.sparkSession.createDataFrame(df.collect(), df.schema)
+def _score(
+    posting: DataFrame, probes: DataFrame, codec: _Codec, depth: int
+) -> DataFrame:
+    """Each query's top ``depth`` (query_id, neighbor_id, rank, score)
+    over the posting rows of its probed cells: flat by cosine ``sim``
+    descending, PQ by ADC ``adist`` ascending (``_adc_rank``, the stage
+    ``pq_topk`` shares; adist is already 6dp, rounded where it became
+    the ranking key)."""
+    if not codec.pq:
+        return _cosine_topk(posting, probes, depth)
+    ranked = _adc_rank(
+        posting,
+        probes.select("query_id", "q_vec", "cluster"),
+        codec.codebook,
+        codec.dims,
+        codec.m,
+        join_key="cluster",
+    )
+    return ranked.filter(F.col("rank") <= depth).select(
+        "query_id", "neighbor_id", "rank", "adist"
+    )
+
+
+def _pruned_read(spark, index_path: str, probes: DataFrame) -> DataFrame:
+    """The posting lists of the cells ``probes`` touch, and no others:
+    the distinct ``cluster`` values become a plan-time literal ``isin``,
+    so partition pruning keeps every other list out of the scan (pinned
+    by ``TestIvfIndex.test_probe_matches_inline_ivf_and_prunes_partitions``)."""
+    touched = sorted(
+        r["cluster"] for r in probes.select("cluster").distinct().collect()
+    )
+    return spark.read.parquet(index_path).filter(F.col("cluster").isin(touched))
+
+
+def _write_posting(rows: DataFrame, path: str, mode: str) -> None:
+    """Write posting rows into their ``cluster=<label>`` partitions: one
+    shuffle on ``cluster``, so each list is a contiguous subtree."""
+    (
+        rows.repartition("cluster")
+        .write.mode(mode)
+        .partitionBy("cluster")
+        .parquet(path)
+    )
+
+
+def _append(
+    spark,
+    new_vectors: DataFrame,
+    index_path: str,
+    cents: DataFrame,
+    codec: _Codec,
+    id_col: str,
+    vec_col: str,
+    skip_existing: bool,
+    op: str,
+) -> dict[str, int]:
+    """The one append: assign + encode the new vectors under the SAVED
+    artifacts and add them to their posting lists in ONE write job whose
+    observation returns the stats. ``skip_existing`` anti-joins against
+    the ids already in the touched lists (the pruned read). The write
+    runs even when nothing is fresh: it then commits no files, the same
+    on-disk no-op a skipped write would be."""
+    _index_contract(spark, index_path, codec, op)
+    cents, codec = _materialize_artifact(cents), codec.materialized()
+    if new_vectors.isEmpty():
+        return {"appended": 0, "skipped_existing": 0}
+    rows = _index_rows(new_vectors, cents, codec, id_col, vec_col)
+    if skip_existing:
+        seen = _pruned_read(spark, index_path, rows).select(
+            "neighbor_id", F.lit(True).alias("_seen")
+        )
+        marked = rows.join(seen, "neighbor_id", "left")
+    else:
+        marked = rows.withColumn("_seen", F.lit(None).cast("boolean"))
+    marked, stats = observe(
+        marked,
+        F.count(F.when(F.col("_seen").isNull(), 1)).alias("appended"),
+        F.count(F.when(F.col("_seen"), 1)).alias("skipped_existing"),
+    )
+    _write_posting(
+        marked.filter(F.col("_seen").isNull()).drop("_seen"),
+        index_path,
+        "append",
+    )
+    return stats()
+
+
+def _probe(
+    spark,
+    index_path: str,
+    queries: DataFrame,
+    cents: DataFrame,
+    codec: _Codec,
+    depth: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    op: str,
+) -> DataFrame:
+    """The one probe: rank each query's ``nprobe`` nearest centroids,
+    read ONLY those posting lists, score them (see :func:`_score`)."""
+    _index_contract(spark, index_path, codec, op)
+    cents, codec = _materialize_artifact(cents), codec.materialized()
+    probes = _query_probes(queries, cents, codec, nprobe, id_col, vec_col)
+    return _score(
+        _pruned_read(spark, index_path, probes), probes, codec, depth
+    )
 
 
 def build_ivf_index(
@@ -916,22 +1246,16 @@ def build_ivf_index(
     subtree. Returns the centroids as a MATERIALIZED local-rows frame
     (persist them next to the index — a probe needs only these, never
     the corpus)."""
+    _index_contract(
+        corpus.sparkSession, dst, _FLAT, "build_ivf_index", existing=False
+    )
     cents = _materialize_artifact(
         centroids if centroids is not None else label_centroids(
             corpus, label_col, vec_col
         )
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
-    )
-    assigned = _assign_clusters(c, cents, "c_vec", 1)
-    (
-        assigned.repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(dst)
+    _write_posting(
+        _index_rows(corpus, cents, _FLAT, id_col, vec_col), dst, "overwrite"
     )
     return cents
 
@@ -947,39 +1271,13 @@ def probe_ivf_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Search a materialized IVF index: rank the query's ``nprobe`` nearest
-    centroids (tiny side, window is fine), then scan ONLY those posting-list
-    partitions — the ``cluster IN (...)`` filter is a plan-time literal, so
-    partition pruning keeps nprobe/nlist of the index files out of the scan
-    entirely (pinned by ``TestIvfIndex.test_probe_prunes_partitions``).
-    Output contract matches ``ivf_topk``."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(vec_col).alias("q_norm"),
-    )
-    q_probes = _assign_clusters(q, centroids, "q_vec", nprobe)
-    probe_clusters = sorted(
-        {r["cluster"] for r in q_probes.select("cluster").distinct().collect()}
-    )
-    posting = spark.read.parquet(index_path).filter(
-        F.col("cluster").isin(probe_clusters)
-    )
-    scored = (
-        posting.join(broadcast(q_probes), "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "sim", cosine_from_norms("q_vec", "c_vec", "q_norm", "c_norm")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim")
-        )
+    centroids, then scan ONLY those posting-list partitions — the
+    ``cluster IN (...)`` filter is a plan-time literal, so partition
+    pruning keeps nprobe/nlist of the index files out of the scan
+    entirely. Output contract matches ``ivf_topk``."""
+    return _probe(
+        spark, index_path, queries, centroids, _FLAT, k, nprobe, id_col,
+        vec_col, "probe_ivf_index",
     )
 
 
@@ -1024,66 +1322,10 @@ def append_to_ivf_index(
     index`` when the heaviest list outgrows the mean by your tolerance.
     Returns ``{"appended": n, "skipped_existing": m}``.
     """
-    from s3_access_logs_spark.sources.fsutil import has_data_files
-
-    if not has_data_files(spark, index_path):
-        raise ValueError(
-            f"append_to_ivf_index: no committed index at {index_path!r} — "
-            "run build_ivf_index first (appending into a void would create "
-            "an index that silently lacks the rest of the corpus)"
-        )
-    if new_vectors.isEmpty():
-        return {"appended": 0, "skipped_existing": 0}
-    c = new_vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(vec_col).alias("c_norm"),
+    return _append(
+        spark, new_vectors, index_path, centroids, _FLAT, id_col, vec_col,
+        skip_existing, "append_to_ivf_index",
     )
-    return _append_posting_lists(
-        spark,
-        _assign_clusters(c, centroids, "c_vec", 1),
-        index_path,
-        skip_existing,
-    )
-
-
-def _append_posting_lists(
-    spark, rows: DataFrame, index_path: str, skip_existing: bool
-) -> dict[str, int]:
-    """The shared append sink of :func:`append_to_ivf_index` and
-    :func:`append_to_ivfpq_index`: append ``rows`` (keyed by
-    ``neighbor_id`` and ``cluster``) into their ``cluster=<label>``
-    partitions in ONE write job whose observation returns the stats.
-    ``skip_existing`` anti-joins against the ids already present in the
-    touched partitions only (partition-pruned read). The write runs even
-    when nothing is fresh: it then commits no files, the same on-disk
-    no-op a skipped write would be."""
-    if skip_existing:
-        touched = sorted(
-            r["cluster"] for r in rows.select("cluster").distinct().collect()
-        )
-        existing = (
-            spark.read.parquet(index_path)
-            .filter(F.col("cluster").isin(touched))
-            .select("neighbor_id", F.lit(True).alias("_seen"))
-        )
-        marked = rows.join(existing, "neighbor_id", "left")
-    else:
-        marked = rows.withColumn("_seen", F.lit(None).cast("boolean"))
-    marked, stats = observe(
-        marked,
-        F.count(F.when(F.col("_seen").isNull(), 1)).alias("appended"),
-        F.count(F.when(F.col("_seen"), 1)).alias("skipped_existing"),
-    )
-    (
-        marked.filter(F.col("_seen").isNull())
-        .drop("_seen")
-        .repartition("cluster")
-        .write.mode("append")
-        .partitionBy("cluster")
-        .parquet(index_path)
-    )
-    return stats()
 
 
 def random_projection(
@@ -1229,23 +1471,7 @@ def lsh_bucketed_topk(
                 )
             ).alias("bucket"),
         )
-    scored = (
-        c.join(broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "sim", cosine_from_norms("q_vec", "c_vec", "q_norm", "c_norm")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim")
-        )
-    )
+    return _cosine_topk(c, q, k, key="bucket")
 
 
 #: Per-cluster population bound for ``semantic_dedup``'s posting arrays
@@ -1326,7 +1552,15 @@ def semantic_dedup(
         F.col(vec_col).alias("v"),
         l2_norm(vec_col).alias("n"),
     )
-    assigned = _assign_clusters(c, cents, "v", 1)
+    # ``cluster`` is never NULL (every row, garbage included, assigns to a
+    # real label), so this filter drops no row. It is there for the plan:
+    # the over-cap self-join infers ``isnotnull(cluster)`` on its right
+    # side only, and without the same filter on every instance that side
+    # no longer canonicalizes to the shared cluster exchange and re-runs
+    # the whole assignment
+    assigned = _assign_clusters(c, cents, "v", 1).filter(
+        F.col("cluster").isNotNull()
+    )
     hot = None
     if max_cluster_size is not None:
         counted = assigned.withColumn(
@@ -1380,8 +1614,10 @@ def semantic_dedup(
     # shared cluster exchange and forcing a full extra assignment pass
     # (~1.7x the whole query). With both join sides and the array
     # branch consuming the identical (id, v, n, cluster, _csize)
-    # columns, all three instances canonicalize to ONE exchange and the
-    # assignment pipeline executes once. The count aggregate partially
+    # columns and the same not-null filter (see ``assigned``), all three
+    # instances canonicalize to ONE exchange and the assignment pipeline
+    # executes once (pinned by TestSemanticDedup's executed-plan
+    # assertions). The count aggregate partially
     # aggregates map-side, so the O(cluster^2) join matches never
     # shuffle.
     # the merge hint is load-bearing: the planner's size estimate for the
@@ -2084,45 +2320,16 @@ def pq_residual_topk(
 
     Output (query_id, neighbor_id, rank, adist) by approximate L2
     ascending, identical to the probe path's contract."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    assigned = _assign_clusters(c, centroids, "c_vec", 1)
-    cent_vecs = centroids.select(
-        F.col("label").alias("cluster"), F.col("centroid").alias("_cent")
-    )
-    resid = (
-        assigned.join(broadcast(cent_vecs), "cluster")
-        .withColumn("r_vec", _residual_col("c_vec", "_cent", dims))
-        .drop("_cent")
-    )
-    cb = codebook if codebook is not None else train_pq_codebook(
-        resid, "r_vec", dims=dims, m=m, refine_iters=codebook_refine_iters
-    )
-    encoded = pq_encode(
-        resid, cb, vec_col="r_vec", dims=dims, m=m,
-        impl=_bulk_encode_impl(corpus),
-    ).select("neighbor_id", "pq_codes", "cluster")
-    queries = queries.filter(well_formed_vector(vec_col, dims))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    q_probes = _assign_clusters(q, centroids, "q_vec", nprobe)
-    q_res = (
-        q_probes.join(broadcast(cent_vecs), "cluster")
-        .withColumn("q_vec", _residual_col("q_vec", "_cent", dims))
-        .drop("_cent")
-    )
-    ranked = _adc_rank(
-        encoded,
-        q_res.select("query_id", "q_vec", "cluster"),
-        cb,
-        dims,
-        m,
-        join_key="cluster",
-    )
-    return ranked.filter(F.col("rank") <= k).select(
-        "query_id", "neighbor_id", "rank", "adist"
+    codec = _Codec(True, dims, m, True, codebook)
+    if codebook is None:
+        codec = codec._replace(codebook=_train_codebook(
+            corpus, centroids, codec, id_col, vec_col, codebook_refine_iters
+        ))
+    return _score(
+        _index_rows(corpus, centroids, codec, id_col, vec_col),
+        _query_probes(queries, centroids, codec, nprobe, id_col, vec_col),
+        codec,
+        k,
     )
 
 
@@ -2199,40 +2406,6 @@ def stamp_ivfpq_meta(
     )
 
 
-def _check_ivfpq_meta(
-    spark, index_path: str, dims: int, m: int, residual: bool, op: str
-) -> dict:
-    """Validate caller flags against the index's persisted encode
-    contract; raise on mismatch AND on a missing sidecar. Missing must
-    be loud (review r8): silently trusting the caller's flags is
-    exactly the garbage-distance footgun the sidecar closes, and a
-    build that crashed between its data write and its stamp would
-    otherwise degrade to that forever. Recovery is one explicit
-    :func:`stamp_ivfpq_meta` call (or a rebuild)."""
-    from s3_access_logs_spark.sources.fsutil import read_json_sidecar
-
-    meta = read_json_sidecar(spark, index_path, IVFPQ_META_SIDECAR)
-    if meta is None:
-        raise ValueError(
-            f"{op}: no {IVFPQ_META_SIDECAR} sidecar at {index_path!r} — "
-            "the index predates the sidecar scheme or its build crashed "
-            "before the stamp. Probing with unvalidated flags risks "
-            "garbage distances; if the build-time residual/dims/m are "
-            "known, stamp them once with stamp_ivfpq_meta(), else "
-            "rebuild with build_ivfpq_index()"
-        )
-    expected = _ivfpq_meta(dims, m, residual)
-    if meta != expected:
-        raise ValueError(
-            f"{op}: flags {expected} do not match the index's persisted "
-            f"encode contract {meta} at {index_path!r} — a mismatched "
-            "residual/dims/m would score stored codes with the wrong "
-            "LUT and return garbage distances; pass the build-time "
-            "flags or rebuild the index"
-        )
-    return meta
-
-
 def build_ivfpq_index(
     corpus: DataFrame,
     dst: str,
@@ -2268,31 +2441,20 @@ def build_ivfpq_index(
     build and probe returns garbage distances, so the encode contract
     (residual/dims/m) is PERSISTED with the index as a store-root
     sidecar (``IVFPQ_META_SIDECAR``) and validated by every probe and
-    append — a mismatch fails loudly instead of returning garbage. The per-cell centroid join is a broadcast of the
-    nlist-row quantizer — the corpus still never shuffles. Residual
+    append — a mismatch fails loudly instead of returning garbage. The
+    per-cell centroid join is a broadcast of the nlist-row quantizer —
+    the corpus still never shuffles. Residual
     components are bounded by 2x``VEC_ABS_MAX``; rows whose residual
     exceeds the well-formed bound NULL-code (skipped by search), the
     same out-of-contract disposition as raw mode."""
+    spark = corpus.sparkSession
+    codec = _Codec(True, dims, m, residual)
+    _index_contract(spark, dst, codec, "build_ivfpq_index", existing=False)
     cents = _materialize_artifact(
         centroids if centroids is not None else label_centroids(
             corpus, label_col, vec_col
         )
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    assigned = _assign_clusters(c, cents, "c_vec", 1)
-    enc_vec = "c_vec"
-    if residual:
-        cent_vecs = cents.select(
-            F.col("label").alias("cluster"), F.col("centroid").alias("_cent")
-        )
-        assigned = (
-            assigned.join(broadcast(cent_vecs), "cluster")
-            .withColumn("r_vec", _residual_col("c_vec", "_cent", dims))
-            .drop("_cent")
-        )
-        enc_vec = "r_vec"
     # Lloyd-refined codebooks are the production default FOR RESIDUAL
     # indexes (round 8, VERDICT r7 item 1), measured on the clustered
     # corpus at 4 iters: residual refine-stage recall 0.575 -> 0.70
@@ -2307,43 +2469,18 @@ def build_ivfpq_index(
     # their own codebooks explicitly and are unaffected.
     if codebook_refine_iters is None:
         codebook_refine_iters = 4 if residual else 0
-    cb = _materialize_artifact(
-        codebook if codebook is not None else train_pq_codebook(
-            assigned if residual else corpus,
-            enc_vec if residual else vec_col,
-            dims=dims,
-            m=m,
-            refine_iters=codebook_refine_iters,
+    codec = codec._replace(codebook=_materialize_artifact(
+        codebook if codebook is not None else _train_codebook(
+            corpus, cents, codec, id_col, vec_col, codebook_refine_iters
         )
-    )
-    # decide the encode impl on the RAW corpus, not the assignment
-    # lineage (review r6 pass 11): pq_encode's impl=None limit-count
-    # probe would re-run the whole assignment for its first 50k rows
-    # just to pick a branch; counting the source scan costs a footer read
-    encoded = pq_encode(
-        assigned,
-        cb,
-        vec_col=enc_vec,
-        dims=dims,
-        m=m,
-        impl=_bulk_encode_impl(corpus),
-    )
-    (
-        encoded.select("neighbor_id", "pq_codes", "cluster")
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(dst)
+    ))
+    _write_posting(
+        _index_rows(corpus, cents, codec, id_col, vec_col), dst, "overwrite"
     )
     # stamp the encode contract AFTER the data write (overwrite mode
     # clears dst first); probes/appends validate against it
-    from s3_access_logs_spark.sources.fsutil import write_json_sidecar
-
-    write_json_sidecar(
-        corpus.sparkSession, dst, IVFPQ_META_SIDECAR,
-        _ivfpq_meta(dims, m, residual),
-    )
-    return cents, cb
+    stamp_ivfpq_meta(spark, dst, dims, m, residual)
+    return cents, codec.codebook
 
 
 def append_to_ivfpq_index(
@@ -2372,48 +2509,11 @@ def append_to_ivfpq_index(
     the slice; ``skip_existing`` makes at-least-once replays no-ops via
     the partition-pruned id anti-join. Fold accumulated small files with
     ``compact_partitions``."""
-    from s3_access_logs_spark.sources.fsutil import has_data_files
-
-    if not has_data_files(spark, index_path):
-        raise ValueError(
-            f"append_to_ivfpq_index: no committed index at {index_path!r}"
-            " — run build_ivfpq_index first (appending into a void would "
-            "create an index that silently lacks the rest of the corpus)"
-        )
-    _check_ivfpq_meta(
-        spark, index_path, dims, m, residual, "append_to_ivfpq_index"
+    return _append(
+        spark, new_vectors, index_path, centroids,
+        _Codec(True, dims, m, residual, codebook), id_col, vec_col,
+        skip_existing, "append_to_ivfpq_index",
     )
-    if new_vectors.isEmpty():
-        return {"appended": 0, "skipped_existing": 0}
-    c = new_vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    assigned = _assign_clusters(c, centroids, "c_vec", 1)
-    enc_vec = "c_vec"
-    if residual:
-        # must match the build-side construction (see build_ivfpq_index):
-        # appending raw codes into a residual index would poison every
-        # probe of the touched cells
-        cent_vecs = centroids.select(
-            F.col("label").alias("cluster"), F.col("centroid").alias("_cent")
-        )
-        assigned = (
-            assigned.join(broadcast(cent_vecs), "cluster")
-            .withColumn("r_vec", _residual_col("c_vec", "_cent", dims))
-            .drop("_cent")
-        )
-        enc_vec = "r_vec"
-    # impl probed on the raw slice, not the assignment lineage (see
-    # build_ivfpq_index)
-    encoded = pq_encode(
-        assigned,
-        codebook,
-        vec_col=enc_vec,
-        dims=dims,
-        m=m,
-        impl=_bulk_encode_impl(new_vectors),
-    ).select("neighbor_id", "pq_codes", "cluster")
-    return _append_posting_lists(spark, encoded, index_path, skip_existing)
 
 
 def probe_ivfpq_index(
@@ -2460,64 +2560,25 @@ def probe_ivfpq_index(
     L2. Output becomes (query_id, neighbor_id, rank, dist) with the
     EXACT distance; cost adds one pruned read of
     |queries| x k x refine_factor vectors, nothing corpus-scale."""
-    _check_ivfpq_meta(
-        spark, index_path, dims, m, residual, "probe_ivfpq_index"
-    )
-    # malformed query vectors excluded, same contract as pq_topk
-    queries = queries.filter(well_formed_vector(vec_col, dims))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    q_probes = _assign_clusters(q, centroids, "q_vec", nprobe)
-    if residual:
-        # replace q_vec with the query's residual against the probed
-        # cell's centroid — per (query, cluster) row, so _adc_rank's
-        # per-cluster LUT is exactly the residual LUT
-        cent_vecs = centroids.select(
-            F.col("label").alias("cluster"), F.col("centroid").alias("_cent")
-        )
-        q_probes = (
-            q_probes.join(broadcast(cent_vecs), "cluster")
-            .withColumn("q_vec", _residual_col("q_vec", "_cent", dims))
-            .drop("_cent")
-        )
-    probe_clusters = sorted(
-        {r["cluster"] for r in q_probes.select("cluster").distinct().collect()}
-    )
-    posting = spark.read.parquet(index_path).filter(
-        F.col("cluster").isin(probe_clusters)
-    )
-    # the shared ADC stage (_adc_rank) keeps this path rank-identical
-    # to pq_topk by construction; cluster equi-join instead of pq_topk's
-    # non-equi join, so each query scores only its probed posting lists
-    ranked = _adc_rank(
-        posting,
-        q_probes.select("query_id", "q_vec", "cluster"),
-        codebook,
-        dims,
-        m,
-        join_key="cluster",
-    )
-    if refine_corpus is None:
-        # adist is already 6dp (rounded where it became the ranking key)
-        return ranked.filter(F.col("rank") <= k).select(
-            "query_id", "neighbor_id", "rank", "adist"
-        )
-    if refine_factor < 1:
+    if refine_corpus is not None and refine_factor < 1:
         raise ValueError(
             f"probe_ivfpq_index: refine_factor must be >= 1, got "
             f"{refine_factor}"
         )
+    top = _probe(
+        spark, index_path, queries, centroids,
+        _Codec(True, dims, m, residual, codebook),
+        k if refine_corpus is None else k * refine_factor,
+        nprobe, id_col, vec_col, "probe_ivfpq_index",
+    )
+    if refine_corpus is None:
+        return top
     # localCheckpoint the bounded candidate table (<= |queries| x k x
     # refine_factor rows): it has TWO consumers — the id collect below
     # and the exact-distance join — and its lineage is the whole ADC
     # probe (pruned scan + LUT join + window), which would otherwise
     # execute twice per refine call.
-    cand = (
-        ranked.filter(F.col("rank") <= k * refine_factor)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-    )
+    cand = top.select("query_id", "neighbor_id").localCheckpoint()
     # Candidate-id pruning, two regimes: a SMALL id set becomes an isin
     # plan literal that pushes into the corpus scan (parquet row-group
     # pruning on the id column — the cheapest possible refine read); a

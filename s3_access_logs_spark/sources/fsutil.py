@@ -170,9 +170,11 @@ def read_json_sidecar(
         # recoverable contract, not an opaque JSONDecodeError
         raise ValueError(
             f"corrupt JSON sidecar {dir_path.rstrip('/')}/{name} "
-            f"({e}); delete it and re-stamp (e.g. "
-            "operators.similarity.stamp_ivfpq_meta for IVF-PQ stores) "
-            "to recover"
+            f"({e}); re-stamp it with the store's known contract (its "
+            "temp+rename write replaces the damaged file — for a vector "
+            "index, which every index op checks, "
+            "operators.similarity.stamp_ivfpq_meta with the build-time "
+            "flags) or rebuild the store"
         ) from e
 
 

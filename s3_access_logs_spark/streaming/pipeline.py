@@ -669,7 +669,10 @@ def ingest_documents_stream(
             sem_kept_vecs = None
             if semantic_index is not None:
                 from s3_access_logs_spark.operators.similarity import (
+                    _FLAT,
                     _assign_clusters,
+                    _index_contract,
+                    _pruned_read,
                     cosine_from_norms,
                     l2_norm,
                     well_formed_vector,
@@ -695,22 +698,18 @@ def ingest_documents_stream(
                 )
                 if has_data_files(sess, semantic_index):
                     # nearest saved centroid per batch vector (broadcast
-                    # argmin, zero exchange), then scan ONLY the touched
-                    # posting-list partitions — plan-time literal isin,
-                    # so partition pruning keeps the rest of the index
-                    # out of the read entirely (the probe_ivf_index shape)
+                    # argmin, zero exchange), then read ONLY the touched
+                    # posting lists (the probe_ivf_index shape) — after
+                    # the flat-index contract check, before any write
+                    _index_contract(
+                        sess, semantic_index, _FLAT,
+                        "ingest_documents_stream",
+                    )
                     assigned = cache(_assign_clusters(
                         sem_vecs, semantic_centroids, "q_vec", 1
                     ))
-                    touched = sorted(
-                        r["cluster"]
-                        for r in assigned.select("cluster")
-                        .distinct()
-                        .collect()
-                    )
                     posting = (
-                        sess.read.parquet(semantic_index)
-                        .filter(F.col("cluster").isin(touched))
+                        _pruned_read(sess, semantic_index, assigned)
                         # ignore entries from the CURRENT batch: a
                         # replayed batch that already appended must
                         # reproduce its first attempt's decisions, not

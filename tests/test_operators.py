@@ -72,30 +72,6 @@ class TestDedupExact:
         assert out == {1: 2, 3: 1}
 
 
-class TestDedupIncremental:
-    def test_batch_minus_store_and_within_batch(self, spark):
-        from s3_access_logs_spark.operators.dedup import (
-            dedup_incremental,
-            normalized_digest,
-        )
-
-        store = (
-            _docs(spark, [(1, "seen before"), (2, "also seen")])
-            .select(normalized_digest(F.col("text")).alias("digest"))
-        )
-        batch = _docs(
-            spark,
-            [
-                (10, "SEEN  before"),   # normalizes to a stored digest
-                (11, "fresh text"),
-                (12, "fresh text"),     # within-batch dup, survivor = 11
-                (13, "another new one"),
-            ],
-        )
-        out = {r.keep_id for r in dedup_incremental(batch, store).collect()}
-        assert out == {11, 13}
-
-
 class TestJaccard:
     def test_identical_docs_have_jaccard_one(self, spark):
         text = "a b c d e f g h"
@@ -1355,6 +1331,20 @@ class TestSemanticDedup:
         # posting-array collect
         plan = capped._jdf.queryExecution().executedPlan().toString()
         assert "Join" in plan
+        # the executed (final adaptive) plan: the hot self-join is the
+        # spillable sort-merge join, and the three instances of the
+        # assignment share ONE cluster exchange — the other two are
+        # reused, so the assignment runs once
+        final = plan.split("== Initial Plan ==")[0]
+        assert "SortMergeJoin" in final
+        nodes = [line.lstrip(" :+-") for line in final.splitlines()]
+        assert sum(
+            n.startswith("Exchange hashpartitioning(cluster") for n in nodes
+        ) == 1
+        assert sum(
+            n.startswith("ReusedExchange") and "hashpartitioning(cluster" in n
+            for n in nodes
+        ) == 2
         # sanity on the decisions themselves: in the hot fan every row
         # is dominated by id 0; the small cluster keeps its lowest id
         by_id = dict((i, k) for i, _, k in got)
@@ -3225,67 +3215,6 @@ class TestBloomFilter:
         with pytest.raises(ValueError, match="meta rows"):
             bloom_probe(df, "k", stripped, "m")
 
-    def test_incremental_bloom_equals_plain(self, spark):
-        from s3_access_logs_spark.functions.bloom import bloom_build
-        from s3_access_logs_spark.operators.dedup import (
-            dedup_incremental,
-            dedup_incremental_bloom,
-            normalized_digest,
-        )
-
-        store_docs = spark.createDataFrame(
-            [(i, f"seen doc {i % 50}") for i in range(100)],
-            "doc_id bigint, text string",
-        )
-        store = store_docs.select(
-            normalized_digest(F.col("text")).alias("digest")
-        ).distinct()
-        bloom = bloom_build(store, "digest", num_bits=1 << 14)
-        batch = spark.createDataFrame(
-            # 10 dup texts (in store), 40 new, plus an intra-batch dup
-            [(1000 + i, f"seen doc {i}") for i in range(10)]
-            + [(2000 + i, f"new doc {i}") for i in range(40)]
-            + [(3000, "new doc 0")],
-            "doc_id bigint, text string",
-        )
-        plain = dedup_incremental(batch, store)
-        fast = dedup_incremental_bloom(batch, store, bloom)
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, fast.collect())
-        )
-        assert fast.count() == 40  # dups dropped, intra-batch folded
-        # the store side must never shuffle: both store joins are
-        # broadcast (scan-and-probe), no sort-merge join anywhere
-        plan = fast._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" not in plan
-        assert plan.count("BroadcastHashJoin") >= 2
-
-    def test_null_text_parity_with_plain(self, spark):
-        # NULL-text docs are EXCLUDED by both paths (they are not
-        # duplicates of each other — collapsing them to min-id was
-        # silent data loss); bit-for-bit parity must hold on the rest
-        from s3_access_logs_spark.functions.bloom import bloom_build
-        from s3_access_logs_spark.operators.dedup import (
-            dedup_incremental,
-            dedup_incremental_bloom,
-        )
-
-        store = spark.createDataFrame([("d1",)], "digest string")
-        bloom = bloom_build(store, "digest", num_bits=1 << 10)
-        batch = spark.createDataFrame(
-            [(1, None), (2, "real text")], "doc_id bigint, text string"
-        )
-        plain = sorted(
-            map(tuple, dedup_incremental(batch, store).collect()),
-            key=lambda t: (t[0] or "", t[1]),
-        )
-        fast = sorted(
-            map(tuple, dedup_incremental_bloom(batch, store, bloom).collect()),
-            key=lambda t: (t[0] or "", t[1]),
-        )
-        assert plain == fast
-        assert [kid for _, kid in fast] == [2]  # NULL row excluded
-
     def test_sizing_helper_round_trips(self, spark):
         from s3_access_logs_spark.functions.bloom import (
             bloom_fp_rate,
@@ -3438,24 +3367,23 @@ class TestIvfPq:
         approx = {(r.query_id, r.neighbor_id) for r in rows}
         assert len(exact & approx) / len(exact) >= 0.15
 
-    def test_meta_sidecar_rejects_mismatched_flags(self, spark, tmp_path):
+    def test_meta_sidecar_rejects_mismatched_flags(
+        self, spark, ivfpq_residual
+    ):
         """The index's encode contract (residual/dims/m) is persisted as
         a store-root sidecar at build time; a probe or append whose
         flags disagree must fail loudly instead of returning garbage
-        distances (ADVICE r7)."""
+        distances (ADVICE r7). The shared residual index is only read:
+        every mismatched call raises before it writes."""
         from s3_access_logs_spark.operators.similarity import (
             IVFPQ_META_SIDECAR,
             append_to_ivfpq_index,
-            build_ivfpq_index,
             probe_ivfpq_index,
         )
         from s3_access_logs_spark.sources.fsutil import read_json_sidecar
-        from s3_access_logs_spark.sources.tables import load_table
 
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+        emb, _, dst, cents, cb = ivfpq_residual
         queries = emb.filter(F.col("vec_id") < 2)
-        dst = str(tmp_path / "ivfpq_res")
-        cents, cb = build_ivfpq_index(emb, dst, residual=True)
         assert read_json_sidecar(spark, dst, IVFPQ_META_SIDECAR) == {
             "dims": 64, "m": 8, "residual": True,
         }
@@ -3559,6 +3487,66 @@ class TestIvfPq:
         write_json_sidecar(spark, dst, "_meta.json", {"dims": 64})
         assert read_json_sidecar(spark, dst, "_meta.json") == {"dims": 64}
         assert not (tmp_path / "store" / "._meta.json.tmp").exists()
+
+
+class TestIndexContract:
+    """One contract check for every index op: a flat op on an IVF-PQ
+    index (it carries the sidecar) and a PQ op on a flat index (it has
+    none) are refused before anything is read or written."""
+
+    @staticmethod
+    def _listing(root):
+        import os
+
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, files in os.walk(root)
+            for f in files
+        )
+
+    def test_flat_append_into_pq_index_raises_and_writes_nothing(
+        self, spark, ivfpq_default
+    ):
+        from s3_access_logs_spark.operators.similarity import (
+            append_to_ivf_index,
+        )
+
+        emb, dst, cents, _ = ivfpq_default
+        before = self._listing(dst)
+        with pytest.raises(ValueError, match="IVF-PQ index"):
+            append_to_ivf_index(
+                spark, emb.filter(F.col("vec_id") < 10), dst, cents
+            )
+        assert self._listing(dst) == before
+
+    def test_flat_probe_of_pq_index_raises(self, spark, ivfpq_default):
+        from s3_access_logs_spark.operators.similarity import (
+            probe_ivf_index,
+        )
+
+        emb, dst, cents, _ = ivfpq_default
+        with pytest.raises(ValueError, match="IVF-PQ index"):
+            probe_ivf_index(
+                spark, dst, emb.filter(F.col("vec_id") < 2), cents
+            )
+
+    def test_pq_ops_on_flat_index_raise(self, spark, tmp_path, ivfpq_default):
+        from s3_access_logs_spark.operators.similarity import (
+            append_to_ivfpq_index,
+            build_ivf_index,
+            probe_ivfpq_index,
+        )
+
+        emb, _, cents, cb = ivfpq_default
+        dst = str(tmp_path / "flat")
+        build_ivf_index(
+            emb.filter(F.col("vec_id") < 50), dst, centroids=cents
+        )
+        queries = emb.filter(F.col("vec_id") < 2)
+        with pytest.raises(ValueError, match="stamp_ivfpq_meta"):
+            probe_ivfpq_index(spark, dst, queries, cents, cb)
+        with pytest.raises(ValueError, match="stamp_ivfpq_meta"):
+            append_to_ivfpq_index(spark, queries, dst, cents, cb)
 
 
 class TestReviewFixes:
@@ -5215,42 +5203,38 @@ class TestIvfPqAppend:
     TestIvfAppend, plus artifact-compatibility semantics."""
 
     @staticmethod
-    def _setup(spark, tmp_path):
+    def _setup(spark, tmp_path, ivfpq_default):
         from s3_access_logs_spark.operators.similarity import (
             build_ivfpq_index,
-            label_centroids,
-            train_pq_codebook,
         )
-        from s3_access_logs_spark.sources.tables import load_table
 
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+        # both artifacts trained ONCE on the full corpus so the two
+        # paths differ only in how rows reached the index: the shared
+        # default build over the full corpus trains exactly
+        # label_centroids(emb) and train_pq_codebook(emb)
+        emb, full, cents, cb = ivfpq_default
         mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
         first = emb.filter(F.col("vec_id") <= mid)
         rest = emb.filter(F.col("vec_id") > mid)
-        # both artifacts trained ONCE on the full corpus so the two
-        # paths differ only in how rows reached the index
-        cents = label_centroids(emb, "label", "embedding")
-        cb = train_pq_codebook(emb, "embedding")
         grown = str(tmp_path / "grown")
         build_ivfpq_index(
             first, grown, centroids=cents, codebook=cb
         )
-        return emb, first, rest, cents, cb, grown
+        return emb, first, rest, cents, cb, grown, full
 
-    def test_append_equals_full_build(self, spark, tmp_path):
+    def test_append_equals_full_build(self, spark, tmp_path, ivfpq_default):
         from s3_access_logs_spark.operators.similarity import (
             append_to_ivfpq_index,
-            build_ivfpq_index,
             probe_ivfpq_index,
         )
 
-        emb, first, rest, cents, cb, grown = self._setup(spark, tmp_path)
+        emb, first, rest, cents, cb, grown, full = self._setup(
+            spark, tmp_path, ivfpq_default
+        )
         stats = append_to_ivfpq_index(spark, rest, grown, cents, cb)
         assert stats == {
             "appended": rest.count(), "skipped_existing": 0
         }
-        full = str(tmp_path / "full")
-        build_ivfpq_index(emb, full, centroids=cents, codebook=cb)
         queries = emb.filter(F.col("vec_id") < 4)
         got = probe_ivfpq_index(
             spark, grown, queries, cents, cb, k=5, nprobe=2
@@ -6393,17 +6377,6 @@ class TestDedupReviewFixes:
         with pytest.raises(ValueError, match="divide evenly"):
             minhash_bands(df, k=16, bands=5)
 
-    def test_null_text_docs_not_collapsed_in_incremental(self, spark):
-        from s3_access_logs_spark.operators.dedup import dedup_incremental
-
-        batch = spark.createDataFrame(
-            [(1, None), (2, None), (3, "real text")], ["doc_id", "text"]
-        )
-        seen = spark.createDataFrame([], "digest string")
-        out = dedup_incremental(batch, seen).collect()
-        # NULL-text docs are excluded (not silently collapsed to min-id)
-        assert [r["keep_id"] for r in out] == [3]
-
     def test_minhash_hot_bucket_cap(self, spark):
         from s3_access_logs_spark.operators.dedup import minhash_candidates
 
@@ -6625,6 +6598,76 @@ class TestCurateIncremental:
             curate_corpus(b2, store_batch_id=3)
         with pytest.raises(ValueError, match="non-negative"):
             curate_corpus(b2, digest_store=dstore, store_batch_id=-1)
+
+
+    def test_null_text_docs_excluded_not_collapsed(self, spark, tmp_path):
+        """NULL-text docs are non-documents, not duplicates of each
+        other: the digest-history path drops them (``empty``) instead of
+        collapsing them to one min-id keeper, and stores none."""
+        from s3_access_logs_spark.operators.curate import curate_corpus
+
+        dstore = str(tmp_path / "digests")
+        batch = spark.createDataFrame(
+            [(1, None), (2, None), (3, "real text")],
+            "doc_id bigint, text string",
+        )
+        s, _ = curate_corpus(batch, digest_store=dstore, store_batch_id=0)
+        assert [r["doc_id"] for r in s.collect()] == [3]
+        out = spark.read.parquet(dstore).collect()
+        assert [r["keep_id"] for r in out] == [3]
+
+    def test_bloom_digest_gate_equals_plain(self, spark, tmp_path):
+        """The stream's Bloom filter changes only how the digest-history
+        stage finds its seen digests: the same verdicts as the plain
+        store gate, and the store never shuffles — both store joins are
+        broadcast (scan-and-probe), no sort-merge join anywhere."""
+        from s3_access_logs_spark.functions.bloom import bloom_build
+        from s3_access_logs_spark.operators.curate import (
+            _stage_flags,
+            curate_corpus,
+        )
+        from s3_access_logs_spark.session import scoped_cache
+
+        dstore = str(tmp_path / "digests")
+        curate_corpus(
+            spark.createDataFrame(
+                [(i, f"seen doc {i % 50}") for i in range(100)],
+                "doc_id bigint, text string",
+            ),
+            digest_store=dstore,
+            store_batch_id=0,
+        )
+        bloom = bloom_build(
+            spark.read.parquet(dstore).select("digest"), "digest",
+            num_bits=1 << 14,
+        ).collect()
+        batch = spark.createDataFrame(
+            # 10 dup texts (in store), 40 new, plus an intra-batch dup
+            [(1000 + i, f"seen doc {i}") for i in range(10)]
+            + [(2000 + i, f"new doc {i}") for i in range(40)]
+            + [(3000, "new doc 0")],
+            "doc_id bigint, text string",
+        )
+
+        def verdicts(flags):
+            return sorted(
+                map(tuple, flags.select("doc_id", "_verdict").collect())
+            )
+
+        with scoped_cache() as cache:
+            plain, _ = _stage_flags(
+                batch, cache, digest_store=dstore, store_batch_id=1
+            )
+            fast, _ = _stage_flags(
+                batch, cache, digest_bloom=bloom, digest_store=dstore,
+                store_batch_id=1,
+            )
+            assert verdicts(plain) == verdicts(fast)
+            # dups dropped, intra-batch folded
+            assert fast.filter(F.col("_verdict") == "kept").count() == 40
+            plan = fast._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" not in plan
+            assert plan.count("BroadcastHashJoin") >= 2
 
 
 class TestPslSnapshot:

@@ -72,6 +72,23 @@ def raw_ivfpq(clustered, tmp_path_factory):
     return cents, idx, idx_cents, idx_cb
 
 
+@pytest.fixture(scope="module")
+def residual_ivfpq(clustered, raw_ivfpq, tmp_path_factory):
+    """The PRODUCTION-DEFAULT residual index over the clustered corpus —
+    same ``label_centroids`` quantizer as ``raw_ivfpq``, codebook trained
+    by the build's default ``train_pq_codebook(residuals, refine_iters=4)``
+    — built once per module; its users only read it.
+    ``(idx, idx_cents, idx_cb)``."""
+    from s3_access_logs_spark.operators.similarity import build_ivfpq_index
+
+    cents = raw_ivfpq[0]
+    idx = str(tmp_path_factory.mktemp("residual_ivfpq") / "res")
+    idx_cents, idx_cb = build_ivfpq_index(
+        clustered, idx, centroids=cents, residual=True
+    )
+    return idx, idx_cents, idx_cb
+
+
 class TestClusteredRecall:
     def test_generator_contract(self, clustered):
         from s3_access_logs_spark.operators.similarity import (
@@ -157,7 +174,7 @@ class TestClusteredRecall:
         assert refined >= 0.3, f"PQ refine recall@10 {refined} collapsed"
 
     def test_residual_encoding_beats_raw(
-        self, spark, clustered, exact_top10, raw_ivfpq, tmp_path
+        self, spark, clustered, exact_top10, raw_ivfpq, residual_ivfpq
     ):
         """Round-7 quality fix for the honest gap the clustered table
         exposed (commit 2ab28bd): raw PQ spends its whole code budget
@@ -172,16 +189,12 @@ class TestClusteredRecall:
         ``pq_clears_floor`` floors: a PQ quality regression fails HERE,
         not just as a smaller printed number."""
         from s3_access_logs_spark.operators.similarity import (
-            build_ivfpq_index,
             probe_ivfpq_index,
         )
 
-        cents, raw_idx, raw_cents, raw_cb = raw_ivfpq
+        _, raw_idx, raw_cents, raw_cb = raw_ivfpq
+        res_idx, res_cents, res_cb = residual_ivfpq
         queries = clustered.filter(F.col("vec_id") < 8)
-        res_idx = str(tmp_path / "res")
-        res_cents, res_cb = build_ivfpq_index(
-            clustered, res_idx, centroids=cents, residual=True
-        )
         raw_adc = _recall(
             exact_top10,
             probe_ivfpq_index(
@@ -214,7 +227,8 @@ class TestClusteredRecall:
         assert raw_adc >= 0.1, f"raw ADC recall@10 {raw_adc} collapsed"
 
     def test_lloyd_refined_codebook_lifts_refine_recall(
-        self, spark, clustered, exact_top10, tmp_path
+        self, spark, clustered, exact_top10, raw_ivfpq, residual_ivfpq,
+        tmp_path,
     ):
         """train_pq_codebook(refine_iters=N): k-means refinement after
         the hyperplane-bucket init. Measured on this corpus (all
@@ -231,12 +245,11 @@ class TestClusteredRecall:
             _assign_clusters,
             _residual_col,
             build_ivfpq_index,
-            label_centroids,
             probe_ivfpq_index,
             train_pq_codebook,
         )
 
-        cents = label_centroids(clustered, "label", dims=64)
+        cents = raw_ivfpq[0]
         queries = clustered.filter(F.col("vec_id") < 8)
         c = clustered.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -251,29 +264,28 @@ class TestClusteredRecall:
             assigned.join(broadcast(cv), "cluster")
             .withColumn("r_vec", _residual_col("c_vec", "_cent", 64))
             .drop("_cent")
-            .persist()
         )
-        try:
-            recalls = {}
-            for iters in (0, 4):
-                cb = train_pq_codebook(
-                    resid, "r_vec", dims=64, m=8, refine_iters=iters
-                )
-                assert cb.count() == 8 * 16, "cell death in refinement"
-                idx = str(tmp_path / f"it{iters}")
-                b_cents, b_cb = build_ivfpq_index(
-                    clustered, idx, centroids=cents,
-                    codebook=cb, residual=True,
-                )
-                recalls[iters] = _recall(
-                    exact_top10,
-                    probe_ivfpq_index(
-                        spark, idx, queries, b_cents, b_cb,
-                        k=10, nprobe=4, residual=True,
-                        refine_corpus=clustered,
-                    ),
-                )
-        finally:
-            resid.unpersist()
+        cb = train_pq_codebook(resid, "r_vec", dims=64, m=8, refine_iters=0)
+        idx = str(tmp_path / "it0")
+        # iters=4: the shared production-default residual index, whose
+        # build trained exactly train_pq_codebook(<these residuals>,
+        # "r_vec", dims=64, m=8, refine_iters=4) under the same quantizer
+        builds = {
+            0: (idx, *build_ivfpq_index(
+                clustered, idx, centroids=cents, codebook=cb, residual=True,
+            )),
+            4: residual_ivfpq,
+        }
+        recalls = {}
+        for iters, (idx, b_cents, b_cb) in builds.items():
+            assert b_cb.count() == 8 * 16, "cell death in refinement"
+            recalls[iters] = _recall(
+                exact_top10,
+                probe_ivfpq_index(
+                    spark, idx, queries, b_cents, b_cb,
+                    k=10, nprobe=4, residual=True,
+                    refine_corpus=clustered,
+                ),
+            )
         assert recalls[4] >= recalls[0], recalls
         assert recalls[4] >= 0.65, recalls
