@@ -227,21 +227,39 @@ def simhash(col: Column | str, bits: int = 32) -> Column:
     return simhash_from_hashes(simhash_token_hashes(col), bits)
 
 
+def _stopword_hits(toks: Column, lang: str) -> Column:
+    """Count of ``toks`` entries in ``lang``'s stopword list. The
+    membership lambda is parsed from SQL text in one call: a Python
+    lambda over ``Column.isin`` costs a driver round trip per literal,
+    and the gate stack builds six of these per call."""
+    wl = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
+    return F.size(
+        F.call_function("filter", toks, F.expr(f"t -> t IN ({wl})"))
+    )
+
+
 def stopword_hits(col: Column | str, lang: str) -> Column:
-    toks = words(col)
-    wl = STOPWORDS[lang]
-    return F.size(F.filter(toks, lambda t: t.isin(*wl)))
+    return _stopword_hits(words(col), lang)
 
 
 def lang_id(col: Column | str) -> Column:
     """Heuristic language ID: argmax of stopword hits, fixed priority order
-    on ties, 'und' (undetermined) when no list scores > 0."""
-    hits = {lang: stopword_hits(col, lang) for lang in LANG_PRIORITY}
-    best = F.greatest(*hits.values())
-    expr = F.lit("und")
-    for lang in reversed(LANG_PRIORITY):
-        expr = F.when((hits[lang] == best) & (best > 0), F.lit(lang)).otherwise(expr)
-    return expr
+    on ties, 'und' (undetermined) when no list scores > 0.
+
+    The argmax is a SQL lambda over the array of the five counts, so each
+    count appears once in the expression tree. A ``when`` chain repeats
+    every count in every branch; the copies never share evaluation (each
+    carries its own lambda variable), and every later plan analysis walks
+    all of them."""
+    toks = words(col)
+    hits = F.array(*[_stopword_hits(toks, lang) for lang in LANG_PRIORITY])
+    langs = ", ".join(f"'{lang}'" for lang in LANG_PRIORITY)
+    argmax = F.expr(
+        "h -> CASE WHEN array_max(h) > 0 THEN element_at("
+        f"array({langs}), CAST(array_position(h, array_max(h)) AS INT)) "
+        "ELSE 'und' END"
+    )
+    return F.element_at(F.call_function("transform", F.array(hits), argmax), 1)
 
 
 def strip_html(col: Column | str) -> Column:
@@ -484,7 +502,7 @@ def quality_score(col: Column | str) -> Column:
     safe_n = F.greatest(n, F.lit(1)).cast("double")
     len_score = F.least(n.cast("double") / F.lit(100.0), F.lit(1.0))
     diversity = F.size(F.array_distinct(toks)).cast("double") / safe_n
-    stop_ratio = stopword_hits(c, "en").cast("double") / safe_n
+    stop_ratio = _stopword_hits(toks, "en").cast("double") / safe_n
     stop_score = F.least(stop_ratio * F.lit(4.0), F.lit(1.0))
     return (
         F.lit(0.4) * len_score + F.lit(0.3) * diversity + F.lit(0.3) * stop_score

@@ -11,6 +11,24 @@ that keeps the two consumers (report + output) from recomputing the
 lineage. The sequencing (``_stage_flags``) is the package's one gate
 stack: every streaming ingest micro-batch runs it too.
 
+Shuffle layout: the exact-dup window keys on ``_digest``, the
+normalized digest of the text the survivors carry, and its exchange is
+the stack's one shuffle; the digest-history join reuses it. Where that
+exchange sits depends on who writes the survivors. When curate writes
+them itself (``dst``, the store appends) and in the stream's sinks, the
+gates run on the input's partitions and the window's exchange is the
+plain one AQE may coalesce, so a small batch writes few files. When
+they go back to the caller lazily (the export paths, a plain call) and
+the input spans fewer partitions than the cluster has cores (a corpus
+read from one file is one partition), the exchange moves below the
+gates with an explicit ``spark.sql.shuffle.partitions`` width, which
+AQE does not coalesce: the CPU-bound regex gates, the window and
+whatever the caller fuses above the survivor filter (the export's BPE
+encoder) then run on every core. The only other shuffles are those of
+the optional join-keyed stages (LM and contamination before the
+exchange; the near-dup, containment and semantic stages after it) and
+the report's tiny aggregation.
+
 Waterfall semantics: a document counts against the FIRST stage that
 rejects it, in the fixed order above — the numbers answer "what did each
 gate uniquely cost me", and summing the report's ``dropped`` column plus
@@ -26,7 +44,12 @@ from types import SimpleNamespace
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from s3_access_logs_spark.functions.text import lang_id, quality_score
+from s3_access_logs_spark.functions.text import (
+    dominant_script,
+    lang_id,
+    pii_redact,
+    quality_score,
+)
 from s3_access_logs_spark.operators.dedup import (
     bloom_maybe_seen,
     dedup_clusters,
@@ -239,8 +262,10 @@ def curate_corpus(
     use (the price of returning a composable lazy frame with no
     session-lifetime cache retained).
 
-    Cost model: heuristic gates are pure columns (free in the scan);
-    exact dedup is one window shuffle; the LM gate adds the bigram
+    Cost model: heuristic gates are pure columns; exact dedup is one
+    window shuffle on the digest, which the digest-history join reuses
+    (the module docstring says when it moves below the gates to spread
+    them over every core); the LM gate adds the bigram
     explode + one doc-grain join; the classifier is a narrow pass;
     near-dup runs the full candidate+connected-components machinery
     (the expensive stage — leave it off when the incremental band store
@@ -321,12 +346,22 @@ def curate_corpus(
                 "verify_unique_ids=False if the key is enforced "
                 "upstream"
             )
+    # survivors that go back to the caller lazily: spread the gate stack
+    # over every core when the input does not span them already; the
+    # survivors curate writes itself keep the AQE-sized file layout
+    width = (
+        _spread_width(docs)
+        if dst is None and store_batch_id is None
+        else None
+    )
     # ONE scoped cache covers the whole stage + report + write
     # sequence: every persist is released on ANY exit — a failing stage
     # (ragged vector, store error) must not pin the cached gate stack
     # in executor storage for the session lifetime (review r5).
     with scoped_cache() as cache:
-        flags, batch_bands = _stage_flags(docs, cache, **stage_options)
+        flags, batch_bands = _stage_flags(
+            docs, cache, exchange_width=width, **stage_options
+        )
         stage_counts = None
         if _observe_report:
             # per-stage counts observed below the survivor filter: the
@@ -343,7 +378,7 @@ def curate_corpus(
                 ],
             )
         survivors = flags.filter(F.col("_verdict") == "kept").drop(
-            "_verdict", "_line_ratio", *[f"_f_{s}" for s in STAGES]
+            "_verdict", "_line_ratio", "_digest", *[f"_f_{s}" for s in STAGES]
         )
         rows: list = []
         if not _observe_report:
@@ -377,6 +412,10 @@ def curate_corpus(
             # own partitions. Reads above excluded this batch_id, so
             # the rerun's gates see only true history.
             if digest_store is not None:
+                # keyed on a digest computed here, not on ``_digest``:
+                # the dedup's own shuffle, which AQE sizes, gives a
+                # small batch one file per leaf, where reusing the
+                # flags' partitioning writes one per flags partition
                 _claimed_append(
                     survivors.select(
                         normalized_digest(F.col(text_col)).alias("digest"),
@@ -404,10 +443,45 @@ def curate_corpus(
             survivors = docs.sparkSession.read.parquet(dst)
     if stage_counts is not None:
         return survivors, stage_counts
-    report = docs.sparkSession.createDataFrame(
-        rows or [], "stage string, dropped bigint"
+    return survivors, _waterfall_frame(docs.sparkSession, rows)
+
+
+def _waterfall_frame(spark, rows: list) -> DataFrame:
+    """A ``(stage string, dropped bigint)`` report frame over driver-side
+    rows, built from an Arrow table: the frame is a local relation, so
+    collecting it runs no Spark job (a ``createDataFrame`` over a list
+    parallelizes an RDD, and collecting that runs one job). Shared by
+    curate's eager report and the export reports."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({
+            "stage": pa.array([r[0] for r in rows], pa.string()),
+            "dropped": pa.array([int(r[1]) for r in rows], pa.int64()),
+        }),
+        "stage string, dropped bigint",
     )
-    return survivors, report
+
+
+def _spread_width(docs: DataFrame) -> int | None:
+    """The explicit width of the digest exchange for ``docs``:
+    ``spark.sql.shuffle.partitions`` when ``docs`` is planned into fewer
+    partitions than the cluster has cores (a corpus read from one file
+    is one partition), None when it spans them already — there the
+    gates stay on the input's partitions, which also keeps the copies
+    of a heavily duplicated page from all being scored in one task.
+    The count is read off the physical plan without running it, so a
+    plan that shuffles, broadcasts or runs a subquery (asking its count
+    would run those) is taken as spread."""
+    spark = docs.sparkSession
+    plan = docs._jdf.queryExecution().executedPlan()
+    shown = plan.toString()
+    if any(k in shown for k in ("AdaptiveSparkPlan", "Exchange", "Subquery")):
+        return None
+    cores = spark.sparkContext.defaultParallelism
+    if plan.execute().getNumPartitions() >= cores:
+        return None
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _stage_flags(
@@ -415,15 +489,23 @@ def _stage_flags(
     cache: Callable[[DataFrame], DataFrame],
     scrub_pii: bool = False,
     digest_bloom: list | None = None,
+    exchange_width: int | None = None,
     **options,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The one gate stack, shared by :func:`curate_corpus` and every
     streaming ingest micro-batch (streaming/pipeline.py). Returns
     ``(flags, batch_bands)``: ``docs`` (text transformed) with one
     ``_f_<stage>`` column per STAGES entry and the first-failing-stage
-    ``_verdict`` (``'kept'`` for survivors), plus the batch's MinHash
-    band rows when ``band_store`` is given (append only the survivors'
-    — None otherwise). ``options`` are :func:`curate_corpus`'s keyword
+    ``_verdict`` (``'kept'`` for survivors) and the ``_digest`` the
+    exact-dup stages key on (the normalized digest of the text the
+    survivors carry), plus the batch's MinHash band rows when
+    ``band_store`` is given (append only the survivors' — None
+    otherwise). ``exchange_width`` (from :func:`_spread_width`) moves
+    the window's exchange on ``_digest`` below the per-document gates
+    with that explicit partition count, after the join-keyed LM and
+    contamination stages so that their shuffles stay their own; None
+    keeps the gates on the input's partitions and the window's own
+    exchange. ``options`` are :func:`curate_corpus`'s keyword
     arguments, with its defaults; ``cache`` is the caller's
     :func:`session.scoped_cache`, so the caller decides when the
     persists taken here are released. Reads of the stores
@@ -483,44 +565,20 @@ def _stage_flags(
             text_col=text_col,
             min_docs=o.boilerplate_min_docs,
         )
+    # Gates that JOIN a docs-derived frame come first, before the
+    # digest exchange: their joins shuffle on their own keys, and
+    # running them first keeps the digest exchange the last one below
+    # the window. Contamination is COMPUTED before the dedup stages
+    # (attribution order in STAGES is unchanged): it is a per-document
+    # property, and a contaminated document must not elect itself
+    # keeper/superset — the benchmark-bearing superset would otherwise
+    # drop its clean subset and then be dropped itself, erasing the
+    # content entirely. A stage left off is a constant in ``gates``, the
+    # one ``withColumns`` below: each ``withColumn`` call re-analyses
+    # the whole plan on the driver.
+    no = F.lit(False)
+    gates: dict = {}
     flags = docs
-    # NULL/blank text first and explicitly: every later gate compares
-    # against NULL (quality_score(NULL) < t is NULL, which the waterfall
-    # reads as "passed"), so without this stage empty documents would
-    # slip through the whole stack and land in the output
-    flags = flags.withColumn(
-        "_f_empty",
-        F.col(text_col).isNull() | (F.trim(F.col(text_col)) == ""),
-    )
-    flags = flags.withColumn(
-        "_f_line_ratio",
-        (
-            (F.col("_line_ratio") < o.min_line_ratio)
-            & ~F.col("_f_empty")
-        )
-        if o.min_line_ratio is not None
-        else F.lit(False),
-    )
-    flags = flags.withColumn(
-        "_f_quality",
-        (quality_score(text_col) < o.min_quality)
-        if o.min_quality is not None
-        else F.lit(False),
-    )
-    flags = flags.withColumn(
-        "_f_language",
-        (~lang_id(text_col).isin(*o.langs))
-        if o.langs is not None
-        else F.lit(False),
-    )
-    if o.scripts is not None:
-        from s3_access_logs_spark.functions.text import dominant_script
-
-        flags = flags.withColumn(
-            "_f_script", ~dominant_script(text_col).isin(*o.scripts)
-        )
-    else:
-        flags = flags.withColumn("_f_script", F.lit(False))
     if o.lm_model is not None and o.max_xent is not None:
         from s3_access_logs_spark.functions.lm import perplexity_score
 
@@ -542,24 +600,7 @@ def _stage_flags(
             F.coalesce(F.col("xent") > o.max_xent, F.lit(False)),
         ).drop("xent", "_lmk")
     else:
-        flags = flags.withColumn("_f_perplexity", F.lit(False))
-    if o.classifier is not None:
-        from s3_access_logs_spark.operators.quality_classifier import (
-            score_quality,
-        )
-
-        flags = score_quality(
-            flags, o.classifier, text_col=text_col
-        ).withColumn(
-            "_f_classifier", F.col("quality_prob") < o.min_prob
-        ).drop("quality_prob")
-    else:
-        flags = flags.withColumn("_f_classifier", F.lit(False))
-    # Contamination is COMPUTED before the dedup stages (attribution
-    # order in STAGES is unchanged): it is a per-document property, and
-    # a contaminated document must not elect itself keeper/superset —
-    # the benchmark-bearing superset would otherwise drop its clean
-    # subset and then be dropped itself, erasing the content entirely.
+        gates["_f_perplexity"] = no
     if o.benchmark is not None:
         dirty = ngram_overlap(
             docs, o.benchmark, id_col=id_col, text_col=text_col
@@ -570,13 +611,67 @@ def _stage_flags(
             "_f_contaminated", F.coalesce(F.col("_hit"), F.lit(False))
         ).drop("_hit")
     else:
-        flags = flags.withColumn("_f_contaminated", F.lit(False))
+        gates["_f_contaminated"] = no
+    # The digest the exact-dup window and the stores key on is of the
+    # text the survivors carry: the redacted one under ``scrub_pii``,
+    # redacted once and swapped in after the gates (which score the
+    # unredacted text). With ``exchange_width`` the window's exchange
+    # moves here, below the gates, as a REPARTITION_BY_NUM exchange AQE
+    # never coalesces; the window and the digest-history join key on
+    # ``_digest`` and reuse it either way.
     if scrub_pii:
-        from s3_access_logs_spark.functions.text import pii_redact
+        flags = flags.withColumn("_scrubbed", pii_redact(text_col))
+    digest = normalized_digest(F.col("_scrubbed" if scrub_pii else text_col))
+    if exchange_width is not None:
+        flags = flags.withColumn("_digest", digest).repartition(
+            exchange_width, "_digest"
+        )
+    else:
+        gates["_digest"] = digest
+    # NULL/blank text first and explicitly: every later gate compares
+    # against NULL (quality_score(NULL) < t is NULL, which the waterfall
+    # reads as "passed"), so without this stage empty documents would
+    # slip through the whole stack and land in the output
+    empty = F.col(text_col).isNull() | (F.trim(F.col(text_col)) == "")
+    if o.classifier is None:
+        gates["_f_classifier"] = no
+    flags = flags.withColumns({
+        **gates,
+        "_f_empty": empty,
+        "_f_line_ratio": (
+            (F.col("_line_ratio") < o.min_line_ratio) & ~empty
+            if o.min_line_ratio is not None
+            else no
+        ),
+        "_f_quality": (
+            quality_score(text_col) < o.min_quality
+            if o.min_quality is not None
+            else no
+        ),
+        "_f_language": (
+            ~lang_id(text_col).isin(*o.langs) if o.langs is not None else no
+        ),
+        "_f_script": (
+            ~dominant_script(text_col).isin(*o.scripts)
+            if o.scripts is not None
+            else no
+        ),
+    })
+    if o.classifier is not None:
+        from s3_access_logs_spark.operators.quality_classifier import (
+            score_quality,
+        )
 
-        # the flags above keep the verdicts on the unredacted text;
-        # the digest, the bands and the stored text see the scrubbed one
-        flags = flags.withColumn(text_col, pii_redact(text_col))
+        flags = score_quality(
+            flags, o.classifier, text_col=text_col
+        ).withColumn(
+            "_f_classifier", F.col("quality_prob") < o.min_prob
+        ).drop("quality_prob")
+    if scrub_pii:
+        # the bands and the stored text see the scrubbed text too
+        flags = flags.withColumn(text_col, F.col("_scrubbed")).drop(
+            "_scrubbed"
+        )
     # Exact-dup keeper election — among rows passing the per-document
     # gates, not blindly by min id: normalized_digest collapses case and
     # whitespace, so digest-sharing rows are NOT byte-identical and can
@@ -594,17 +689,15 @@ def _stage_flags(
         for s in STAGES
         if s not in ("exact_dup", "near_dup", "contained", "semantic")
     ]
-    gate_fail = F.lit(False)
-    for s in _doc_gates:
-        gate_fail = gate_fail | F.col(f"_f_{s}")
-    flags = flags.withColumn("_gate_fail", gate_fail.cast("int"))
-    w = Window.partitionBy(normalized_digest(F.col(text_col))).orderBy(
-        "_gate_fail", id_col
+    # boolean combinations of flag columns are parsed from SQL text: one
+    # driver call each, where a Column chain costs several per stage
+    gate_fail = F.expr(" OR ".join(f"_f_{s}" for s in _doc_gates))
+    w = Window.partitionBy("_digest").orderBy(
+        gate_fail.cast("int"), id_col
     )
     flags = flags.withColumn(
-        "_f_exact_dup",
-        (F.row_number().over(w) > 1) & ~F.col("_f_empty"),
-    ).drop("_gate_fail")
+        "_f_exact_dup", (F.row_number().over(w) > 1) & ~F.col("_f_empty")
+    )
     if o.digest_store is not None:
         # history gate: a digest already committed to the store drops the
         # WHOLE batch group (keeper included — history holds the keeper).
@@ -612,7 +705,6 @@ def _stage_flags(
         # so a rerun never self-collides.
         from s3_access_logs_spark.sources.fsutil import read_prior_batches
 
-        flags = flags.withColumn("_digest", normalized_digest(F.col(text_col)))
         seen = read_prior_batches(
             docs.sparkSession, o.digest_store, "digest string",
             o.store_batch_id,
@@ -642,7 +734,7 @@ def _stage_flags(
                     & ~F.col("_f_empty")
                 ),
             )
-            .drop("_seen_digest", "_seen", "_digest")
+            .drop("_seen_digest", "_seen")
         )
     # The dedup stages run over the SURVIVORS of every other gate, not
     # the raw corpus: clustering raw docs could elect a keeper (min-id
@@ -652,9 +744,7 @@ def _stage_flags(
     _pre_dedup = [
         s for s in STAGES if s not in ("near_dup", "contained", "semantic")
     ]
-    eligible_pred = F.lit(True)
-    for s in _pre_dedup:
-        eligible_pred = eligible_pred & ~F.col(f"_f_{s}")
+    eligible_pred = F.expr(" AND ".join(f"NOT _f_{s}" for s in _pre_dedup))
     # ONE cached pre-dedup flags frame covers everything downstream:
     # the dedup stages filter it (their several input scans hit the
     # cache), the report aggregates it, and the dst write reads it —
@@ -671,6 +761,11 @@ def _stage_flags(
         o.embeddings is not None
     ):
         flags = cache(flags)
+    # the near-dup and containment verdicts so far, for the eligibility
+    # of the stages after them: an expression until the stage's column
+    # exists. A stage left off adds its constant column only in the one
+    # ``withColumns`` that adds ``_verdict``.
+    near = contained = no
     batch_bands = None
     if o.band_store is not None:
         # history near-dup gate BEFORE within-batch clustering: a doc
@@ -699,37 +794,29 @@ def _stage_flags(
             .withColumn("_bhit", F.lit(True))
             .localCheckpoint()
         )
-        flags = flags.join(store_hits, id_col, "left").withColumn(
-            "_f_near_dup_store",
-            F.coalesce(F.col("_bhit"), F.lit(False)),
-        ).drop("_bhit")
-    else:
-        flags = flags.withColumn("_f_near_dup_store", F.lit(False))
+        flags = flags.join(store_hits, id_col, "left")
+        near = F.coalesce(F.col("_bhit"), no)
     if o.near_dup:
-        eligible = flags.filter(
-            eligible_pred & ~F.col("_f_near_dup_store")
-        ).select(id_col, text_col)
+        eligible = flags.filter(eligible_pred & ~near).select(
+            id_col, text_col
+        )
         clusters = dedup_clusters(
             eligible, id_col=id_col, text_col=text_col
         )
-        flags = flags.join(clusters, id_col, "left").withColumn(
-            "_f_near_dup",
-            F.coalesce(
-                F.col("cluster_id") != F.col(id_col), F.lit(False)
-            ),
-        ).drop("cluster_id")
-    else:
-        flags = flags.withColumn("_f_near_dup", F.lit(False))
-    flags = flags.withColumn(
-        "_f_near_dup", F.col("_f_near_dup") | F.col("_f_near_dup_store")
-    ).drop("_f_near_dup_store")
+        flags = flags.join(clusters, id_col, "left")
+        near = F.coalesce(F.col("cluster_id") != F.col(id_col), no) | near
+    if o.band_store is not None or o.near_dup:
+        flags = flags.withColumn("_f_near_dup", near).drop(
+            "_bhit", "cluster_id"
+        )
+        near = F.col("_f_near_dup")
     if o.drop_contained:
         from s3_access_logs_spark.operators.dedup import containment_pairs
 
-        eligible2 = flags.filter(
-            eligible_pred & ~F.col("_f_near_dup")
-        ).select(id_col, text_col)
-        contained = (
+        eligible2 = flags.filter(eligible_pred & ~near).select(
+            id_col, text_col
+        )
+        subsets = (
             containment_pairs(
                 eligible2,
                 id_col=id_col,
@@ -741,11 +828,10 @@ def _stage_flags(
             .withColumn("_sub", F.lit(True))
             .localCheckpoint()
         )
-        flags = flags.join(contained, id_col, "left").withColumn(
-            "_f_contained", F.coalesce(F.col("_sub"), F.lit(False))
+        flags = flags.join(subsets, id_col, "left").withColumn(
+            "_f_contained", F.coalesce(F.col("_sub"), no)
         ).drop("_sub")
-    else:
-        flags = flags.withColumn("_f_contained", F.lit(False))
+        contained = F.col("_f_contained")
     if o.embeddings is not None:
         from s3_access_logs_spark.operators.similarity import (
             kmeans_fit,
@@ -757,9 +843,7 @@ def _stage_flags(
         # that itself survives every earlier stage, so dropping it
         # never erases content whose canonical copy was rejected
         eligible3 = flags.filter(
-            eligible_pred
-            & ~F.col("_f_near_dup")
-            & ~F.col("_f_contained")
+            eligible_pred & ~near & ~contained
         ).select(id_col)
         # cached: the frame below is read by the nlist sizing job,
         # every kmeans iteration, and three references inside the dedup
@@ -811,9 +895,7 @@ def _stage_flags(
             # can actually detect it — usable vectors exist but
             # fewer distinct than the explicitly requested k
             # (review r5, twice).
-        if cents is None:  # no eligible embeddings: nothing to judge
-            flags = flags.withColumn("_f_semantic", F.lit(False))
-        else:
+        if cents is not None:  # else no eligible embeddings: nothing to judge
             # distinct BEFORE the join back (the contained/store_hits
             # pattern): duplicate embedding rows for one id would fan
             # the flags join out and inflate the waterfall past the
@@ -833,14 +915,17 @@ def _stage_flags(
                 .localCheckpoint()
             )
             flags = flags.join(dropped_sem, id_col, "left").withColumn(
-                "_f_semantic", F.coalesce(F.col("_sem"), F.lit(False))
+                "_f_semantic", F.coalesce(F.col("_sem"), no)
             ).drop("_sem")
-    else:
-        flags = flags.withColumn("_f_semantic", F.lit(False))
-    # waterfall attribution: first failing stage wins
-    verdict = F.lit("kept")
-    for stage in reversed(STAGES):
-        verdict = F.when(F.col(f"_f_{stage}"), F.lit(stage)).otherwise(
-            verdict
+    # waterfall attribution: first failing stage wins; a stage left off
+    # is a constant False column and never matches
+    ran = set(flags.columns)
+    verdict = F.expr(
+        "CASE "
+        + " ".join(
+            f"WHEN _f_{s} THEN '{s}'" for s in STAGES if f"_f_{s}" in ran
         )
-    return flags.withColumn("_verdict", verdict), batch_bands
+        + " ELSE 'kept' END"
+    )
+    off = {f"_f_{s}": no for s in STAGES if f"_f_{s}" not in ran}
+    return flags.withColumns({**off, "_verdict": verdict}), batch_bands

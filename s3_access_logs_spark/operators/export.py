@@ -28,8 +28,13 @@ everything this module adds is a projection (token ids — Arrow-batched,
 the one place Python is forced — shard hash, EOS append), ONE window
 function per shard stream, one segment explode, one groupBy that reuses
 the shard partitioning, and one repartition(n_shards) keying a single
-writer per shard dir. No stage is quadratic, no collect touches corpus
-data; the report rows are the only driver-side values.
+writer per shard dir. The encoder runs in curate's digest-partitioned
+stage: for a corpus that spans fewer partitions than the cluster has
+cores (one file is one partition), the gates, the exact-dup window and
+the encoding share one stage of ``spark.sql.shuffle.partitions`` tasks.
+No stage is quadratic, no collect touches corpus data; the report rows
+are the only driver-side values, and the report is a local relation,
+so collecting it runs no job.
 """
 
 from __future__ import annotations
@@ -61,22 +66,19 @@ def _write_windows(windows: DataFrame, dst: str, n_shards: int) -> None:
     )
 
 
-def _read_windows_or_empty(spark, dst: str, windows: DataFrame) -> DataFrame:
-    """Read the written artifact back, or — when zero windows were
-    written and the dir holds only a _SUCCESS marker parquet cannot
-    infer a schema from — hand back an empty frame with the artifact's
-    columns."""
-    from s3_access_logs_spark.sources.fsutil import has_data_files
+def _read_windows(spark, dst: str, windows: DataFrame) -> DataFrame:
+    """Read the written artifact back with the schema it was written
+    with: the windows' data columns in written order, then the hive
+    ``shard`` partition column as ``int``, which is what partition
+    discovery infers. A known schema needs no inference job, and a write
+    of zero windows (a dir holding only ``_SUCCESS``) reads back as an
+    empty frame with the same columns."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-    if has_data_files(spark, dst):
-        return spark.read.parquet(dst)
-    # column order must match the parquet read-back (data columns in
-    # written order, partition column LAST), not the groupBy's
-    # part-cols-first order — a consumer unioning an empty export with
-    # a non-empty one would otherwise pair window_idx under shard
-    # (review r10, second pass)
-    cols = [c for c in windows.columns if c != "shard"] + ["shard"]
-    return windows.select(*cols).limit(0)
+    data = [f for f in windows.schema.fields if f.name != "shard"]
+    return spark.read.schema(
+        StructType(data + [StructField("shard", IntegerType())])
+    ).parquet(dst)
 
 
 #: Sidecar recording a token store's id-space contract
@@ -250,16 +252,14 @@ def _report(
     (parquet metadata-count cheap) minus the curate drops minus the
     ``n_kept`` documents that reached the artifact — exact because every
     document that survives curation+mixture contributes exactly one EOS."""
-    from s3_access_logs_spark.operators.curate import STAGES
+    from s3_access_logs_spark.operators.curate import STAGES, _waterfall_frame
 
     counts = curate_counts()
     rows = [(s, int(counts[s])) for s in STAGES if counts[s]]
     if mixture is not None:
         drops = sum(n for _, n in rows)
         rows.append(("mixture", int(docs.count() - drops - n_kept)))
-    return docs.sparkSession.createDataFrame(
-        rows + metric_rows, "stage string, dropped bigint"
-    )
+    return _waterfall_frame(docs.sparkSession, rows + metric_rows)
 
 
 def export_training_set(
@@ -384,7 +384,7 @@ def export_training_set(
         _write_windows(observed, dst, n_shards)
     m = written()
     npad = int(m["npad"]) if pad is not None else 0
-    return _read_windows_or_empty(docs.sparkSession, dst, windows), _report(
+    return _read_windows(docs.sparkSession, dst, windows), _report(
         docs, curate_counts, mixture, m["neos"], [
             ("tokens_kept", int(m["total"] - m["neos"]) - npad),
             ("windows_emitted", int(m["nw"])),
@@ -521,7 +521,7 @@ def _pack_store(
         pad_id=pad_id,
     )
     _write_windows(windows, dst, n_shards)
-    return _read_windows_or_empty(spark, dst, windows)
+    return _read_windows(spark, dst, windows)
 
 
 def pack_shard_windows(

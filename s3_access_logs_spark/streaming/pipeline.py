@@ -390,7 +390,6 @@ def ingest_documents_stream(
     stores key on ``(id, text)`` and ``(digest, id)``.
     """
     from s3_access_logs_spark.operators.curate import STAGES, _stage_flags
-    from s3_access_logs_spark.operators.dedup import normalized_digest
 
     # optional feed field: JSON rows without it read as NULL; rows
     # carrying it under keep_source=False are simply not projected (the
@@ -631,9 +630,9 @@ def ingest_documents_stream(
             )
             # Doc-store rows carry the (scrubbed) TEXT, not just digests:
             # the store doubles as the batch pipeline's corpus input.
-            rows = flags.withColumn(
-                "digest", normalized_digest(F.col("text"))
-            ).withColumnRenamed("doc_id", "keep_id")
+            rows = flags.withColumnsRenamed(
+                {"_digest": "digest", "doc_id": "keep_id"}
+            )
             survivors = rows.filter(F.col("_verdict") == "kept").select(
                 "digest", "keep_id", "text"
             )

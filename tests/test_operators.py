@@ -3755,20 +3755,12 @@ class TestReviewFixes:
 
         emb, cents, idx2, d_cents, d_cb = ivfpq_residual
         queries = emb.filter(F.col("vec_id") < 4)
-        mem = sorted(
-            map(
-                tuple,
-                pq_residual_topk(
-                    emb, queries, cents, k=5, nprobe=2
-                ).collect(),
-            )
-        )
-        # shared codebook: train once on the residual frame, hand it to
-        # both paths. NOTE (round 8): with codebook=None the two paths'
-        # DEFAULTS now diverge deliberately — build_ivfpq_index trains
-        # refine_iters=4 (production policy) while pq_residual_topk
-        # stays init-only (its oracle replays that trainer); the
-        # default-vs-default case is pinned below.
+        # shared codebook: train the init-only residual codebook once on
+        # the residual frame and hand it to both paths. NOTE (round 8):
+        # with codebook=None the two paths' DEFAULTS diverge deliberately
+        # — build_ivfpq_index trains refine_iters=4 (production policy)
+        # while pq_residual_topk stays init-only (its oracle replays
+        # that trainer); the refined case is pinned below.
         c = emb.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("c_vec"),
@@ -3782,6 +3774,14 @@ class TestReviewFixes:
             "r_vec", _residual_col("c_vec", "_cent", 64)
         )
         cb = train_pq_codebook(resid, "r_vec", dims=64, m=8)
+        mem = sorted(
+            map(
+                tuple,
+                pq_residual_topk(
+                    emb, queries, cents, codebook=cb, k=5, nprobe=2
+                ).collect(),
+            )
+        )
         idx = str(tmp_path / "ivfpq_res")
         b_cents, b_cb = build_ivfpq_index(
             emb, idx, centroids=cents, codebook=cb, residual=True
@@ -3796,10 +3796,9 @@ class TestReviewFixes:
             )
         )
         assert mem == probed
-        # default-vs-default: a DEFAULT-built index (refined codebook)
-        # is mirrored by the twin at codebook_refine_iters=4 — the
-        # documented way to validate a default build in memory (the
-        # shared index is that default build)
+        # a DEFAULT-built index (refined codebook — the shared index is
+        # that default build) is mirrored by the twin given the same
+        # refined codebook, trained once by the fixture's build
         probed_default = sorted(
             map(
                 tuple,
@@ -3813,12 +3812,21 @@ class TestReviewFixes:
             map(
                 tuple,
                 pq_residual_topk(
-                    emb, queries, cents, k=5, nprobe=2,
-                    codebook_refine_iters=4,
+                    emb, queries, cents, codebook=d_cb, k=5, nprobe=2
                 ).collect(),
             )
         )
         assert mem_refined == probed_default
+        # the twin's own training at codebook_refine_iters=4 (the
+        # documented way to mirror a default build in memory) reproduces
+        # that codebook: one query is enough to see it
+        one = queries.filter(F.col("vec_id") == 0)
+        trained = pq_residual_topk(
+            emb, one, cents, k=5, nprobe=2, codebook_refine_iters=4
+        ).collect()
+        assert sorted(map(tuple, trained)) == [
+            r for r in mem_refined if r[0] == 0
+        ]
 
     def test_append_residual_matches_full_rebuild(
         self, spark, tmp_path, ivfpq_residual
@@ -7050,3 +7058,195 @@ class TestHasDataFiles:
         ]
         assert emitted > 0
         assert wins.count() == emitted
+
+
+class TestCorpusExchange:
+    """Exact dedup keys on one digest exchange. A corpus read as one
+    partition moves that exchange below the gates with an explicit
+    partition count, so the gates, the exact-dup window and the export's
+    encoder run on every shuffle partition; an input already spread over
+    the cores keeps the window's own exchange. The results do not depend
+    on the plan or on how the input was partitioned. The reports are
+    local relations and the windows read back with a known schema, so
+    neither runs a Spark job."""
+
+    CURATE = {"min_quality": 0.5, "langs": ("en",)}
+
+    @pytest.fixture(scope="class")
+    def one_file(self, spark, tmp_path_factory):
+        """~200 docs in ONE parquet file: unique English docs, exact
+        duplicates that differ only in case and whitespace, short
+        low-quality docs, German docs, blank and NULL text."""
+        rows = []
+        for i in range(150):
+            rows.append((
+                i,
+                f"the report number {i} is about the fox and the dog that "
+                f"ran to the park in the town of {i % 7} " * (1 + i % 3),
+            ))
+        for j, i in enumerate(range(0, 60, 3)):
+            body = rows[i][1]
+            rows.append((1000 + j, body.upper() if j % 2 else f"  {body}\n"))
+        rows += [(2000 + i, f"zz qq {i}") for i in range(12)]
+        rows += [
+            (3000 + i, f"der die das und ist ein nicht mit auf ich {i} "
+                       "the dog and a cat of the town")
+            for i in range(12)
+        ]
+        rows += [(4000, ""), (4001, "   "), (4002, None)]
+        path = str(tmp_path_factory.mktemp("corpus") / "docs")
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.parquet(path)
+        docs = spark.read.parquet(path)
+        assert docs.rdd.getNumPartitions() == 1
+        return docs
+
+    def test_results_do_not_depend_on_input_partitioning(
+        self, spark, one_file, tmp_path
+    ):
+        from s3_access_logs_spark.operators.curate import curate_corpus
+        from s3_access_logs_spark.operators.export import (
+            export_training_set,
+        )
+
+        results = []
+        for n, docs in enumerate(
+            (one_file, one_file.repartition(4), one_file.repartition(7))
+        ):
+            wins, report = export_training_set(
+                docs, str(tmp_path / f"w{n}"), n_shards=3, window_ids=32,
+                curate=self.CURATE,
+            )
+            kept, waterfall = curate_corpus(docs, **self.CURATE)
+            results.append((
+                sorted(
+                    (r.shard, r.window_idx, list(r.ids))
+                    for r in wins.collect()
+                ),
+                sorted(tuple(r) for r in report.collect()),
+                sorted(tuple(r) for r in kept.collect()),
+                sorted(tuple(r) for r in waterfall.collect()),
+            ))
+        assert results[0] == results[1] == results[2]
+        windows, report, kept, waterfall = results[0]
+        assert windows and kept
+        dropped = dict(waterfall)
+        assert dropped["exact_dup"] == 20
+        assert {"empty", "quality", "language"} <= set(dropped)
+        assert len(kept) + sum(dropped.values()) == one_file.count()
+        assert dict(report)["empty"] == dropped["empty"]
+
+    def test_spread_only_an_input_narrower_than_the_cores(
+        self, spark, one_file
+    ):
+        from s3_access_logs_spark.operators.curate import _spread_width
+
+        cores = spark.sparkContext.defaultParallelism
+        assert cores > 1
+        assert _spread_width(one_file) == int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        )
+        # already shuffled: counting its partitions would run the shuffle
+        assert _spread_width(one_file.repartition(2)) is None
+        assert _spread_width(spark.range(0, 100, 1, cores)) is None
+
+    def test_one_digest_exchange_under_the_window(
+        self, spark, one_file, tmp_path
+    ):
+        """One ``hashpartitioning`` on ``_digest`` below the exact-dup
+        window, and none other on it: the window reuses it, and so does
+        the digest-history join when a store is given. A one-file
+        input gets the explicit-width one. The plan is read before
+        execution, so it prints once."""
+        import re
+
+        from s3_access_logs_spark.operators.curate import curate_corpus
+
+        def digest_exchanges(df):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            hits = [
+                m.start()
+                for m in re.finditer(r"hashpartitioning\(_digest#", plan)
+            ]
+            assert len(hits) == 1 and "Window" in plan
+            assert plan.index("Window") < hits[0]
+            return plan[hits[0]:].split("\n")[0]
+
+        store = str(tmp_path / "digests")
+        curate_corpus(
+            one_file.filter("doc_id < 50"), digest_store=store,
+            store_batch_id=0, **self.CURATE,
+        )
+        for opts in ({}, {"digest_store": store}):
+            kept, waterfall = curate_corpus(one_file, **opts, **self.CURATE)
+            assert "REPARTITION_BY_NUM" in digest_exchanges(kept)
+            kept, _ = curate_corpus(
+                one_file.repartition(4), **opts, **self.CURATE
+            )
+            assert "REPARTITION_BY_NUM" not in digest_exchanges(kept)
+        # the history gate still drops every digest batch 0 committed
+        assert dict(tuple(r) for r in waterfall.collect())["exact_dup"] > 20
+
+    def test_export_gate_stage_runs_every_shuffle_partition(
+        self, spark, one_file, tmp_path
+    ):
+        from s3_access_logs_spark.operators.export import (
+            export_training_set,
+        )
+
+        sc = spark.sparkContext
+        sc.setJobGroup("curate-exchange-tasks", "export")
+        try:
+            export_training_set(
+                one_file, str(tmp_path / "w"), n_shards=3, window_ids=32,
+                curate=self.CURATE,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        tasks = [
+            tracker.getStageInfo(sid).numTasks
+            for jid in tracker.getJobIdsForGroup("curate-exchange-tasks")
+            for sid in tracker.getJobInfo(jid).stageIds
+            if tracker.getStageInfo(sid) is not None
+        ]
+        assert max(tasks) == int(
+            spark.conf.get("spark.sql.shuffle.partitions")
+        )
+
+    def test_reports_and_read_back_run_no_job(
+        self, spark, one_file, tmp_path
+    ):
+        from s3_access_logs_spark.operators.curate import curate_corpus
+        from s3_access_logs_spark.operators.export import (
+            _read_windows,
+            export_training_set,
+        )
+
+        dst = str(tmp_path / "w")
+        wins, report = export_training_set(
+            one_file, dst, n_shards=3, window_ids=32, curate=self.CURATE
+        )
+        _, waterfall = curate_corpus(one_file, **self.CURATE)
+        _, empty = curate_corpus(
+            one_file.filter("text IS NOT NULL AND trim(text) <> ''")
+            .limit(1)
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("curate-exchange-jobs", "reports")
+        try:
+            assert report.collect() and waterfall.collect()
+            assert empty.collect() == []
+            again = _read_windows(spark, dst, wins)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(
+            "curate-exchange-jobs"
+        ) == []
+        assert empty.schema.simpleString() == (
+            "struct<stage:string,dropped:bigint>"
+        )
+        # the known schema is exactly what inference would find
+        assert again.schema == spark.read.parquet(dst).schema
+        assert wins.schema == again.schema

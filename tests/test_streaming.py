@@ -2968,3 +2968,41 @@ class TestStreamCurateParity:
         # the history gates fired: batch 1 keeps only the new documents
         kept = {r[2] for r in rows(s_docs, doc_cols) if r[0] == 1}
         assert kept == {12, 14, 17, 19, 20}
+
+
+class TestStoreFileLayout:
+    """A small batch through the gate stack keeps the layout AQE sizes
+    for it: one parquet file in the ``batch_id`` leaf of the stream's
+    doc store and of curate's digest store, not one per shuffle
+    partition."""
+
+    def test_small_batch_writes_one_file_per_leaf(self, spark, tmp_path):
+        from pathlib import Path
+
+        from s3_access_logs_spark.operators.curate import curate_corpus
+        from s3_access_logs_spark.streaming import ingest_documents_stream
+
+        def leaves(path):
+            return sorted(
+                p.parent.name for p in Path(path).rglob("part-*.parquet")
+            )
+
+        rows = TestStreamCurateParity.SEED + TestStreamCurateParity.BATCH
+        src = tmp_path / "in"
+        src.mkdir()
+        _drop_jsonl(src, "b0.jsonl", [
+            {"doc_id": i, "text": t} for i, t in rows
+        ])
+        docs = str(tmp_path / "docs")
+        ingest_documents_stream(
+            spark, str(src), docs, str(tmp_path / "ckpt"), min_quality=0.5,
+            scrub_pii=True,
+        ).awaitTermination(120)
+        assert leaves(docs) == ["batch_id=0"]
+        digests = str(tmp_path / "digests")
+        curate_corpus(
+            spark.createDataFrame(rows, "doc_id long, text string"),
+            min_quality=0.5, digest_store=digests, store_batch_id=0,
+        )
+        assert leaves(digests) == ["batch_id=0"]
+        assert spark.read.parquet(digests).count() == 8
